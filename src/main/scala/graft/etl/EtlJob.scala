@@ -127,12 +127,6 @@ object EtlJob {
     var lastError: Throwable = null
     var lastWatermark: Option[Timestamp] = None
 
-    def prof[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (sys.env.contains("GRAFT_ETL_PROF"))
-        println(f"[etlprof] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
     var attempt = 0
     while (attempt < maxRetries) {
       try {
@@ -143,14 +137,14 @@ object EtlJob {
           case Exact =>
             source.where(col(watermarkCol) > lit(start) && col(watermarkCol) < lit(jobTime))
         }
-        val stats = prof("batchStats")(IncrementalExtract.batchStats(extracted, watermarkCol))
+        val stats = IncrementalExtract.batchStats(extracted, watermarkCol)
         val endDateTime = IncrementalExtract.newWatermark(stats, jobTime)
         lastWatermark = Some(endDateTime)
 
         // Status ordering is load-then-commit (reference: billing_etl.py:173-198):
         // IN_PROGRESS carries the candidate watermark before the load starts.
-        prof("statusInProgress")(meta.appendStatus(meta.nextStatusSeq,
-          EtlStatus(message.org_id, projectId, EtlStatus.InProgress, Some(endDateTime))))
+        meta.appendStatus(meta.nextStatusSeq,
+          EtlStatus(message.org_id, projectId, EtlStatus.InProgress, Some(endDateTime)))
 
         val transformed = transform(extracted)
 
@@ -171,7 +165,7 @@ object EtlJob {
             .hint("rebalance", col("export_date"))
           mode match {
             case Parity =>
-              prof("parityWrite")(out.write.mode(SaveMode.Append).partitionBy("export_date").parquet(destDir))
+              out.write.mode(SaveMode.Append).partitionBy("export_date").parquet(destDir)
             case Exact =>
               // The window may start mid-partition (a run boundary is rarely
               // date-aligned), and dynamic overwrite replaces WHOLE
@@ -234,8 +228,8 @@ object EtlJob {
 
         onBeforeCommit()
 
-        prof("statusSuccess")(meta.appendStatus(meta.nextStatusSeq,
-          EtlStatus(message.org_id, projectId, EtlStatus.Success, Some(endDateTime))))
+        meta.appendStatus(meta.nextStatusSeq,
+          EtlStatus(message.org_id, projectId, EtlStatus.Success, Some(endDateTime)))
 
         return Right(RunReport(message.org_id, projectId, stats.rows, endDateTime,
           EtlStatus.Success, attempt + 1))

@@ -246,9 +246,15 @@ final class FsMetaStore(val root: String)(implicit spark: SparkSession)
 
   /** Driver-side mirror of the log, keyed by (unique) file name. Files
     * appended by THIS instance are cached at write time; files from other
-    * writers are picked up by listing the log dir (one FS LIST) and read in
-    * one batched Spark job on first sight — so the steady state launches no
-    * jobs at all, while a concurrent appender's rows are never missed.
+    * writers are picked up by listing the log dir and read in one batched
+    * Spark job on first sight — so the steady state launches no jobs at
+    * all, while a concurrent appender's rows are never missed. What every
+    * read still pays is that listing: one LIST of the flat log dir, reading
+    * only names and lengths (Fs's listing contract: no per-file permission
+    * probe, which forks a process per file on a local FS without Hadoop's
+    * native library). A run reads the log three times (the watermark resume
+    * and `nextStatusSeq` before each of its two appends), so its control-
+    * plane cost still grows with the log, at the rate of directory entries.
     */
   private val statusFileRows =
     scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Int, String, String, Option[Timestamp])]]

@@ -1,8 +1,9 @@
 package graft.util
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path, RemoteIterator}
 import org.apache.spark.sql.SparkSession
 
 /** Storage-agnostic filesystem probes via Hadoop's FileSystem API.
@@ -12,6 +13,18 @@ import org.apache.spark.sql.SparkSession
   * local file), which in Exact mode would drop the boundary-partition carry
   * rows on dynamic overwrite — data loss. Everything path-existence-shaped
   * must go through here.
+  *
+  * Listing contract: a listing reads only each entry's path, length and
+  * `isDirectory`. It never builds a `LocatedFileStatus` (what
+  * `FileSystem.listFiles` returns) and never asks for permissions, owner or
+  * group. Without Hadoop's native library, the local filesystem answers each
+  * of those by forking `ls -ld`, and the `LocatedFileStatus` constructor asks
+  * for all three — one fork per listed file, which made listing the
+  * control-plane status log the largest per-run cost of an ETL job. Spark's
+  * own `HadoopFSUtils` avoids that constructor for the same reason. The walk
+  * pays one LIST per directory instead of one flat recursive LIST on object
+  * stores; the hot caller (the status log) lists a single flat directory, so
+  * that costs it nothing.
   */
 object Fs {
 
@@ -25,28 +38,36 @@ object Fs {
     f.exists(p)
   }
 
-  /** Recursive listing of data-file (path, length) pairs under `path`;
-    * empty if the path does not exist.
+  /** Recursive listing of data-file (path, length) pairs under `path`
+    * (a directory or a single file); empty if the path does not exist.
     */
-  def listParquetFiles(spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val (f, p) = fs(spark, path)
-    if (!f.exists(p)) return Seq.empty
-    val it = f.listFiles(p, true)
-    val out = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet"))
-        out += ((st.getPath.toString, st.getLen))
-    }
-    out.result()
-  }
+  def listParquetFiles(spark: SparkSession, path: String): Seq[(String, Long)] =
+    parquetFiles(spark, path).map(st => (st.getPath.toString, st.getLen)).toSeq
 
   /** True if at least one parquet data file exists under `path` (a write of
     * an empty DataFrame leaves a _SUCCESS marker but no data files, and a
-    * fileless directory fails schema inference on read-back).
+    * fileless directory fails schema inference on read-back). Stops at the
+    * first one found.
     */
   def hasParquetFiles(spark: SparkSession, path: String): Boolean =
-    listParquetFiles(spark, path).nonEmpty
+    parquetFiles(spark, path).hasNext
+
+  /** Lazy depth-first walk over the `.parquet` files under `path`, in
+    * `listFiles(path, true)` order (see the listing contract above). A
+    * missing root is an empty listing.
+    */
+  private def parquetFiles(spark: SparkSession, path: String): Iterator[FileStatus] = {
+    val (f, root) = fs(spark, path)
+    def files(it: RemoteIterator[FileStatus]): Iterator[FileStatus] =
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).flatMap { st =>
+        if (st.isDirectory) files(f.listStatusIterator(st.getPath)) else Iterator.single(st)
+      }
+    // some stores defer the not-found error to the first hasNext
+    val top =
+      try { val it = f.listStatusIterator(root); it.hasNext; it }
+      catch { case _: FileNotFoundException => return Iterator.empty }
+    files(top).filter(_.getPath.getName.endsWith(".parquet"))
+  }
 
   /** Read a small control file (e.g. a version pointer) as UTF-8 text;
     * None when it does not exist. Control files are a few bytes — one

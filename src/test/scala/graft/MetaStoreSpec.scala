@@ -114,6 +114,37 @@ class MetaStoreSpec extends AnyFunSuite {
     assert(a.statusLog.count() == 2)
   }
 
+  test("FS status log: a crashed appender's staged file and its checksum are never read") {
+    // appendStatus writes a hidden `.part-*.parquet.tmp` (and the local
+    // FS's `..part-*.parquet.tmp.crc`), then renames it into the log; an
+    // appender that dies between the two leaves both behind. The leftover
+    // here is a real status file whose row (seq 99, a later SUCCESS) would
+    // move both the next seq and the watermark if any reader picked it up.
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("meta_crash_")
+    val warm = MetaStore(s"$root/meta")
+    val t1 = utcTs("2024-01-10 00:00:00")
+    warm.appendStatus(1, EtlStatus(1, "p1", EtlStatus.InProgress, Some(t1)))
+    warm.appendStatus(2, EtlStatus(1, "p1", EtlStatus.Success, Some(t1)))
+
+    val other = tmpDir("meta_crash_src_")
+    MetaStore(other).appendStatus(99,
+      EtlStatus(1, "p1", EtlStatus.Success, Some(utcTs("2024-01-19 00:00:00"))))
+    val srcDir = Paths.get(other, "status", "data")
+    val committed = srcDir.toFile.list().filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(committed.length == 1)
+    val name = committed.head
+    val logDir = Paths.get(root, "meta", "status", "data")
+    Files.copy(srcDir.resolve(name), logDir.resolve(s".$name.tmp"))
+    Files.copy(srcDir.resolve(s".$name.crc"), logDir.resolve(s"..$name.tmp.crc"))
+
+    Seq("warm" -> warm, "fresh" -> MetaStore(s"$root/meta")).foreach { case (tag, m) =>
+      assert(m.lastSuccessWatermark(1, "p1").contains(t1), tag)
+      assert(m.nextStatusSeq == 3L, tag)
+      assert(m.statusLog.count() == 2, tag)
+    }
+  }
+
   test("two racing same-org sagas: last-writer-wins, never torn, never duplicated (both backends)") {
     // SURVEY §7.4 #3 — the reference just races (billing_etl_db.py:12-43 has
     // no locking); the engine's contract is last-writer-wins DETERMINISM:
