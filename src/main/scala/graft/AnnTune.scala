@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: measure ANN recall (per-query min/mean) and candidate
@@ -18,10 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object AnnTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.forHarness()
+    // the report is the recall lines; keep Spark's WARN chatter out of it
     spark.sparkContext.setLogLevel("ERROR")
 
     args.foreach { dir =>

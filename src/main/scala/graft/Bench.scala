@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints exactly one JSON line. Failed queries are reported in an `errors`
@@ -36,45 +35,28 @@ import org.apache.spark.sql.SparkSession
   * loadavg stamp; a REAL regression moves min.
   */
 object Bench {
+
+  /** JSON string-body escape for the mains' output (Bench's line and
+    * archive, Verify's oracle_sql.json): quote, backslash, and EVERY
+    * control char (<0x20) as a hex unicode escape — a tab or CR in a
+    * query name or oracle SQL must never break the consumer's json.load.
+    */
+  private[graft] def esc(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.harnessCpus
     val timedRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on the RAM fs when one exists (same policy
-      // as TempDirs): local-mode executor scratch is ephemeral by contract
-      .config("spark.local.dir", graft.util.TempDirs.create("graft_local_"))
-      // catalog-table data (bucketed scratch tables, saga namespaces) is
-      // ephemeral in these mains — same RAM-fs scratch policy as local.dir;
-      // a real deployment points the warehouse at durable storage
-      .config("spark.sql.warehouse.dir", graft.util.TempDirs.create("graft_wh_"))
-      // guide §3.1/§9: allow shuffled-hash where its size conditions hold,
-      // and let AQE rewrite SMJ→SHJ when every post-shuffle partition fits
-      // 64 MB (size-bounded, so the build side can never OOM a partition).
-      // At bench SF this flips exactly one plan (dedup_simhash's self-join,
-      // −2 Sorts; bench-neutral) — the win lives at cluster SFs where dims
-      // outgrow broadcast but fit a partition. See OPTIMIZATION_r17.md §1.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // expected dead-block unpersist WARNs would bury real ones (USAGE.md)
-    graft.util.Logs.suppressExpectedUnpersistWarnings()
+    val spark = GraftSession.forHarness(cpus)
 
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadBefore = osBean.getSystemLoadAverage // -1.0 where unsupported
-
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
 
     // untimed JVM warmup: JIT/codegen/session setup must not bill to the
     // alphabetically-first query

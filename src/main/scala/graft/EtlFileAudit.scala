@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement main (optimization guide §6): file-count/size audit of
   * every scratch directory an ETL write/maintenance query leaves behind —
   * the round-18 "no write path sprays tiny files because partitions=cpus"
@@ -19,24 +17,14 @@ import org.apache.spark.sql.SparkSession
 object EtlFileAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4") // same default as Bench
     val targets = if (args.nonEmpty) args.toSeq else Seq(
       "etl_tombstone_delete", "etl_compact_dest", "etl_manifest_compact",
       "etl_backfill_window", "etl_partition_evolution", "etl_run_dest_exact",
       "etl_run_dest", "j8_partition_prune_join", "j12_bucketed_join",
       "etl_vacuum_retention", "etl_time_travel", "etl_wap")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.TempDirs.create("graft_local_"))
-      .config("spark.sql.warehouse.dir", graft.util.TempDirs.create("graft_wh_"))
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .getOrCreate()
+    val spark = GraftSession.forHarness()
+    // the report is the [fileaudit] lines; keep Spark's WARN chatter out
     spark.sparkContext.setLogLevel("ERROR")
-    graft.util.Logs.suppressExpectedUnpersistWarnings()
 
     val root = Paths.get(graft.util.TempDirs.rootDescription)
     def scratchDirs(): Set[Path] =

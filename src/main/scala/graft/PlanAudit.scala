@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev audit main: prints every registered query whose physical plan
   * contains a CartesianProduct or BroadcastNestedLoopJoin (plus plan
@@ -23,10 +22,8 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.forHarness()
+    // the report is the AUDIT lines; keep Spark's WARN chatter out of it
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val shuffles = scala.collection.mutable.LinkedHashMap[String, Int]()

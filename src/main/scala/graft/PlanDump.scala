@@ -44,33 +44,9 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.TempDirs.create("graft_local_"))
-      // catalog-table data (bucketed scratch tables, saga namespaces) is
-      // ephemeral in these mains — same RAM-fs scratch policy as local.dir;
-      // a real deployment points the warehouse at durable storage
-      .config("spark.sql.warehouse.dir", graft.util.TempDirs.create("graft_wh_"))
-      // guide §3.1/§9: allow shuffled-hash where its size conditions hold,
-      // and let AQE rewrite SMJ→SHJ when every post-shuffle partition fits
-      // 64 MB (size-bounded, so the build side can never OOM a partition).
-      // At bench SF this flips exactly one plan (dedup_simhash's self-join,
-      // −2 Sorts; bench-neutral) — the win lives at cluster SFs where dims
-      // outgrow broadcast but fit a partition. See OPTIMIZATION_r17.md §1.
-      // SPARK_GRAFT_PLANDUMP_LEGACY_SMJ=1 re-captures plans under the
-      // pre-r17 join defaults, so before/after evidence shares one capture
-      // methodology (executed AQE-final plans)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.contains("SPARK_GRAFT_PLANDUMP_LEGACY_SMJ").toString)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        if (sys.env.contains("SPARK_GRAFT_PLANDUMP_LEGACY_SMJ")) "0" else "64m")
-      .getOrCreate()
+    val spark = GraftSession.forHarness()
+    // the report is the [plandump] lines; keep Spark's WARN chatter out
     spark.sparkContext.setLogLevel("ERROR")
-    graft.util.Logs.suppressExpectedUnpersistWarnings()
     val selected =
       if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted
       else names.toSeq

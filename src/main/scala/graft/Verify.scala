@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,31 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: restrict the dump to named queries (dev loop)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on the RAM fs when one exists (same policy
-      // as TempDirs): local-mode executor scratch is ephemeral by contract
-      .config("spark.local.dir", graft.util.TempDirs.create("graft_local_"))
-      // catalog-table data (bucketed scratch tables, saga namespaces) is
-      // ephemeral in these mains — same RAM-fs scratch policy as local.dir;
-      // a real deployment points the warehouse at durable storage
-      .config("spark.sql.warehouse.dir", graft.util.TempDirs.create("graft_wh_"))
-      // guide §3.1/§9: allow shuffled-hash where its size conditions hold,
-      // and let AQE rewrite SMJ→SHJ when every post-shuffle partition fits
-      // 64 MB (size-bounded, so the build side can never OOM a partition).
-      // At bench SF this flips exactly one plan (dedup_simhash's self-join,
-      // −2 Sorts; bench-neutral) — the win lives at cluster SFs where dims
-      // outgrow broadcast but fit a partition. See OPTIMIZATION_r17.md §1.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // expected dead-block unpersist WARNs would bury real ones (USAGE.md)
-    graft.util.Logs.suppressExpectedUnpersistWarnings()
+    val spark = GraftSession.forHarness()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -55,18 +30,7 @@ object Verify {
       }
       finally spark.catalog.clearCache() // queries cache intermediates; don't accumulate
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Bench.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

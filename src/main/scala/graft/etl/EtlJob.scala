@@ -176,28 +176,17 @@ object EtlJob {
               // an EAGER localCheckpoint (block storage, MEMORY_AND_DISK)
               // instead of the previous temp-parquet stage write +
               // read-back — the same isolation minus one full disk round
-              // trip of the boundary partition (guide §5; round 18,
-              // TailAB). The carry is bounded by ONE date partition's
-              // earlier-run rows; blocks spill to executor disk if that
-              // outgrows memory, the same local-disk footing the temp
-              // stage used. Existence checks go through Hadoop FileSystem
-              // so HDFS/S3 destinations behave identically to local paths
-              // (java.nio would answer false and silently drop the carry
-              // rows). Measurement seam (TailAB):
-              // -Dgraft.exactCarryStage=parquet rebuilds the pre-r18 temp
-              // stage so the A/B can compare both shapes in one JVM.
+              // trip of the boundary partition (guide §5; round 18, 6/6
+              // paired cycles at 32 cores, OPTIMIZATION_r18.md §11). The
+              // carry is bounded by ONE date partition's earlier-run rows;
+              // blocks spill to executor disk if that outgrows memory, the
+              // same local-disk footing the temp stage used. Existence
+              // checks go through Hadoop FileSystem so HDFS/S3
+              // destinations behave identically to local paths (java.nio
+              // would answer false and silently drop the carry rows).
               val carried =
                 if (!graft.util.Fs.exists(spark, destDir)) None
-                else if (sys.props.get("graft.exactCarryStage").contains("parquet")) {
-                  val stage = graft.util.TempDirs.create("graft_exact_boundary_")
-                  spark.read.parquet(destDir)
-                    .where(col("export_date") >= to_date(lit(start)) &&
-                      col(watermarkCol) <= lit(start))
-                    .write.mode(SaveMode.Overwrite).parquet(stage)
-                  if (graft.util.Fs.hasParquetFiles(spark, stage))
-                    Some(spark.read.parquet(stage))
-                  else None
-                } else {
+                else {
                   val c = spark.read.parquet(destDir)
                     .where(col("export_date") >= to_date(lit(start)) &&
                       col(watermarkCol) <= lit(start))

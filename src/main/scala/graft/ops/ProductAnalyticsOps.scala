@@ -96,9 +96,10 @@ object ProductAnalyticsOps {
     * aggregate map-side; top-20 is a distributed TakeOrdered. At 100 TB
     * the only heavy key would be a mega-order — which the
     * `stats_key_skew` report flags for capping upstream. Measured
-    * (PairAB, interleaved alternating-order in-JVM A/B, 14 cycles across
-    * two runs): V2 min 0.936 s vs self-join 1.320 s at sf0.1/local[32],
-    * V2 faster in all 14 cycles; results equality-gated and oracled.
+    * (interleaved alternating-order in-JVM A/B, 14 cycles across two
+    * runs, OPTIMIZATION_r18.md §1): V2 min 0.936 s vs self-join 1.320 s
+    * at sf0.1/local[32], V2 faster in all 14 cycles; results
+    * equality-gated and oracled.
     */
   private def basketCopurchase(s: SparkSession, dir: String): DataFrame =
     explodePairs(orderPartSets(s, dir))
@@ -120,15 +121,15 @@ object ProductAnalyticsOps {
     * the shared per-order-set explosion ([[orderPartSets]] +
     * [[explodePairs]] — one fact exchange where the previous self-join
     * shape paid a distinct exchange plus a re-key of both join sides,
-    * guide §2.4; measured −23% at sf0.1, PairAB, V2 faster in 10 of 14
-    * alternating cycles, equality-gated) and joins per-part order counts
-    * TWICE and a 1-row total; |pairs| rows out. The per-part joins carry
-    * NO broadcast hint: the rollup is |parts|-sized, which a forced
-    * broadcast turns into a driver OOM at 100× scale — and the pairs
-    * side is already keyed on part_a/part_b, so a shuffle join
-    * co-partitions for free. AQE is still free to choose a broadcast
-    * when runtime stats say the rollup is small (it does at bench SF);
-    * only the 1-row total is pinned broadcast.
+    * guide §2.4; measured −23% at sf0.1, V2 faster in 10 of 14
+    * alternating cycles, equality-gated, OPTIMIZATION_r18.md §1) and
+    * joins per-part order counts TWICE and a 1-row total; |pairs| rows
+    * out. The per-part joins carry NO broadcast hint: the rollup is
+    * |parts|-sized, which a forced broadcast turns into a driver OOM at
+    * 100× scale — and the pairs side is already keyed on part_a/part_b,
+    * so a shuffle join co-partitions for free. AQE is still free to
+    * choose a broadcast when runtime stats say the rollup is small (it
+    * does at bench SF); only the 1-row total is pinned broadcast.
     */
   private def basketLift(s: SparkSession, dir: String): DataFrame =
     basketLiftStaged(s, dir).hygienic()

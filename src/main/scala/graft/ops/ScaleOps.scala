@@ -68,12 +68,12 @@ object ScaleOps {
     * bucketed write produces. k is sized by DATA, not cores (§6's
     * file-size rule): ceil(estimated bytes / (nBuckets · 256 MB)), so a
     * small table writes one ~whole-bucket file per bucket (k=1 measured
-    * the best local shape: −47% vs unaligned in MiscAB 5/6 cycles, and
-    * −23% vs k=cpus/n in BucketKAB 7/8 cycles — per-file overhead
-    * dominates at bench SF) while a 100 TB table gets bytes/256 MB write
-    * tasks: full cluster parallelism AND §6-sized files, where a
-    * core-count k would missize files and a fixed k=1 would cap the
-    * write at nBuckets sorters.
+    * the best local shape: −47% vs unaligned in 5/6 paired cycles, and
+    * −23% vs k=cpus/n in 7/8, OPTIMIZATION_r18.md §8/§10 — per-file
+    * overhead dominates at bench SF) while a 100 TB table gets
+    * bytes/256 MB write tasks: full cluster parallelism AND §6-sized
+    * files, where a core-count k would missize files and a fixed k=1
+    * would cap the write at nBuckets sorters.
     */
   def writeBucketed(df: DataFrame, table: String, key: String, nBuckets: Int,
                     targetFileBytes: Long = 256L * 1024 * 1024): Unit = {
@@ -248,7 +248,8 @@ object ScaleOps {
     // the small-file fixture in ONE write job (round 18): the union of the
     // two independently-repartitioned halves keeps the 8-files-per-day
     // damaged layout of the two sequential incremental appends, one
-    // scan/commit round cheaper (−14% mins, EtlTailAB 4/6 cycles)
+    // scan/commit round cheaper (−14% mins, 5/6 paired cycles,
+    // OPTIMIZATION_r18.md §9)
     ev.where(col("event_id") % 2 === 0).repartition(4)
       .unionByName(ev.where(col("event_id") % 2 =!= 0).repartition(4))
       .write.mode(SaveMode.Append).partitionBy("export_date").parquet(dest)
@@ -284,7 +285,8 @@ object ScaleOps {
     // the damaged store in ONE write job (round 18): full history plus the
     // crashed partial re-run's duplicate copies of the two dates — the
     // same damaged on-disk multiset the two sequential appends laid down,
-    // one scan/commit round cheaper (measured −18%, MiscAB 5/6 cycles).
+    // one scan/commit round cheaper (measured −18%, 5/6 paired cycles,
+    // OPTIMIZATION_r18.md §8).
     // The repair below is unchanged: it must fix the duplicates whichever
     // files they sit in.
     ev.unionByName(ev.where(col("export_date").isin(BackfillDates: _*)))
@@ -905,7 +907,7 @@ object ScaleOps {
     // both extraction claims from ONE conditional-aggregate scan (round 18,
     // guide §2.3) — the good batch's honest count and the torn batch's
     // full-extract claim; two count() passes collapse into one. Measured
-    // −13% (MiscAB, 5/6 paired cycles).
+    // −13% (5/6 paired cycles, OPTIMIZATION_r18.md §8).
     val cnt = ev.agg(
       sum(when(col("export_date") < "2024-01-11", 1L).otherwise(0L)).as("good"),
       sum(when(col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21",
@@ -1007,9 +1009,10 @@ object ScaleOps {
     val b1 = ev.where(col("export_date") < "2024-01-11")
     val b2 = ev.where(
       col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21")
-    // both expectations from one scan (round 18, guide §2.3; −19% mins,
-    // EtlTailAB 4/6 cycles). The publish SEQUENCE stays sequential: it is
-    // dependency-ordered (b1 → branch fork → b2 → manifest relocation).
+    // both expectations from one scan (round 18, guide §2.3; −13% mins,
+    // 4/6 paired cycles, OPTIMIZATION_r18.md §9). The publish SEQUENCE
+    // stays sequential: it is dependency-ordered (b1 → branch fork → b2 →
+    // manifest relocation).
     val cnt = ev.agg(
       sum(when(col("export_date") < "2024-01-11", 1L).otherwise(0L)).as("n1"),
       sum(when(col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21",
@@ -1109,7 +1112,8 @@ object ScaleOps {
       col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21")
     // both expectations from ONE conditional-aggregate scan and the two
     // independent publishes overlapped (round 18, guide §2.3/§2.6 — same
-    // shape as etl_manifest_compact; measured −39%, EtlTailAB 6/6 cycles)
+    // shape as etl_manifest_compact; measured −39%, 6/6 paired cycles,
+    // OPTIMIZATION_r18.md §9)
     val cnt = ev.agg(
       sum(when(col("export_date") < "2024-01-11", 1L).otherwise(0L)).as("n1"),
       sum(when(col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21",
@@ -1202,7 +1206,7 @@ object ScaleOps {
     // id and read-back are completion-order-invariant by construction) —
     // overlap them from a small pool so a publish's write tail backfills
     // the next publish's stage (guide §2.6). Measured −56% with the
-    // one-pass expectations (MiscAB, 6/6 paired cycles).
+    // one-pass expectations (6/6 paired cycles, OPTIMIZATION_r18.md §8).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -1246,12 +1250,13 @@ object ScaleOps {
       round(col("value") * 100).cast("long").as("value_cents"),
       date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
     val daily = graft.util.TempDirs.create("graft_evo_daily_")
-    // single-task fixture write, DELIBERATE (round 18, TailAB): a
-    // repartition(export_date) that parallelizes the 30-dir write into one
-    // task per day measured as a wash-to-loss at bench SF (v1 faster in
+    // single-task fixture write, DELIBERATE (round 18, OPTIMIZATION_r18.md
+    // §11): a repartition(export_date) that parallelizes the 30-dir write
+    // into one task per day measured as a wash-to-loss at bench SF (v1 faster in
     // 3/6 paired cycles, better min 1.218 vs 1.298 — the shuffle + 30 task
     // rounds cost more than one task writing 30 kilobyte files, the same
-    // trade BucketKAB measured for the bucket write's k factor). On a
+    // trade OPTIMIZATION_r18.md §10 measured for the bucket write's k
+    // factor). On a
     // multi-split source the migration's own repartition rule would apply
     // here too; the fixture scan is one split by construction.
     ev.write.mode(SaveMode.Overwrite).partitionBy("export_date").parquet(daily)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -23,15 +22,8 @@ object DrainProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.local.dir", graft.util.TempDirs.create("graft_local_"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.harnessCpus
+    val spark = graft.GraftSession.forHarness(cpus)
 
     // untimed warmup: JIT + first-touch I/O must not bill to the profile
     spark.range(1000000).selectExpr("sum(id)").collect()

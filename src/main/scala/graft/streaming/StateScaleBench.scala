@@ -109,7 +109,6 @@ object StateScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
     val fanout = math.max(1, sys.env.getOrElse("SPARK_GRAFT_STATE_FANOUT", "16").toInt)
     // default ladder: floor anchor 64, then 16384 -> 131072 -> 2097152 —
@@ -123,18 +122,11 @@ object StateScaleBench {
       s"need at least two key counts to grade a slope, got $keyCounts")
     require(keyCounts == keyCounts.sorted && keyCounts.distinct == keyCounts,
       s"key counts must be strictly increasing, got $keyCounts")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FIXED state grain across the ladder — the registry's stateful
-      // drains run at this grain (StreamingIngest.withStateGrain); K must
-      // be the only variable
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.local.dir", graft.util.TempDirs.create("graft_local_"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.suppressExpectedUnpersistWarnings()
+    val spark = graft.GraftSession.forHarness()
+    // FIXED state grain across the ladder — the registry's stateful
+    // drains run at this grain (StreamingIngest.withStateGrain); K must
+    // be the only variable
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     val RocksProvider =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

@@ -194,13 +194,8 @@ object StreamingIngest {
     * keeps headroom without paying for idle stores).
     */
   private def withStateGrain[A](spark: SparkSession, partitions: Int = 4)(f: => A): A = {
-    // Measurement seam (GrainAB): a system property overrides the grain for
-    // the NEXT drain built under it, so an interleaved in-JVM A/B can vary
-    // the grain per invocation without recompiling. Unset in production;
-    // never read from query code directly.
-    val n = sys.props.get("graft.stateGrainOverride").map(_.toInt).getOrElse(partitions)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -326,9 +321,10 @@ object StreamingIngest {
         // the claim (the extraction's own belief) is OBSERVED on the
         // staging pass itself instead of a second source scan — a
         // foreachBatch `batch.count()` recomputes the batch (round 18,
-        // guide §2.3; −22% mins, EtlTailAB 5/6 cycles). The audit
-        // (publishStaged's staged-file count) stays independent: it reads
-        // what landed on disk, never this observation.
+        // guide §2.3; −12% mins, 5/6 paired cycles, OPTIMIZATION_r18.md
+        // §9). The audit (publishStaged's staged-file count) stays
+        // independent: it reads what landed on disk, never this
+        // observation.
         val bid = f"b$id%04d"
         val obs = org.apache.spark.sql.Observation(s"swp_obs_$bid")
         val stageDir = s"$root/staging/$bid"

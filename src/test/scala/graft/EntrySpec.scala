@@ -13,4 +13,14 @@ class EntrySpec extends AnyFunSuite {
     assert(df.count() > 0)
     assert(df.columns.contains("event_id") && df.columns.contains("ts"))
   }
+
+  test("the mains' JSON escaper round-trips control chars and every oracle SQL") {
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    def roundTrip(s: String): String = m.readTree("\"" + Bench.esc(s) + "\"").asText()
+    val awkward = (0 until 0x80).map(_.toChar).mkString + "é→"
+    assert(roundTrip(awkward) == awkward)
+    SparkEntry.oracleSql.foreach { case (k, v) =>
+      assert(roundTrip(k) == k && roundTrip(v) == v, k)
+    }
+  }
 }

@@ -293,16 +293,26 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
-  test("memory sinks are confined to the bounded-drain helper (SCALE.md sink rule)") {
-    // the memory sink is driver-resident; the only sanctioned use is
-    // runToMemory's Complete/Update-mode aggregate drains. A new
-    // format("memory") anywhere else in src/main is a scale regression.
+  /** Every `src/main/scala` source file containing `needle`, by relative path. */
+  private def mainSourcesContaining(needle: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     // resolve src/main robustly: sbt forks tests with cwd = project root, but
     // don't silently pass if that ever changes
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"expected to run from the project root; cwd=${java.nio.file.Paths.get("").toAbsolutePath}")
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p)).contains(needle))
+      .map(_.toString).toSet
+    finally walk.close()
+  }
+
+  test("memory sinks are confined to the bounded-drain helper (SCALE.md sink rule)") {
+    // the memory sink is driver-resident; the only sanctioned use is
+    // runToMemory's Complete/Update-mode aggregate drains. A new
+    // format("memory") anywhere else in src/main is a scale regression.
     // DrainProfile is a diagnostic main, not a registry query: its memory
     // drains are Complete-mode bounded aggregates (same admissibility as
     // runToMemory), and it needs the raw StreamingQuery handle for
@@ -310,13 +320,7 @@ class PlanSpec extends AnyFunSuite {
     val allowed = Set(
       "src/main/scala/graft/streaming/StreamingIngest.scala",
       "src/main/scala/graft/streaming/DrainProfile.scala")
-    val walk = java.nio.file.Files.walk(root)
-    val offenders =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p)).contains("format(\"memory\")"))
-        .map(_.toString).toSet
-      finally walk.close()
+    val offenders = mainSourcesContaining("format(\"memory\")")
     assert(offenders.subsetOf(allowed),
       s"memory sink outside the sanctioned drain helper: ${offenders -- allowed}")
     // and the helper itself rejects O(input) drains at runtime
@@ -326,6 +330,20 @@ class PlanSpec extends AnyFunSuite {
       graft.streaming.StreamingIngest.runToMemory(stream, "guard_probe", OutputMode.Append())
     }
     assert(ex.getMessage.contains("runToParquet"))
+  }
+
+  test("every main builds its session in GraftSession.forHarness") {
+    // one builder means Bench, Verify and the dev mains run identical confs
+    // by construction; a main that differs sets it on the returned session
+    assert(mainSourcesContaining("SparkSession.builder") ==
+      Set("src/main/scala/graft/GraftSession.scala"))
+  }
+
+  test("no system-property measurement seam in src/main") {
+    // A/B seams read from production paths were removed with their mains;
+    // a new one must not come back unseen
+    val seams = mainSourcesContaining("sys.props.get(\"graft.")
+    assert(seams.isEmpty, s"system-property seams in src/main: $seams")
   }
 
   test("analytic joins: fixed dims broadcast, no cartesian, distinct via Expand") {
