@@ -1,15 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** The library's SQL-surface entry point: make everything the engine
   * offers callable from plain `spark.sql(...)` on a caller-provided
   * session — temp views for every corpus table (loaded through
-  * [[Tables.load]], so the nanos-timestamp rescale and its pushdown rule
-  * come along), plus both native function families
-  * (`graft_token_hashes`/`graft_shingle_hashes`/`graft_ngram8_hashes`/
-  * `graft_minhash_sig64`/`graft_simhash60[_shingles]`/
-  * `graft_repetition_stats`, `graft_cosine`/`graft_lsh_keys`).
+  * [[Tables.load]], so the nanos-timestamp rescale comes along), plus
+  * every rule, strategy and native function [[install]] puts on the
+  * session (`graft_token_hashes`/`graft_shingle_hashes`/
+  * `graft_ngram8_hashes`/`graft_minhash_sig64`/`graft_simhash60[_shingles]`/
+  * `graft_repetition_stats`, `graft_cosine`/`graft_lsh_keys`, …).
   *
   * A user of the reference drives it with SQL text shipped to BigQuery /
   * MySQL; after `GraftSession.init` the same habit works here — the
@@ -22,14 +27,75 @@ object GraftSession {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Idempotent: (re)registers views + functions; returns the session. */
+  /** Optimizer rules, in the order they run. */
+  private[graft] val Rules: Seq[Rule[LogicalPlan]] = Seq(
+    plans.NanosTimestampPushdown, plans.BandedIntervalJoin, plans.MaterializedViewRewrite)
+
+  private[graft] val Strategies: Seq[SparkStrategy] = Seq(plans.AsofJoinStrategy)
+
+  /** Native SQL functions, (name, builder). */
+  private[graft] val Functions: Seq[(String, Seq[Expression] => Expression)] =
+    functions.NativeText.builders ++ functions.NativeVector.builders ++
+      functions.NativeAgg.builders ++ functions.CountMin.builders ++
+      functions.NativeBloom.builders
+
+  private[graft] val TableFunctions: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => LogicalPlan)] = Seq(functions.DaySpanTvf.description)
+
+  // The ingest edge must absorb every timestamp encoding a real landing
+  // zone produces (the reference tolerates timezone-naive timestamps end
+  // to end — core/services/billing_etl.py:35-40 serializes bare
+  // isoformat() and the warehouse coerces on load):
+  //   - TIMESTAMP(NANOS): Spark 4 refuses it by default
+  //     (PARQUET_TYPE_ILLEGAL). Read nanos as long, rescale to micros
+  //     TimestampType (test data is micro-precision → lossless).
+  //     NanosTimestampPushdown rewrites watermark predicates on the
+  //     derived column back onto the raw long so row-group skipping works.
+  //   - TIMESTAMP(MICROS, isAdjustedToUTC=false) — what pandas/DuckDB
+  //     write by default — which Spark 4 infers as TIMESTAMP_NTZ.
+  //     Disable NTZ inference so it lands as TimestampType directly
+  //     (session TZ is pinned UTC, so the reading is exact and matches
+  //     the DuckDB oracle's naive view of the same bytes).
+  private val ReadConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+
+  /** Put the engine's rules, strategy, SQL functions and read confs on a
+    * caller-provided session; returns it. Idempotent: each call adds only
+    * what is missing, so on an installed session it costs presence checks
+    * alone. Callers invoke it where a session enters the engine (the
+    * registry entries, [[init]], [[Tables.load]], the streaming sources),
+    * never per component. [[GraftExtensions]] injects the same lists into
+    * sessions built with `spark.sql.extensions`.
+    */
+  def install(spark: SparkSession): SparkSession = {
+    val x = spark.experimental
+    x.synchronized {
+      val missingRules = Rules.filterNot(r => x.extraOptimizations.exists(_ eq r))
+      if (missingRules.nonEmpty) x.extraOptimizations = x.extraOptimizations ++ missingRules
+      val missingStrategies = Strategies.filterNot(st => x.extraStrategies.exists(_ eq st))
+      if (missingStrategies.nonEmpty) x.extraStrategies = x.extraStrategies ++ missingStrategies
+    }
+    val reg = spark.sessionState.functionRegistry
+    Functions.foreach { case (name, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+    val tvfs = spark.sessionState.tableFunctionRegistry
+    TableFunctions.foreach { case (id, _, builder) =>
+      if (!tvfs.functionExists(id)) tvfs.createOrReplaceTempFunction(id.funcName, builder, "built-in")
+    }
+    ReadConfs.foreach { case (k, v) =>
+      if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
+    }
+    spark
+  }
+
+  /** Idempotent: installs the engine and (re)registers the corpus views;
+    * returns the session.
+    */
   def init(spark: SparkSession, dir: String): SparkSession = {
-    functions.NativeText.register(spark)
-    functions.NativeVector.register(spark)
-    functions.NativeAgg.register(spark)
-    functions.CountMin.register(spark)
-    functions.DaySpanTvf.register(spark)
-    plans.AsofJoin.register(spark)
+    install(spark)
     TableNames.foreach(t => Tables.load(spark, dir, t).createOrReplaceTempView(t))
     spark
   }

@@ -40,9 +40,13 @@ object SparkEntry {
     etl.EtlJob.readDestination(spark, s"$tmp/dest")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.RelationalOps.queries ++ ops.EtlOps.queries ++ ops.MessageOps.queries ++
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs the engine on the session it is handed
+    * ([[GraftSession.install]]), so every query plans under the same rule
+    * set whatever ran before it.
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (ops.RelationalOps.queries ++ ops.EtlOps.queries ++ ops.MessageOps.queries ++
       ops.DedupOps.queries ++ ops.IncrementalDedupOps.queries ++ ops.ClusterOps.queries ++
       ops.SimilarityOps.queries ++ ops.TextAnalysisOps.queries ++
       ops.MultimodalOps.queries ++ ops.StreamingOps.queries ++
@@ -50,12 +54,14 @@ object SparkEntry {
       ops.WarehouseOps.queries ++ ops.EmbedClusterOps.queries ++ ops.SearchOps.queries ++
       ops.ScaleOps.queries ++ ops.NestedBillingOps.queries ++
       ops.ProductAnalyticsOps.queries ++ ops.SeriesOps.queries ++ ops.GeoOps.queries ++
-      ops.SqlSurfaceOps.queries
+      ops.SqlSurfaceOps.queries).map { case (name, fn) =>
+      name -> ((spark: SparkSession, dir: String) => fn(GraftSession.install(spark), dir))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check.
     */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     ops.RelationalOps.oracleSql ++ ops.EtlOps.oracleSql ++ ops.MessageOps.oracleSql ++
       ops.DedupOps.oracleSql ++ ops.IncrementalDedupOps.oracleSql ++ ops.ClusterOps.oracleSql ++
       ops.SimilarityOps.oracleSql ++ ops.TextAnalysisOps.oracleSql ++

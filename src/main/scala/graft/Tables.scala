@@ -11,10 +11,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * real cluster) is a one-place concern.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   // Corpus tables are immutable inputs, so the (dir, name) → DataFrame plan
   // is memoized per session: every load otherwise re-runs file listing +
   // footer schema inference on the driver (~100 ms each), which dominates
@@ -31,23 +27,9 @@ object Tables {
     cache.getOrElseUpdate(spark, (dir, name))(doLoad(spark, dir, name))
 
   private def doLoad(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // The ingest edge must absorb every timestamp encoding a real landing
-    // zone produces (the reference tolerates timezone-naive timestamps end
-    // to end — core/services/billing_etl.py:35-40 serializes bare
-    // isoformat() and the warehouse coerces on load):
-    //   - TIMESTAMP(NANOS): Spark 4 refuses it by default
-    //     (PARQUET_TYPE_ILLEGAL). Read nanos as long, rescale to micros
-    //     TimestampType (test data is micro-precision → lossless).
-    //     NanosTimestampPushdown rewrites watermark predicates on the
-    //     derived column back onto the raw long so row-group skipping works.
-    //   - TIMESTAMP(MICROS, isAdjustedToUTC=false) — what pandas/DuckDB
-    //     write by default — which Spark 4 infers as TIMESTAMP_NTZ.
-    //     Disable NTZ inference so it lands as TimestampType directly
-    //     (session TZ is pinned UTC, so the reading is exact and matches
-    //     the DuckDB oracle's naive view of the same bytes).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    graft.plans.NanosTimestampPushdown.register(spark)
+    // install sets the ingest-edge read confs (nanos as long, no NTZ
+    // inference) and the nanos pushdown rule this rescale relies on
+    GraftSession.install(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val rescaled =
       if (name == "events" && df.schema("ts").dataType == LongType)

@@ -197,15 +197,12 @@ object EtlJob {
                   } else Some(c)
                 }
               val full = carried.fold(out)(c => out.unionByName(c))
-              val prevMode = spark.conf
-                .getOption("spark.sql.sources.partitionOverwriteMode")
-              spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-              try full.write.mode(SaveMode.Overwrite).partitionBy("export_date").parquet(destDir)
+              // per-write option, not session conf: concurrent runs on one
+              // session must not see each other's overwrite mode
+              try full.write.mode(SaveMode.Overwrite)
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("export_date").parquet(destDir)
               finally {
-                prevMode match {
-                  case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-                  case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-                }
                 // the carry blocks are dead once the overwrite committed (or
                 // failed — the retry loop rebuilds them); free them here
                 // rather than waiting on the ContextCleaner

@@ -315,11 +315,7 @@ final class FsMetaStore(val root: String)(implicit spark: SparkSession)
   }
 
   override def statusLog: DataFrame =
-    if (graft.util.Fs.hasParquetFiles(spark, statusDir))
-      spark.read.parquet(statusDir)
-    else
-      Seq.empty[(Long, Int, String, String, Timestamp)]
-        .toDF("seq", "org_id", "project_id", "status", "end_date_time")
+    statusRowsDriver().toDF("seq", "org_id", "project_id", "status", "end_date_time")
 
   // Driver-side overrides of the trait's Spark-job reads: same semantics
   // (MetaStoreSpec runs the battery against both backends), none of the

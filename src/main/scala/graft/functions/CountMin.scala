@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -50,13 +49,6 @@ object CountMin {
     (((h % w) + w) % w).toInt
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
-
   private def intLit(e: Expression, fn: String, arg: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case Literal(v: Long, LongType) if v.isValidInt => v.toInt
@@ -64,8 +56,8 @@ object CountMin {
       s"$fn: $arg must be an integer literal, got $other")
   }
 
-  /** (name, builder) pairs — shared by [[register]] and
-    * [[graft.GraftExtensions]], like NativeText/NativeVector/NativeAgg.
+  /** (name, builder) pairs, installed by [[graft.GraftSession.install]]
+    * and [[graft.GraftExtensions]], like NativeText/NativeVector/NativeAgg.
     */
   private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_cms_sketch" -> (exprs => {

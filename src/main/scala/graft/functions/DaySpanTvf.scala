@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, DateAdd, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Range}
@@ -55,16 +54,13 @@ object DaySpanTvf {
       "day")()), range)
   }
 
-  /** (identifier, info, builder) — shared by per-session registration and
-    * [[graft.GraftExtensions]]'s injectTableFunction.
+  /** (identifier, info, builder) — installed by
+    * [[graft.GraftSession.install]] and [[graft.GraftExtensions]]'s
+    * injectTableFunction.
     */
   private[graft] def description: (FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => LogicalPlan) =
     (FunctionIdentifier(Name),
       new ExpressionInfo("graft.functions", Name),
       build _)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry
-      .createOrReplaceTempFunction(Name, build, "built-in")
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -238,15 +237,8 @@ object BoundedDistinctAgg {
 
 object NativeAgg {
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
-
-  /** (name, builder) pairs — shared by [[register]] and
-    * [[graft.GraftExtensions]], like NativeText/NativeVector.
+  /** (name, builder) pairs, installed by [[graft.GraftSession.install]]
+    * and [[graft.GraftExtensions]], like NativeText/NativeVector.
     */
   private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     // Set semantics: duplicate (value, id) pairs collapse to one entry —

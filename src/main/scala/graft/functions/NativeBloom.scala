@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 
 /** SQL surface for bloom-filter probes.
   *
@@ -19,14 +18,12 @@ import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
   */
 object NativeBloom {
 
-  /** Idempotently register `graft_bloom_contains(bloomBinary, longValue)`.
-    * The bloom argument must be foldable (a literal or something constant-
-    * folded from literals, e.g. `unbase64('…')`) — the expression
-    * deserializes it once per task, not per row.
+  /** `graft_bloom_contains(bloomBinary, longValue)`, installed by
+    * [[graft.GraftSession.install]]. The bloom argument must be foldable
+    * (a literal or something constant-folded from literals, e.g.
+    * `unbase64('…')`) — the expression deserializes it once per task, not
+    * per row.
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
+  private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_bloom_contains" -> (exprs => BloomFilterMightContain(exprs(0), exprs(1))))
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -281,17 +280,6 @@ object NativeText {
     UTF8String.fromString(lower.replaceAll("\\s+", " ").trim)
   }
 
-  /** Idempotently register both expressions as SQL functions on a session
-    * (`graft_token_hashes(text)`, `graft_shingle_hashes(text)`), usable from
-    * `expr(...)` on any caller-provided SparkSession.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
-
   /** Arity guard shared by every registry builder: a SQL call with the
     * wrong argument count must fail at ANALYSIS time with the function's
     * name and expected arity, not leak a NoSuchElementException /
@@ -308,9 +296,10 @@ object NativeText {
       f(exprs)
     }
 
-  /** (name, builder) pairs — one source of truth shared by [[register]]
-    * (per-session wiring) and [[graft.GraftExtensions]] (the
-    * `spark.sql.extensions` cluster-wide wiring).
+  /** (name, builder) pairs — SQL functions such as
+    * `graft_token_hashes(text)` and `graft_shingle_hashes(text)`, installed
+    * per session by [[graft.GraftSession.install]] and cluster-wide by
+    * [[graft.GraftExtensions]] (`spark.sql.extensions`).
     */
   private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_token_hashes" -> arity("graft_token_hashes", 1)(exprs => TokenHashesExpr(exprs.head)),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -163,20 +162,11 @@ object NativeVector {
       Array[Any](bestD, bestCid))
   }
 
-  /** Idempotently register the expressions as SQL functions
-    * (`graft_cosine(a, b)`, `graft_lsh_keys(vec, nBands, bitsPerBand,
-    * seed, probeRadius)` — the four config args must be literals — and
-    * `graft_int_argmin(q, cents)`).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
-
-  /** (name, builder) pairs — one source of truth shared by [[register]]
-    * and [[graft.GraftExtensions]] (`spark.sql.extensions` wiring).
+  /** (name, builder) pairs — SQL functions `graft_cosine(a, b)`,
+    * `graft_lsh_keys(vec, nBands, bitsPerBand, seed, probeRadius)` (the
+    * four config args must be literals) and `graft_int_argmin(q, cents)`,
+    * installed by [[graft.GraftSession.install]] and
+    * [[graft.GraftExtensions]] (`spark.sql.extensions` wiring).
     */
   private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_cosine" -> (exprs => CosineExpr(exprs(0), exprs(1))),

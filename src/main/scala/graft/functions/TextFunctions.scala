@@ -41,7 +41,7 @@ object TextFunctions {
     * builds per pair — the exact-verify stages run millions of pairs, so
     * this is the dedup family's hot inner loop. Same value as [[jaccard]]
     * on such inputs (property-pinned in NativeTextSpec); requires
-    * [[NativeText.register]] on the session (every dedup path registers).
+    * [[graft.GraftSession.install]] on the session.
     */
   def jaccardSorted(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_jaccard_sorted", a, b)

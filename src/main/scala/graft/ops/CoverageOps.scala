@@ -924,7 +924,6 @@ object CoverageOps {
     * ≤ 0.8 % of total stream mass — a meaningful heavy-hitter bound.
     */
   private def statsCountmin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CountMin.register(s)
     import org.apache.spark.sql.expressions.Window
     val D = 5; val W = 4096
     val ev = Tables.load(s, dir, "events")

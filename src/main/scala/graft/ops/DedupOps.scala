@@ -100,7 +100,6 @@ object DedupOps {
     * text, map-only until the one groupBy.
     */
   private def dedupNormalized(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeText.register(s)
     import s.implicits._
     documents(s, dir).select(col("doc_id"), col("text"))
       .unionByName(TextAnalysisOps.UnicodeFixture.toDF("doc_id", "text"))
@@ -115,7 +114,6 @@ object DedupOps {
     * expression (one compiled tokenize→hash→mix pass, no trigram strings).
     */
   private[graft] def shingled(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs.select(col("doc_id"), expr("graft_shingle_hashes(text)").as("sh_hashes"))
   }
 
@@ -235,7 +233,6 @@ object DedupOps {
     * plan's no-cartesian candidate join.
     */
   private[graft] def minhashPairsStaged(docs: DataFrame, sh: DataFrame): Staged = {
-    graft.functions.NativeText.register(docs.sparkSession)
     // cache: the self-join below would otherwise recompute signatures per side
     val banded = docs
       .select(col("doc_id"), expr("graft_minhash_sig64(text)").as("sig"))
@@ -265,7 +262,6 @@ object DedupOps {
     * the MinHash note.
     */
   private def simhashes(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs.select(col("doc_id"), expr("graft_simhash60_shingles(text)").as("sim"))
       .where(col("sim").isNotNull) // shingleless docs have no signature
   }
@@ -477,7 +473,6 @@ object DedupOps {
     * [[exactJaccardPairs]] caches its posting relation against).
     */
   private[graft] def spanDedupStaged(docs: DataFrame): Staged = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"),
       posexplode(expr("graft_ngram8_pos_hashes(text)")).as(Seq("pos", "g")))
       .cache()

@@ -143,7 +143,6 @@ object EmbedClusterOps {
       vectors: DataFrame, k: Int = 0, iters: Int = Iters,
       memoKey: Option[String] = None): QueryHygiene.Staged = {
     val spark = vectors.sparkSession
-    graft.functions.NativeVector.register(spark)
     // each Lloyd pass re-reads the quantized relation (3 assigns + 2
     // updates): cache it once instead of re-scanning + re-quantizing
     val vecs = quantized(vectors).cache()
@@ -199,7 +198,6 @@ object EmbedClusterOps {
     * clustered plan's output.
     */
   private def semdedupPrune(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeVector.register(s)
     val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val fx = e.unionByName(
       e.where(col("vec_id") % 50 === 0)

@@ -61,7 +61,6 @@ object IncrementalDedupOps {
   def bandRows(docs: DataFrame,
                bands: Int = DedupOps.Bands,
                rowsPerBand: Int = DedupOps.RowsPerBand): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs.select(col("doc_id"), expr("graft_minhash_sig64(text)").as("sig"))
       .where(col("sig").isNotNull)
       .select(col("doc_id"),

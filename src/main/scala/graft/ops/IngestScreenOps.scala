@@ -54,7 +54,6 @@ object IngestScreenOps {
       .unionByName(TextAnalysisOps.piiFixtureDf(docs.sparkSession))
 
   private def ingestScreen(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeText.register(s)
     val docs = documents(s, dir)
     val corpus = corpusDocs(docs).cache()
     val batch = batchDocs(docs).cache()

@@ -311,7 +311,6 @@ object RelationalOps {
     * ObjectHashAggregate partial+final plan and ≡ the Spark window form.
     */
   private def a9TopkCustomAgg(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeAgg.register(s)
     events(s, dir)
       .groupBy(col("event_type"))
       .agg(expr("graft_topk_pairs(value, event_id, 3)").as("top"))
@@ -621,7 +620,6 @@ object RelationalOps {
     * j3/j3_auto pattern.
     */
   private def j10(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsofJoin.register(s)
     val ev = events(s, dir)
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("event_id"), col("ts"), col("user_id"))
@@ -644,7 +642,6 @@ object RelationalOps {
     * the time-REVERSED stream.
     */
   private def j11(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsofJoin.register(s)
     val ev = events(s, dir)
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("event_id"), col("ts"), col("user_id"))

@@ -128,7 +128,6 @@ object SamplingOps {
     * shuffle, and nothing is ever all-pairs.
     */
   private def decontaminateNgramOverlap(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeText.register(s)
     val docs = documents(s, dir)
     def grams(df: DataFrame, idCol: String): DataFrame =
       df.select(col("doc_id").as(idCol),

@@ -292,14 +292,9 @@ object ScaleOps {
     ev.unionByName(ev.where(col("export_date").isin(BackfillDates: _*)))
       .write.mode(SaveMode.Append).partitionBy("export_date").parquet(dest)
     // the repair: dynamic overwrite of exactly the damaged window
-    val prevMode = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try ev.where(col("export_date").isin(BackfillDates: _*))
-      .write.mode(SaveMode.Overwrite).partitionBy("export_date").parquet(dest)
-    finally prevMode match {
-      case Some(m) => s.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    ev.where(col("export_date").isin(BackfillDates: _*))
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("export_date").parquet(dest)
     s.read.parquet(dest)
       .groupBy(col("export_date").cast("string").as("export_date"))
       .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
@@ -444,7 +439,6 @@ object ScaleOps {
     */
   private def bloomProbe(dim: DataFrame, keyCol: String,
                          probeCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    graft.functions.NativeBloom.register(dim.sparkSession)
     val nDim = dim.count()
     if (nDim == 0) lit(false)
     else {
@@ -1403,7 +1397,6 @@ object ScaleOps {
           min(col("value_cents")).as("min_cents"),
           max(col("value_cents")).as("max_cents"))
         .write.mode(SaveMode.Overwrite).parquet(mv)
-      graft.plans.MaterializedViewRewrite.register(s)
       graft.plans.MaterializedViewRewrite.MvCatalog.register(s, base, mv,
         dims = Seq("event_date", "event_type"), countCol = "n",
         sumMap = Map("value_cents" -> "sum_cents"),
@@ -1486,7 +1479,6 @@ object ScaleOps {
           sumMap = Map("value_cents" -> "sum_cents"),
           minMap = Map("value_cents" -> "min_cents"),
           maxMap = Map("value_cents" -> "max_cents"))
-      graft.plans.MaterializedViewRewrite.register(s)
       val mv1 = graft.util.TempDirs.create("graft_mvr_v1_")
       rollup(s.read.parquet(base)).write.mode(SaveMode.Overwrite).parquet(mv1)
       register(mv1)

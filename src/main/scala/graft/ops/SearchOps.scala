@@ -175,7 +175,6 @@ object SearchOps {
     // documented 15 s trap at sf0.1 (SCALE.md, dedup signatures); hash
     // keys intersect with the same cardinalities as the string trigrams
     // the oracle uses (the repo-wide shingle-hash convention).
-    graft.functions.NativeText.register(s)
     val shingled = documents(s, dir)
       .select(col("doc_id"), explode(expr("graft_shingle_hashes(text)")).as("g"))
     val qGrams = shingled.where(col("doc_id").isin(qids: _*))

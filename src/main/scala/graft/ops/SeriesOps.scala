@@ -369,7 +369,6 @@ object SeriesOps {
     * `> 64` hash-checks the aggregate through partial/merge/serialize.
     */
   private def statsDistinctCap(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeAgg.register(s)
     events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(expr("graft_distinct_cap(user_id, 64)").as("c"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.NativeVector
 
 /** Similarity search over the `embeddings` table (`vec_id`, `embedding:
   * array<float>`, `label`) — the ANN component of the LLM-pipeline operator
@@ -127,10 +126,8 @@ object SimilarityOps {
   private val LshRecallFloor = 0.9
   private val IvfRecallFloor = 0.5
 
-  private def embeddings(s: SparkSession, dir: String): DataFrame = {
-    NativeVector.register(s)
+  private def embeddings(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
-  }
 
   private def cosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
@@ -248,7 +245,6 @@ object SimilarityOps {
     */
   def embedIndexRows(vectors: DataFrame, bands: Int, bits: Int,
                      probeRadius: Int = 0): DataFrame = {
-    NativeVector.register(vectors.sparkSession)
     vectors.select(col("vec_id"),
       explode(expr(s"graft_lsh_keys(embedding, $bands, $bits, $LshSeed, $probeRadius)"))
         .as("key"))

@@ -50,7 +50,6 @@ object SqlSurfaceOps {
     */
   private def sqlTvfDays(s: SparkSession, dir: String): DataFrame = {
     graft.GraftSession.init(s, dir)
-    graft.functions.DaySpanTvf.register(s)
     s.sql(
       """SELECT date_format(d.day, 'yyyy-MM-dd') AS day,
         |       coalesce(c.n, 0) AS n_events

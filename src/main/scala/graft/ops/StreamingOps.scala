@@ -57,7 +57,6 @@ object StreamingOps {
   }
 
   private def streamIngestScreen(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeText.register(s)
     val docsPath = s"$dir/documents.parquet"
     val batchDocs = graft.Tables.load(s, dir, "documents")
     val nib = substring(md5(col("doc_id").cast("string")), 32, 1)

@@ -117,7 +117,6 @@ object TextAnalysisOps {
     * division, bit-identical in DuckDB.
     */
   private def taRepetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeText.register(s)
     documents(s, dir)
       .select(col("doc_id"), expr("graft_repetition_stats(text)").as("r"))
       .select(col("doc_id"),
@@ -303,7 +302,6 @@ object TextAnalysisOps {
     * map-only over 100 TB, no shuffle except the final sort.
     */
   private def taNormalize(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeText.register(s)
     import s.implicits._
     documents(s, dir).select(col("doc_id"), col("text"))
       .unionByName(UnicodeFixture.toDF("doc_id", "text"))

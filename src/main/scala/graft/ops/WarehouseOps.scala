@@ -205,7 +205,6 @@ object WarehouseOps {
     * hash-equality of the two IS the rewrite's correctness proof.
     */
   private def rangeJoinAuto(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.BandedIntervalJoin.register(s)
     val win = s.range(10).select(
       col("id").cast("int").as("wid"),
       expr("timestamp'2024-01-01 18:00:00' + make_interval(0,0,0,0, CAST(id*66 AS INT), 0, 0)")

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -63,10 +62,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * near-identical workloads can't flip-flop widths and cached banded
   * layouts stay reusable. Any width is CORRECT (the original predicate
   * always rides along as residual — the fuzz spec runs the ladder);
-  * tuning only moves the fan-out/selectivity balance. Registered
-  * per-session via [[register]] (the same
-  * `experimental.extraOptimizations` seam as [[NanosTimestampPushdown]])
-  * and for extension-configured sessions via `GraftExtensions`.
+  * tuning only moves the fan-out/selectivity balance. Installed
+  * per-session by [[graft.GraftSession.install]] and for
+  * extension-configured sessions via `GraftExtensions`.
   *
   * Reference tie-in: the reference joins billing rows to run windows in
   * Python dict lookups (billing_etl.py:270-298, one window at a time);
@@ -236,9 +234,4 @@ object BandedIntervalJoin extends Rule[LogicalPlan] with PredicateHelper {
         Project(j.output, Join(nl, nr, Inner, Some(newCond), hint))
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

@@ -40,10 +40,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * Output attribute ids are PRESERVED (each rewritten output keeps the
   * original exprId), so parent operators' references stay valid. The MV
   * relation is spliced via `newInstance()` per match — two rewrites in
-  * one tree never share attribute ids. Registered per-session through
-  * the same `experimental.extraOptimizations` seam as
-  * [[NanosTimestampPushdown]]; it fires only on bases present in
-  * [[MvCatalog]], so it is inert for every other query in the session.
+  * one tree never share attribute ids. Installed on every session by
+  * [[graft.GraftSession.install]], beside [[NanosTimestampPushdown]]; it
+  * fires only on bases present in [[MvCatalog]], so it is inert for every
+  * other query in the session.
   */
 object MaterializedViewRewrite extends Rule[LogicalPlan] {
 
@@ -197,12 +197,4 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
     }
     Some(Aggregate(newGroup, newAggExprs, newChild))
   }
-
-  /** Idempotent per-session registration, same seam as
-    * [[NanosTimestampPushdown.register]].
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

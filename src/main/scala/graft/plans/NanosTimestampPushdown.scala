@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -10,10 +9,11 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * nanosecond-encoded event-time columns.
   *
   * Problem: sources whose event time is parquet TIMESTAMP(NANOS) are read as
-  * raw longs (`spark.sql.legacy.parquet.nanosAsLong`) and rescaled with
-  * `timestamp_micros(ts div 1000)`. Every watermark predicate then compares
-  * a *computed* column, so nothing reaches the scan — `PushedFilters: []` —
-  * and a 100 TB incremental extract degrades to a full-table read.
+  * raw longs (the nanos-as-long read conf [[graft.GraftSession.install]]
+  * sets) and rescaled with `timestamp_micros(ts div 1000)`. Every
+  * watermark predicate then compares a *computed* column, so nothing
+  * reaches the scan — `PushedFilters: []` — and a 100 TB incremental
+  * extract degrades to a full-table read.
   *
   * Fix: `floor-div by 1000` then `micros→timestamp` is monotone, so a
   * comparison against a timestamp literal is equivalent to a long comparison
@@ -29,9 +29,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * min/max skipping). Rewrites are restricted to positive literals, where
   * truncating and flooring division agree for every raw value ≥ −999.
   *
-  * Registered via `spark.experimental.extraOptimizations` (idempotently, in
-  * [[graft.Tables.load]]) so it works on any caller-provided session —
-  * no SparkSessionExtensions wiring needed at the driver.
+  * Installed by [[graft.GraftSession.install]] (which [[graft.Tables.load]]
+  * calls), so it works on any caller-provided session — no
+  * SparkSessionExtensions wiring needed at the driver.
   */
 object NanosTimestampPushdown extends Rule[LogicalPlan] {
 
@@ -81,10 +81,4 @@ object NanosTimestampPushdown extends Rule[LogicalPlan] {
           GreaterThanOrEqual(raw, Literal(us * 1000L, LongType))
       })
   }
-
-  /** Idempotently attach to a session. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

@@ -58,8 +58,7 @@ object StreamingIngest {
     */
   def eventsStream(spark: SparkSession, dir: String, copies: Int = 1,
                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    graft.GraftSession.install(spark)
     val path = s"$dir/events.parquet"
     // The file source wants a directory of files (its real-world shape:
     // a landing zone receiving parquet drops). Stage the single-table file
@@ -81,19 +80,15 @@ object StreamingIngest {
   // The file source needs a user-supplied schema; probing it is a footer
   // read but still a Spark job. A bench sweep builds dozens of streams over
   // the same immutable fixture file, so memoize the probe per path (same
-  // immutable-dir assumption as Tables.load's plan cache). The probe pins
-  // its confs (nanosAsLong, no NTZ inference) itself, and the memoized
-  // value is normalized on every retrieval, so a schema cached by an
-  // earlier session under different confs cannot leak NTZ downstream.
+  // immutable-dir assumption as Tables.load's plan cache). Its callers
+  // install the read confs (nanos as long, no NTZ inference) first, and the
+  // memoized value is normalized on every retrieval, so a schema cached by
+  // an earlier session under different confs cannot leak NTZ downstream.
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   private def probeSchema(spark: SparkSession, path: String) = {
-    val probed = schemaMemo.computeIfAbsent(path, { p =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      spark.read.parquet(p).schema
-    })
+    val probed = schemaMemo.computeIfAbsent(path, p => spark.read.parquet(p).schema)
     // Naive (NTZ) timestamps must not cross the ingest edge: hand the file
     // source an LTZ schema instead — the parquet reader fills TimestampType
     // from the same int64 micros, exact under the pinned-UTC session.
@@ -358,7 +353,6 @@ object StreamingIngest {
     * serialize/deserialize/merge path end to end.
     */
   def streamTopkCustom(spark: SparkSession, dir: String): DataFrame = withStateGrain(spark) {
-    graft.functions.NativeAgg.register(spark)
     val agg = eventsStream(spark, dir)
       .groupBy(col("event_type"))
       .agg(expr("graft_topk_pairs(value, event_id, 3)").as("top"))
@@ -383,7 +377,6 @@ object StreamingIngest {
     * never exercises in this order.
     */
   def streamDistinctCap(spark: SparkSession, dir: String): DataFrame = withStateGrain(spark) {
-    graft.functions.NativeAgg.register(spark)
     val agg = eventsStream(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(expr("graft_distinct_cap(user_id, 64)").as("c"))
@@ -407,7 +400,6 @@ object StreamingIngest {
     * the top-k aggregate.
     */
   def streamCountmin(spark: SparkSession, dir: String): DataFrame = withStateGrain(spark) {
-    graft.functions.CountMin.register(spark)
     val D = 5; val W = 4096
     val agg = eventsStream(spark, dir)
       .select(xxhash64(col("user_id")).as("k"))
@@ -448,7 +440,6 @@ object StreamingIngest {
     * equal the all-batch operator join, i.e. j2's oracle verbatim.
     */
   def streamAsofAttrib(spark: SparkSession, dir: String): DataFrame = withStateGrain(spark) {
-    graft.plans.AsofJoin.register(spark)
     val views = graft.Tables.load(spark, dir, "events")
       .where(col("event_type") === "view")
       .select(col("event_id").as("v_id"), col("ts").as("v_ts"),
@@ -750,7 +741,7 @@ object StreamingIngest {
     */
   def streamBoundedBatches(spark: SparkSession, dir: String,
                            copies: Int = 3): (DataFrame, Long) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.GraftSession.install(spark)
     val path = s"$dir/events.parquet"
     val stage = java.nio.file.Paths.get(graft.util.TempDirs.create("graft_stream_bounded_"))
     (1 to copies).foreach { i =>

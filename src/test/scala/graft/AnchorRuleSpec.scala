@@ -33,7 +33,6 @@ class AnchorRuleSpec extends AnyFunSuite {
     // back, it must appear in the unshifted verifier-with-max-anchors
     // ground truth: anchors = whole corpus when target >= corpus? too
     // slow — instead recompute exact J for the emitted pairs directly)
-    graft.functions.NativeText.register(spark)
     val sh = shifted.select(col("doc_id"),
       expr("graft_shingle_hashes(text)").as("t"))
     val pairs = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

@@ -25,7 +25,6 @@ class AsofJoinSpec extends AnyFunSuite {
   }
 
   private def run(parts: Int): Seq[(Long, Long, Any)] = {
-    graft.plans.AsofJoin.register(spark)
     val (left, right) = mkSides(parts)
     graft.plans.AsofJoin(left, right,
       keys = Seq("k" -> "rk"), on = Seq("t" -> "rt"))
@@ -49,7 +48,6 @@ class AsofJoinSpec extends AnyFunSuite {
   }
 
   test("FORWARD direction: next strictly-following match, ties excluded") {
-    graft.plans.AsofJoin.register(spark)
     val (left, right) = mkSides(3)
     val got = graft.plans.AsofJoin(left, right,
       keys = Seq("k" -> "rk"), on = Seq("t" -> "rt"), forward = true)
@@ -66,7 +64,6 @@ class AsofJoinSpec extends AnyFunSuite {
 
   test("NULL keys/on-values follow SQL join rules — never matched as key 0") {
     import spark.implicits._
-    graft.plans.AsofJoin.register(spark)
     // key 0 exists on BOTH sides: pre-fix, the long-vector compare read a
     // NULL key slot as 0 and silently matched these rows to it
     val left = Seq(
@@ -91,7 +88,6 @@ class AsofJoinSpec extends AnyFunSuite {
   }
 
   test("plans as AsofJoinExec — no window, no union, one exchange per side") {
-    graft.plans.AsofJoin.register(spark)
     val (left, right) = mkSides(3)
     val df = graft.plans.AsofJoin(left, right,
       keys = Seq("k" -> "rk"), on = Seq("t" -> "rt"))
@@ -102,7 +98,6 @@ class AsofJoinSpec extends AnyFunSuite {
   }
 
   test("rejects non-long-backed key/on expressions") {
-    graft.plans.AsofJoin.register(spark)
     import spark.implicits._
     val l = Seq(("a", 1L)).toDF("k", "t")
     val r = Seq(("a", 1L)).toDF("rk", "rt")

@@ -30,7 +30,6 @@ class ClusterSpec extends AnyFunSuite {
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id"), col("b.doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    graft.functions.NativeText.register(spark)
     val sh = fixture.select(col("doc_id"), expr("graft_shingle_hashes(text)").as("sh_hashes"))
     val near = sh.as("a").join(sh.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id"), col("b.doc_id"),

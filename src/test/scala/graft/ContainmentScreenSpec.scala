@@ -35,7 +35,6 @@ class ContainmentScreenSpec extends AnyFunSuite {
   private def corpus = Tables.load(spark, Sf0001, "documents")
 
   private def postDf(docs: org.apache.spark.sql.DataFrame) = {
-    graft.functions.NativeText.register(spark)
     docs.select(col("doc_id"), explode(expr("graft_shingle_hashes(text)")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
   }

@@ -18,7 +18,6 @@ class CustomOpPropertySpec extends AnyFunSuite {
 
   test("property: CMS never undercounts and its rows each sum to N") {
     import sp.implicits._
-    functions.CountMin.register(spark)
     val keysGen = for {
       n <- Gen.chooseNum(1, 300)
       ks <- Gen.listOfN(n, Gen.chooseNum(-50L, 50L)) // dense → forced collisions at w=16
@@ -44,7 +43,6 @@ class CustomOpPropertySpec extends AnyFunSuite {
 
   test("property: distinct-cap ≡ least(countDistinct, k) over arbitrary multisets") {
     import sp.implicits._
-    functions.NativeAgg.register(spark)
     val gen = for {
       k <- Gen.chooseNum(1, 12)
       n <- Gen.chooseNum(0, 400)
@@ -109,7 +107,6 @@ class CustomOpPropertySpec extends AnyFunSuite {
   test("property: as-of operator ≡ window formulation on random tapes") {
     import org.apache.spark.sql.expressions.Window
     import sp.implicits._
-    graft.plans.AsofJoin.register(spark)
     val tapeGen = for {
       nl <- Gen.chooseNum(1, 60)
       nr <- Gen.chooseNum(0, 60)
@@ -152,7 +149,6 @@ class CustomOpPropertySpec extends AnyFunSuite {
 
   test("property: as-of NULL semantics ≡ brute force (NULL key/on matches nothing)") {
     import sp.implicits._
-    graft.plans.AsofJoin.register(spark)
     // ~1/6 of keys and on-values NULL, on a tiny domain that guarantees a
     // legitimate key 0 exists on both sides — the value a NULL slot reads
     // as if the comparator ever skips its null check again

@@ -64,7 +64,6 @@ class DedupSpanSpec extends AnyFunSuite {
 
   test("positional 8-gram hashes are the unsorted bag of the set-semantics ones") {
     import sp.implicits._
-    graft.functions.NativeText.register(spark)
     val text = w(0 until 20, "q") + " " + w(0 until 10, "q") // overlapping repeats
     val row = Seq(text).toDF("text")
       .select(expr("graft_ngram8_pos_hashes(text)").as("pos"),

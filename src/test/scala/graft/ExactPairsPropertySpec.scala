@@ -23,7 +23,6 @@ class ExactPairsPropertySpec extends AnyFunSuite {
 
   test("property: prefix-filtered posting join ≡ naive all-pairs Jaccard") {
     import sp.implicits._
-    functions.NativeText.register(spark) // verify stage uses graft_jaccard_sorted
     val theta = ops.DedupOps.JaccardThreshold
     val corpusGen = for {
       nDocs <- Gen.chooseNum(2, 40)

@@ -50,6 +50,17 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(s2.sessionState.optimizer.extendedOperatorOptimizationRules
         .contains(plans.NanosTimestampPushdown),
         "NanosTimestampPushdown must be injected by the extensions")
+      // the same functions, table functions and rules as an installed session
+      val installed = GraftSession.install(base.newSession())
+      def graftNames(names: Seq[org.apache.spark.sql.catalyst.FunctionIdentifier]) =
+        names.map(_.funcName).filter(_.startsWith("graft_")).toSet
+      assert(graftNames(s2.sessionState.functionRegistry.listFunction()) ==
+        graftNames(installed.sessionState.functionRegistry.listFunction()))
+      assert(graftNames(s2.sessionState.tableFunctionRegistry.listFunction()) ==
+        graftNames(installed.sessionState.tableFunctionRegistry.listFunction()))
+      assert(s2.sessionState.optimizer.extendedOperatorOptimizationRules
+        .filter(_.getClass.getName.startsWith("graft.")) ==
+        installed.experimental.extraOptimizations)
       // and the planner strategy for the custom as-of operator
       assert(s2.sessionState.planner.strategies.contains(plans.AsofJoinStrategy),
         "AsofJoinStrategy must be injected by the extensions")

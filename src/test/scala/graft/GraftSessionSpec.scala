@@ -41,4 +41,26 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts"),
       s"SQL text over the view must keep the pushdown rewrite\n$plan")
   }
+
+  test("a registry entry installs every rule, strategy and function once, whatever ran before") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // fresh registry and experimental methods, same SparkContext
+    val fresh = spark.newSession()
+    SparkEntry.queries("a10_ntile_deciles")(fresh, Sf0001)
+    GraftSession.install(fresh)
+    val rules = Seq(plans.NanosTimestampPushdown, plans.BandedIntervalJoin,
+      plans.MaterializedViewRewrite)
+    assert(fresh.experimental.extraOptimizations.filter(r => rules.exists(_ eq r)) == rules,
+      s"each rule once, in order: ${fresh.experimental.extraOptimizations}")
+    assert(fresh.experimental.extraStrategies.count(_ eq plans.AsofJoinStrategy) == 1)
+    val names = (functions.NativeText.builders ++ functions.NativeVector.builders ++
+      functions.NativeAgg.builders ++ functions.CountMin.builders).map(_._1) :+
+      "graft_bloom_contains"
+    val registered = fresh.sessionState.functionRegistry.listFunction().map(_.funcName)
+    names.foreach(n => assert(registered.count(_ == n) == 1, n))
+    assert(fresh.sessionState.tableFunctionRegistry
+      .functionExists(FunctionIdentifier(functions.DaySpanTvf.Name)))
+    assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(fresh.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+  }
 }

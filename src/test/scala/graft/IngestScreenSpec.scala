@@ -33,7 +33,6 @@ class IngestScreenSpec extends AnyFunSuite {
   }
 
   test("dup_near equals brute-force batch×corpus Jaccard minus exact dups") {
-    graft.functions.NativeText.register(spark)
     val docs = Tables.load(spark, Sf0001, "documents")
     val batch = ops.IngestScreenOps.batchDocs(docs)
     val corpus = docs.where(nib < "e").select(col("doc_id"), col("text"))

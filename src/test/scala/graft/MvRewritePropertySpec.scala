@@ -34,7 +34,6 @@ class MvRewritePropertySpec extends AnyFunSuite {
 
   test("property: rewrite-on ≡ rewrite-off over random bases, filters, and aggregates") {
     import spark.implicits._
-    MaterializedViewRewrite.register(spark)
     val rnd = new scala.util.Random(20260815L)
     val dates = Seq("2024-01-01", "2024-01-02", "2024-01-03")
     val types = Seq("a", "b", "c")

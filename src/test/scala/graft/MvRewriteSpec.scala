@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.MaterializedViewRewrite
 import graft.plans.MaterializedViewRewrite.MvCatalog
 
 /** The MV-rewrite rule's plan-shape contract: a registered rollup
@@ -45,7 +44,6 @@ class MvRewriteSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), sum($"value_cents").as("sum_cents"),
         min($"value_cents").as("min_cents"), max($"value_cents").as("max_cents"))
       .write.mode("overwrite").parquet(mv)
-    MaterializedViewRewrite.register(spark)
     MvCatalog.register(spark, base, mv,
       dims = Seq("event_date", "event_type"), countCol = "n",
       sumMap = Map("value_cents" -> "sum_cents"),

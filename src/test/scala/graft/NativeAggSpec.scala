@@ -11,7 +11,6 @@ class NativeAggSpec extends AnyFunSuite {
   import SparkTestBase._
 
   test("graft_topk_pairs equals the window form and plans partial+final") {
-    functions.NativeAgg.register(spark)
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.load(spark, Sf0001, "events")
       .select(col("event_type"), col("value"), col("event_id"))
@@ -33,7 +32,6 @@ class NativeAggSpec extends AnyFunSuite {
   }
 
   test("graft_topk_pairs keeps groups smaller than k and skips nulls") {
-    functions.NativeAgg.register(spark)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("g", StringType),
@@ -54,7 +52,6 @@ class NativeAggSpec extends AnyFunSuite {
   }
 
   test("graft_cms_sketch is exact sans collisions and plans partial+final") {
-    functions.CountMin.register(spark)
     // wide grid + tiny key space → collision-free → lookup == exact count
     val ev = Tables.load(spark, Sf0001, "events")
       .select(xxhash64(col("user_id")).as("k"))
@@ -72,7 +69,6 @@ class NativeAggSpec extends AnyFunSuite {
   }
 
   test("graft_cms_sketch under forced collisions stays one-sided (est >= exact)") {
-    functions.CountMin.register(spark)
     // w=32 over ~1000 distinct event_ids → guaranteed collisions; CMS may
     // only OVERcount, never undercount, and merges across partitions must
     // not change that (repartition forces multi-buffer merge()).
@@ -89,7 +85,6 @@ class NativeAggSpec extends AnyFunSuite {
   }
 
   test("graft_cms_sketch rejects mis-typed keys at analysis time") {
-    functions.CountMin.register(spark)
     val ev = Tables.load(spark, Sf0001, "events")
     val e = intercept[Exception] {
       ev.agg(expr("graft_cms_sketch(event_type, 5, 1024)")).collect()
@@ -98,7 +93,6 @@ class NativeAggSpec extends AnyFunSuite {
   }
 
   test("graft_distinct_cap equals least(countDistinct, k) with an exact flag") {
-    functions.NativeAgg.register(spark)
     import spark.implicits._
     // groups straddling the cap: sizes k-1, k, k+1, k+7; duplicates and
     // nulls must not move the count

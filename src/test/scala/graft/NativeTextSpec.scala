@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.NativeText
 import graft.functions.TextFunctions
 
 /** The native one-pass expressions and their composable (HOF) reference
@@ -17,7 +16,6 @@ class NativeTextSpec extends AnyFunSuite {
   private implicit lazy val sp: org.apache.spark.sql.SparkSession = spark
 
   private def docs = {
-    NativeText.register(spark)
     Tables.load(spark, Sf0001, "documents").limit(100).cache()
   }
 
@@ -69,7 +67,6 @@ class NativeTextSpec extends AnyFunSuite {
 
   test("signature expressions are null exactly when the doc has no shingles") {
     import sp.implicits._
-    NativeText.register(spark)
     val d = Seq("one two", "a b c d e").toDF("text")
       .select(col("text"), expr("graft_minhash_sig64(text)").as("mh"),
         expr("graft_simhash60_shingles(text)").as("sh"))
@@ -111,7 +108,6 @@ class NativeTextSpec extends AnyFunSuite {
 
   test("repetition stats on degenerate docs: empty and single-word") {
     import sp.implicits._
-    NativeText.register(spark)
     val rows = Seq("", "word", "x x").toDF("text")
       .select(col("text"), expr("graft_repetition_stats(text)").as("r"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap

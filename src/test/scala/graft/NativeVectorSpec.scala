@@ -13,7 +13,6 @@ class NativeVectorSpec extends AnyFunSuite {
   import SparkTestBase._
 
   private def emb = {
-    NativeVector.register(spark)
     Tables.load(spark, Sf0001, "embeddings")
   }
 
@@ -83,7 +82,6 @@ class NativeVectorSpec extends AnyFunSuite {
   test("null vector elements null-propagate instead of reading as 0.0") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    NativeVector.register(spark)
     val schema = StructType(Seq(
       StructField("v", ArrayType(FloatType, containsNull = true))))
     val df = spark.createDataFrame(
@@ -128,7 +126,6 @@ class NativeVectorSpec extends AnyFunSuite {
   }
 
   test("int argmin breaks distance ties to the lowest cid; n > 1 scaling exact") {
-    NativeVector.register(spark)
     // cid 7 is the SAME point expressed as an n=3 centroid (s = 3q), cids
     // 2 and 5 are n=1 copies — all three at distance 0; lowest cid wins
     val r = spark.sql(

@@ -346,6 +346,23 @@ class PlanSpec extends AnyFunSuite {
     assert(seams.isEmpty, s"system-property seams in src/main: $seams")
   }
 
+  test("engine wiring lives only in GraftSession.install") {
+    // one list of rules, strategies, functions and read confs: a copy
+    // elsewhere would make a query's rule set depend on what ran before it
+    Seq("extraOptimizations", "extraStrategies", "createOrReplaceTempFunction",
+      "nanosAsLong").foreach { needle =>
+      assert(mainSourcesContaining(needle) == Set("src/main/scala/graft/GraftSession.scala"),
+        needle)
+    }
+  }
+
+  test("dynamic partition overwrite is a per-write option, not session conf") {
+    // session conf is shared by every write on the session, so a
+    // set-and-restore races with any write running beside it
+    val offenders = mainSourcesContaining("spark.sql.sources.partitionOverwriteMode")
+    assert(offenders.isEmpty, s"session-conf overwrite mode in src/main: $offenders")
+  }
+
   test("analytic joins: fixed dims broadcast, no cartesian, distinct via Expand") {
     // q5: nation/region are fixed-cardinality at any SF — their broadcasts
     // are pinned; everything else is AQE's call. No plan may go cartesian.
@@ -474,7 +491,6 @@ class PlanSpec extends AnyFunSuite {
       assert(off.contains("BroadcastNestedLoopJoin"),
         s"without the rule the naive form must nested-loop (control)\n$off")
     } finally spark.experimental.extraOptimizations = saved
-    graft.plans.BandedIntervalJoin.register(spark)
     val on = physical(naive)
     assert(on.contains("__graft_band") && !on.contains("BroadcastNestedLoopJoin"), on)
 

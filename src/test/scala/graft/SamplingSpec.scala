@@ -78,7 +78,6 @@ class SamplingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val engine = ops.SamplingOps.queries("decontaminate_ngram_overlap")(spark, Sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    graft.functions.NativeText.register(spark)
     val docs = Tables.load(spark, Sf0001, "documents")
     val nib = substring(md5(col("doc_id").cast("string")), 32, 1)
     val g8 = docs.select(col("doc_id"), expr("graft_ngram8_hashes(text)").as("g8"))

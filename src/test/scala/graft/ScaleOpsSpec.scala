@@ -101,7 +101,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("bloom probe prunes the fact side before the join and loses no matches") {
-    graft.functions.NativeBloom.register(spark)
     val dim = Tables.load(spark, Sf0001, "supplier")
       .where(col("s_nationkey") === 3).select(col("s_suppkey"))
     val bf = dim.stat.bloomFilter("s_suppkey", math.max(dim.count(), 64L), 0.01)
@@ -157,7 +156,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       s"bloom probe must sit below the fact-side exchange\n${nodes.head}")
     // and it must actually prune ≥90% of the fact scan (matching fraction is
     // ~3.4% at this SF; 1% fpp leaves the kept set well under 10%)
-    graft.functions.NativeBloom.register(spark)
     val dim = Tables.load(spark, Sf0001, "orders")
       .where(col("o_orderpriority") === "1-URGENT" &&
         col("o_orderdate") < to_timestamp(lit("1996-01-01 00:00:00")))

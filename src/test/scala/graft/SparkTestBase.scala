@@ -17,7 +17,8 @@ object SparkTestBase {
       .config("spark.sql.warehouse.dir", tmpDir("graft_warehouse_"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
+    // the engine's rules, strategy and SQL functions, once for every suite
+    GraftSession.install(s)
   }
 
   val Sf0001 = "/root/testdata/sf0.001"

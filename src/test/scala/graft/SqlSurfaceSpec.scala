@@ -23,7 +23,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("day-span TVF emits a distributed Range plan, not a local list") {
-    functions.DaySpanTvf.register(spark)
     val df = spark.sql(
       "SELECT day FROM graft_day_span(DATE '2024-02-27', DATE '2024-03-02')")
     val days = df.collect().map(_.getDate(0).toString).sorted
@@ -37,7 +36,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("day-span TVF rejects bad arity, unparseable dates, inverted spans") {
-    functions.DaySpanTvf.register(spark)
     intercept[Exception] {
       spark.sql("SELECT * FROM graft_day_span(DATE '2024-01-01')").collect()
     }

@@ -87,7 +87,6 @@ class TextFunctionsSpec extends AnyFunSuite {
 
   test("normalized dedup catches the composed/decomposed pair raw exact dedup misses") {
     import sp.implicits._
-    graft.functions.NativeText.register(spark)
     val fixture = Seq(
       (1L, "Café   au\tLait"),   // precomposed é, messy whitespace
       (2L, "Cafe\u0301 au Lait\n") // e + combining acute

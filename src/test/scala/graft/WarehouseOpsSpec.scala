@@ -227,7 +227,6 @@ class WarehouseOpsSpec extends AnyFunSuite {
       saved.filterNot(_ eq graft.plans.BandedIntervalJoin)
     val expected = try naive.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
       finally spark.experimental.extraOptimizations = saved
-    graft.plans.BandedIntervalJoin.register(spark)
     val got = naive.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(expected.nonEmpty, "adversarial windows must match some events")
     assert(got == expected)
@@ -270,7 +269,6 @@ class WarehouseOpsSpec extends AnyFunSuite {
       saved.filterNot(_ eq graft.plans.BandedIntervalJoin)
     val expected = try naive.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
       finally spark.experimental.extraOptimizations = saved
-    graft.plans.BandedIntervalJoin.register(spark)
     val got = naive.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(expected.nonEmpty && expected.forall(_._2 == 0),
       "only the normal window may match")
@@ -308,7 +306,6 @@ class WarehouseOpsSpec extends AnyFunSuite {
       saved.filterNot(_ eq graft.plans.BandedIntervalJoin)
     val expected = try naive.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
       finally spark.experimental.extraOptimizations = saved
-    graft.plans.BandedIntervalJoin.register(spark)
     try {
       val got = naive.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
       assert(expected.nonEmpty)
