@@ -1,10 +1,12 @@
 package graft.etl
 
 import java.sql.Timestamp
+import java.util.UUID
 
 import scala.util.Random
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,10 +25,11 @@ import graft.model.{EngineError, EtlJobMessage, EtlStatus}
   * are reproduced exactly — this is parity mode, asserted by the oracle.
   *
   * Scale: the only driver-side values are the 1-row (count, max) reduce and
-  * the tiny config/status rows. The data path is scan → filter → write with
-  * no shuffle at all; the destination is partitioned by `export_date` so a
-  * 100 TB history stays prunable and an "exact" (idempotent) mode could
-  * overwrite just the affected date partitions.
+  * the tiny config/status rows. The data path is scan → filter → one
+  * REBALANCE shuffle on `export_date` → write; the destination is
+  * partitioned by `export_date` so a 100 TB history stays prunable, and
+  * Exact mode replaces just the affected date partitions
+  * ([[replacePartitions]]).
   */
 object EtlJob {
 
@@ -35,8 +38,9 @@ object EtlJob {
     *    `>= watermark` and the sink is append-only, so the boundary row
     *    duplicates on every consecutive run.
     *  - Exact — idempotent: strict `>` resume (boundary rows were already
-    *    loaded — they ARE the watermark) plus dynamic partition overwrite,
-    *    so both the steady state and crash-replay produce no duplicates.
+    *    loaded — they ARE the watermark) plus replacement of every date
+    *    partition the run touches ([[replacePartitions]]), so both the
+    *    steady state and crash-replay produce no duplicates.
     */
   sealed trait Mode
   case object Parity extends Mode
@@ -60,7 +64,7 @@ object EtlJob {
     * reference's response taxonomy. Like the reference (`:190-191`), a
     * non-200 response means the caller re-runs the whole message; Parity
     * mode then compounds the N1 boundary duplicates, Exact mode's
-    * partition overwrite makes the replay idempotent.
+    * partition replacement makes the replay idempotent.
     *
     * PARTIAL_SUCCESS is a RUNNER response code, deliberately NOT an
     * [[graft.model.EtlStatus]] enum value: the reference's status TABLE
@@ -86,7 +90,8 @@ object EtlJob {
     *
     * @param source       the client's billing table (any DataFrame with `watermarkCol`)
     * @param watermarkCol event-time column driving incrementality (`export_time` in the reference)
-    * @param destDir      destination parquet directory (append-only)
+    * @param destDir      destination parquet directory (appended to in Parity
+    *                     mode; its touched date partitions replaced in Exact)
     * @param jobTime      end of the extraction window — passed in (not now()) for determinism
     * @param transform    U1 hook (reference: billing_etl.py:301-303, identity by default)
     * @param maxRetries   W6 (reference: billing_etl.py:58)
@@ -150,7 +155,7 @@ object EtlJob {
 
         // S7 — write the destination, partitioned by event date so the
         // 100 TB layout prunes on time (SURVEY §4 physical-layout decision).
-        // Exact mode overwrites only the touched date partitions, making
+        // Exact mode replaces only the touched date partitions, making
         // crash-replay idempotent.
         if (stats.rows > 0) {
           // REBALANCE(export_date) before the partitioned write: without it
@@ -168,47 +173,22 @@ object EtlJob {
               out.write.mode(SaveMode.Append).partitionBy("export_date").parquet(destDir)
             case Exact =>
               // The window may start mid-partition (a run boundary is rarely
-              // date-aligned), and dynamic overwrite replaces WHOLE
-              // partitions — so rows of the boundary partition loaded by
-              // earlier runs (ts <= start) must be carried into the rewrite
-              // or they would be lost. The carry must not lazily read the
-              // path the overwrite rewrites, so its lineage is truncated by
-              // an EAGER localCheckpoint (block storage, MEMORY_AND_DISK)
-              // instead of the previous temp-parquet stage write +
-              // read-back — the same isolation minus one full disk round
-              // trip of the boundary partition (guide §5; round 18, 6/6
-              // paired cycles at 32 cores, OPTIMIZATION_r18.md §11). The
-              // carry is bounded by ONE date partition's earlier-run rows;
-              // blocks spill to executor disk if that outgrows memory, the
-              // same local-disk footing the temp stage used. Existence
-              // checks go through Hadoop FileSystem so HDFS/S3
-              // destinations behave identically to local paths (java.nio
-              // would answer false and silently drop the carry rows).
-              val carried =
-                if (!graft.util.Fs.exists(spark, destDir)) None
-                else {
-                  val c = spark.read.parquet(destDir)
-                    .where(col("export_date") >= to_date(lit(start)) &&
-                      col(watermarkCol) <= lit(start))
-                    .localCheckpoint() // eager: materialized before the overwrite
-                  if (c.isEmpty) {
-                    org.apache.spark.sql.graft.GraftSqlBridge.releaseLocalCheckpoint(c)
-                    None
-                  } else Some(c)
-                }
-              val full = carried.fold(out)(c => out.unionByName(c))
-              // per-write option, not session conf: concurrent runs on one
-              // session must not see each other's overwrite mode
-              try full.write.mode(SaveMode.Overwrite)
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("export_date").parquet(destDir)
-              finally {
-                // the carry blocks are dead once the overwrite committed (or
-                // failed — the retry loop rebuilds them); free them here
-                // rather than waiting on the ContextCleaner
-                carried.foreach(
-                  org.apache.spark.sql.graft.GraftSqlBridge.releaseLocalCheckpoint)
-              }
+              // date-aligned), and replacePartitions swaps WHOLE partitions —
+              // so rows of the boundary partition loaded by earlier runs
+              // (ts <= start) are carried into the rewrite or they would be
+              // lost. The carry is a lazy read: the write lands in a hidden
+              // stage and nothing in destDir changes until it has finished.
+              // Reading with the outgoing schema skips footer inference and
+              // returns no rows from a destination that holds no files yet
+              // (a failed first write leaves just the empty directory).
+              // The existence check goes through Hadoop FileSystem so
+              // HDFS/S3 destinations behave like local paths.
+              val full =
+                if (!graft.util.Fs.exists(spark, destDir)) out
+                else out.unionByName(spark.read.schema(out.schema).parquet(destDir)
+                  .where(col("export_date") >= to_date(lit(start)) &&
+                    col(watermarkCol) <= lit(start)))
+              replacePartitions(spark, full, "export_date", destDir)
           }
         }
 
@@ -246,4 +226,42 @@ object EtlJob {
   /** Read the destination back without the layout column. */
   def readDestination(spark: SparkSession, destDir: String): DataFrame =
     spark.read.parquet(destDir).drop("export_date")
+
+  /** Replace the `partitionCol` partitions of `destDir` that `df` holds
+    * rows for, leaving every other partition's files untouched. `df` is
+    * written, partitioned, into one hidden `_staging_<uuid>` directory
+    * inside `destDir` (underscore-prefixed, so no reader lists it; same
+    * filesystem, so the swap is a metadata move). `df` may read `destDir`
+    * itself: nothing there changes until the write has finished. A failed
+    * write deletes the stage and rethrows, leaving `destDir`'s partitions
+    * as they were (a missing `destDir` is left behind empty).
+    * Each staged `col=value` directory is then swapped in by deleting the
+    * old one and renaming the new one, the two steps Spark's
+    * dynamic-overwrite commit takes. A reader that lists a partition
+    * between those two steps finds it absent; nothing is atomic across
+    * partitions. Returns the replaced values as they appear in the
+    * directory names, sorted.
+    */
+  def replacePartitions(spark: SparkSession, df: DataFrame, partitionCol: String,
+                        destDir: String): Seq[String] = {
+    val destPath = new Path(destDir)
+    val stagePath = new Path(destPath, s"_staging_${UUID.randomUUID()}")
+    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
+    try df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(stagePath.toString)
+    catch {
+      case e: Throwable =>
+        fs.delete(stagePath, true)
+        throw e
+    }
+    val replaced = fs.listStatus(stagePath).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partitionCol="))
+      .map { st =>
+        val to = new Path(destPath, st.getPath.getName)
+        fs.delete(to, true)
+        require(fs.rename(st.getPath, to), s"partition swap rename failed: ${st.getPath} -> $to")
+        st.getPath.getName.stripPrefix(s"$partitionCol=")
+      }
+    fs.delete(stagePath, true) // _SUCCESS marker + emptied scaffold
+    replaced.sorted
+  }
 }

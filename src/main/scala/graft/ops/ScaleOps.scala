@@ -134,9 +134,12 @@ object ScaleOps {
   /** Compact a date-partitioned parquet destination: every incremental run
     * appends `shuffle.partitions` small files per touched partition, and at
     * 100 TB the accumulated small files dominate scan planning and NameNode
-    * pressure. Rewrites each partition into ~`targetBytes`-sized files via
-    * dynamic partition overwrite (readers see old-or-new, atomically per
-    * partition). Returns (files before, files after).
+    * pressure. Rewrites each partition into ~`targetBytes`-sized files and
+    * swaps them in with [[graft.etl.EtlJob.replacePartitions]]: the rows
+    * are encoded once, into a hidden stage inside the destination, and each
+    * partition then moves in by rename. A reader listing a partition
+    * between its delete and its rename finds it absent. Returns (files
+    * before, files after).
     *
     * At cluster scale this runs as periodic maintenance over recent
     * partitions only — date pruning keeps the rewrite proportional to the
@@ -152,51 +155,11 @@ object ScaleOps {
     // each listing is a full remote round-trip on HDFS/S3.
     val beforeFiles = graft.util.Fs.listParquetFiles(spark, destDir)
     val before = beforeFiles.size.toLong
-    val df = spark.read.parquet(destDir)
     val totalBytes = beforeFiles.map(_._2).sum
     val nParts = math.max(1, (totalBytes / targetBytes).toInt)
-    // stage through a copy: Spark cannot overwrite a path it reads. The
-    // stage lives INSIDE the destination (underscore-prefixed = hidden to
-    // every FileIndex/FileInputFormat listing, so concurrent readers never
-    // see it) — same filesystem by construction, which makes the swap
-    // below a METADATA move. The previous shape staged to a temp dir and
-    // then re-ran a full read+dynamic-overwrite WRITE of the staged copy:
-    // one entire decode+encode pass of the compaction window (2x the
-    // write bytes, guide §6) whose only purpose the per-partition rename
-    // serves for free.
-    val stage = s"$destDir/_compacting_${java.util.UUID.randomUUID().toString.take(8)}"
-    df.repartition(nParts, col(partitionCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(stage)
-    swapStagedPartitions(spark, stage, destDir)
+    graft.etl.EtlJob.replacePartitions(spark,
+      spark.read.parquet(destDir).repartition(nParts, col(partitionCol)), partitionCol, destDir)
     (before, graft.util.Fs.listParquetFiles(spark, destDir).size.toLong)
-  }
-
-  /** Swap staged partition directories into a destination: for every
-    * `col=value` directory under `stageDir`, drop the destination's
-    * version and RENAME the staged one in — pure filesystem metadata, no
-    * row is decoded or re-encoded (the staged files were already written
-    * in their final form). Readers interleaving with the swap see
-    * old-or-new per partition — the same per-partition granularity the
-    * previous dynamic-partition-overwrite commit gave, minus its full
-    * second write job. The stage directory must live on the destination's
-    * filesystem (callers stage under `$dest/_name`, hidden from listings
-    * by the underscore prefix); a cross-filesystem rename would fail, so
-    * this is asserted per rename.
-    */
-  private[graft] def swapStagedPartitions(spark: SparkSession, stageDir: String,
-                                          destDir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val stagePath = new org.apache.hadoop.fs.Path(stageDir)
-    val fs = stagePath.getFileSystem(conf)
-    val destPath = new org.apache.hadoop.fs.Path(destDir)
-    fs.listStatus(stagePath).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.contains("="))
-      .foreach { part =>
-        val to = new org.apache.hadoop.fs.Path(destPath, part.getName)
-        fs.delete(to, true)
-        require(fs.rename(part, to), s"partition swap rename failed: $part -> $to")
-      }
-    fs.delete(stagePath, true) // _SUCCESS marker + emptied scaffold
   }
 
   /** J4 (extension): supplier-revenue rollup where the fact→dim join runs
@@ -268,12 +231,11 @@ object ScaleOps {
   /** Idempotent backfill as a first-class oracled operator: a crashed
     * partial re-run APPENDS duplicate rows into two date partitions (the
     * at-least-once failure the reference's Parity mode tolerates, SURVEY
-    * §2.9 W5); the repair is a dynamic-partition-overwrite rewrite of
-    * EXACTLY the damaged window from the source of truth — untouched
-    * partitions keep their files, readers see old-or-new atomically per
-    * partition. The oracle recomputes the clean per-date rollup from the
-    * source, so the hash check proves the backfill restored the corpus
-    * exactly. This is the maintenance move a 100 TB date-partitioned store
+    * §2.9 W5); the repair rewrites EXACTLY the damaged window from the
+    * source of truth with [[graft.etl.EtlJob.replacePartitions]] —
+    * untouched partitions keep their files. The oracle recomputes the
+    * clean per-date rollup from the source, so the hash check proves the
+    * backfill restored the corpus exactly. This is the maintenance move a 100 TB date-partitioned store
     * lives by: repair windows are O(window), never O(history).
     */
   private def etlBackfillWindow(s: SparkSession, dir: String): DataFrame = {
@@ -291,10 +253,9 @@ object ScaleOps {
     // files they sit in.
     ev.unionByName(ev.where(col("export_date").isin(BackfillDates: _*)))
       .write.mode(SaveMode.Append).partitionBy("export_date").parquet(dest)
-    // the repair: dynamic overwrite of exactly the damaged window
-    ev.where(col("export_date").isin(BackfillDates: _*))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("export_date").parquet(dest)
+    // the repair: replace exactly the damaged window
+    graft.etl.EtlJob.replacePartitions(s,
+      ev.where(col("export_date").isin(BackfillDates: _*)), "export_date", dest)
     s.read.parquet(dest)
       .groupBy(col("export_date").cast("string").as("export_date"))
       .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
@@ -552,15 +513,13 @@ object ScaleOps {
 
   /** Copy-on-write deletion propagation through a date-partitioned store:
     * anti-join the tombstone keys out of EXACTLY the partitions that
-    * contain a hit, leaving every other partition's files untouched.
-    * Two-phase to keep the parquet overwrite safe (never read and
-    * overwrite the same files in one job): (1) one partition-pruned scan
-    * rewrites the affected partitions' survivors into a hidden staging
-    * dir inside the destination, (2) a per-partition directory RENAME
-    * swaps ONLY those partitions in (metadata moves on the destination's
-    * own filesystem — the survivors are encoded once, round 18; the
-    * previous dynamic-partition-overwrite swap re-read and re-wrote the
-    * staged survivors wholesale).
+    * contain a hit, leaving every other partition's files untouched. One
+    * partition-pruned scan writes the affected partitions' survivors
+    * through [[graft.etl.EtlJob.replacePartitions]] (encoded once into a
+    * hidden stage, then swapped in by per-partition rename); a partition
+    * that lost every row has nothing staged, so it is deleted after the
+    * swap. A reader listing an affected partition between its delete and
+    * its rename finds it absent.
     * Cost is O(affected partitions), never O(history) — the shape a
     * takedown/right-to-be-forgotten sweep needs on a 100 TB corpus, where
     * deletion demands arrive daily but touch a sliver of the store.
@@ -573,25 +532,14 @@ object ScaleOps {
       .select(col(partitionCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     if (affected.nonEmpty) {
-      // stage INSIDE the destination (hidden underscore dir, same
-      // filesystem) and swap by per-partition RENAME — the survivors are
-      // decoded and re-encoded exactly once; the previous shape paid a
-      // second full read+write of the staged survivors through dynamic
-      // partition overwrite (guide §6: the swap is metadata work, not a
-      // data pass). A fully-tombstoned partition simply has no staged dir
-      // and its destination dir is dropped below.
-      val stage = s"$dest/_deleting_${java.util.UUID.randomUUID().toString.take(8)}"
-      snapshot
+      val swapped = graft.etl.EtlJob.replacePartitions(s, snapshot
         .where(col(partitionCol).isin(affected: _*))
-        .join(broadcast(tombstones), Seq(keyCol), "left_anti")
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(stage)
-      val conf = s.sessionState.newHadoopConf()
+        .join(broadcast(tombstones), Seq(keyCol), "left_anti"), partitionCol, dest)
       val destPath = new org.apache.hadoop.fs.Path(dest)
-      val fs = destPath.getFileSystem(conf)
-      affected.foreach { v => // drop every hit partition; swap restores survivors
+      val fs = destPath.getFileSystem(s.sessionState.newHadoopConf())
+      affected.diff(swapped).foreach { v =>
         fs.delete(new org.apache.hadoop.fs.Path(destPath, s"$partitionCol=$v"), true)
       }
-      swapStagedPartitions(s, stage, dest)
     }
     affected
   }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * The engine's destination paths are HDFS/S3/GCS at cluster scale; any
   * `java.nio.file` check silently returns false there (the path is not a
   * local file), which in Exact mode would drop the boundary-partition carry
-  * rows on dynamic overwrite — data loss. Everything path-existence-shaped
-  * must go through here.
+  * rows from the partition replacement — data loss. Everything
+  * path-existence-shaped must go through here.
   *
   * Listing contract: a listing reads only each entry's path, length and
   * `isDirectory`. It never builds a `LocatedFileStatus` (what

@@ -85,7 +85,7 @@ class EtlJobSpec extends AnyFunSuite {
       sleeper = _ => (), mode = EtlJob.Exact)
     val dest = EtlJob.readDestination(spark, s"$root/dest")
     assert(dest.count() == events.where(col("ts") < lit(nextDay)).count(),
-      "the dynamic partition overwrite must carry the boundary partition's " +
+      "the partition replacement must carry the boundary partition's " +
         "earlier rows, not drop them")
     assert(dest.where(col("ts") < lit(noon) &&
       col("ts") >= lit(utcTs("2024-01-15 00:00:00"))).count() == morning)
@@ -130,7 +130,32 @@ class EtlJobSpec extends AnyFunSuite {
     EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7), end,
       sleeper = _ => (), mode = EtlJob.Exact)
     assert(EtlJob.readDestination(spark, s"$root/dest").count() == expected,
-      "dynamic partition overwrite makes replay idempotent")
+      "partition replacement makes replay idempotent")
+  }
+
+  test("exact mode: a write that fails in a task once does not wedge the tenant") {
+    // A write job that fails after it was set up leaves an empty destination
+    // directory behind; the retry's boundary carry must read that as no
+    // rows, not fail on it. With AQE the failing filter would run while the
+    // rebalance stage is materialized, before the write job is set up, so
+    // this session runs without it: the failure then lands where a failed
+    // write-stage task (a lost executor, a full disk) lands.
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    val (meta, root) = freshMeta(7)
+    val mid = utcTs("2024-01-15 00:00:00")
+    val failOnce = udf { (_: java.sql.Timestamp) =>
+      if (EtlJobSpec.armed.getAndSet(false)) throw new RuntimeException("task failure")
+      true
+    }
+    EtlJobSpec.armed.set(true)
+    val res = EtlJob.run(noAqe, meta, Tables.load(noAqe, Sf0001, "events"), "ts",
+      s"$root/dest", EtlJobMessage(7), mid, transform = _.where(failOnce(col("ts"))),
+      sleeper = _ => (), mode = EtlJob.Exact)
+    assert(!EtlJobSpec.armed.get(), "the first write must have failed in a task")
+    assert(res.map(_.attempts) == Right(2), s"$res")
+    assert(EtlJob.readDestination(spark, s"$root/dest").count() ==
+      events.where(col("ts") < lit(mid)).count())
   }
 
   test("partitioned write coalesces each date to O(1) files (rebalance)") {
@@ -220,4 +245,9 @@ class EtlJobSpec extends AnyFunSuite {
     assert(res.toOption.get.attempts == 2)
     assert(meta.lastSuccessWatermark(7, "proj_7").isDefined)
   }
+}
+
+object EtlJobSpec {
+  /** Set by a test, cleared by the first task that reads it. */
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

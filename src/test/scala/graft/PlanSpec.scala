@@ -363,6 +363,16 @@ class PlanSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"session-conf overwrite mode in src/main: $offenders")
   }
 
+  test("destination partitions are replaced one way") {
+    // EtlJob.replacePartitions is the only way a destination partition is
+    // replaced, and the Exact carry reads the destination lazily
+    val overwrite = mainSourcesContaining("partitionOverwriteMode")
+    assert(overwrite.isEmpty, s"dynamic partition overwrite in src/main: $overwrite")
+    val etlCheckpoints = mainSourcesContaining("localCheckpoint")
+      .filter(_.startsWith("src/main/scala/graft/etl/"))
+    assert(etlCheckpoints.isEmpty, s"localCheckpoint in the ETL job: $etlCheckpoints")
+  }
+
   test("analytic joins: fixed dims broadcast, no cartesian, distinct via Expand") {
     // q5: nation/region are fixed-cardinality at any SF — their broadcasts
     // are pinned; everything else is AQE's call. No plan may go cartesian.

@@ -172,17 +172,35 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(kept >= exact, "bloom must never drop a true match")
   }
 
-  test("tombstone sweep rewrites only partitions with hits; survivors intact") {
+  /** Three day-partitions; user 666 appears only on day 2, and day 3
+    * holds one row (user 103).
+    */
+  private def threeDayDest(prefix: String): String = {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     import sp.implicits._
-    val dest = tmpDir("tomb_prune_")
-    // three day-partitions; the tombstoned user appears ONLY on day 2
-    val rows = Seq(
-      (1L, 100L, "2024-01-01"), (2L, 101L, "2024-01-01"),
+    val dest = tmpDir(prefix)
+    Seq((1L, 100L, "2024-01-01"), (2L, 101L, "2024-01-01"),
       (3L, 666L, "2024-01-02"), (4L, 102L, "2024-01-02"),
       (5L, 103L, "2024-01-03"))
       .toDF("event_id", "user_id", "export_date")
-    rows.write.mode("overwrite").partitionBy("export_date").parquet(dest)
+      .write.mode("overwrite").partitionBy("export_date").parquet(dest)
+    dest
+  }
+
+  /** Every path under `dir`, relative to it. */
+  private def listing(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map(p => root.relativize(p).toString).toSet
+    finally walk.close()
+  }
+
+  test("tombstone sweep rewrites only partitions with hits; survivors intact") {
+    implicit val sp: org.apache.spark.sql.SparkSession = spark
+    import sp.implicits._
+    // the tombstoned user appears ONLY on day 2
+    val dest = threeDayDest("tomb_prune_")
     def files(day: String): Map[String, Long] = {
       val d = new java.io.File(s"$dest/export_date=$day")
       d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -198,6 +216,35 @@ class ScaleOpsSpec extends AnyFunSuite {
     val after = spark.read.parquet(dest)
     assert(after.where(col("user_id") === 666L).isEmpty, "tombstoned rows must be gone")
     assert(after.count() == 4, "exactly the tombstoned row deleted")
+  }
+
+  test("tombstone sweep drops a partition that lost every row; no stage left") {
+    implicit val sp: org.apache.spark.sql.SparkSession = spark
+    import sp.implicits._
+    val dest = threeDayDest("tomb_emptied_")
+    val day1 = listing(s"$dest/export_date=2024-01-01")
+    val affected = ScaleOps.deleteFromDatePartitions(
+      spark, dest, "export_date", Seq(666L, 103L).toDF("user_id"), "user_id")
+    assert(affected == Seq("2024-01-02", "2024-01-03"))
+    assert(!new java.io.File(s"$dest/export_date=2024-01-03").exists(),
+      "the emptied partition must be gone")
+    assert(listing(s"$dest/export_date=2024-01-01") == day1,
+      "the untouched partition keeps its file names")
+    val hidden = new java.io.File(dest).listFiles().filter(f => f.isDirectory && f.getName.startsWith("_"))
+    assert(hidden.isEmpty, s"leftover under dest: ${hidden.toSeq}")
+    assert(spark.read.parquet(dest).select("event_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 4L))
+  }
+
+  test("a stage write that fails in a task leaves the destination as it was") {
+    val dest = threeDayDest("replace_failed_")
+    val before = listing(dest)
+    val boom = udf { (id: Long) => require(id < 0, "task failure"); true }
+    intercept[Exception] {
+      graft.etl.EtlJob.replacePartitions(spark,
+        spark.read.parquet(dest).where(boom(col("event_id"))), "export_date", dest)
+    }
+    assert(listing(dest) == before, "no stage directory may be left behind")
   }
 
   test("manifest fingerprint is tamper-evident and localizes the damaged day") {
