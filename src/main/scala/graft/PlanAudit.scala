@@ -2,7 +2,9 @@ package graft
 
 /** Dev audit main: prints every registered query whose physical plan
   * contains a CartesianProduct or BroadcastNestedLoopJoin (plus plan
-  * errors). Expected hits, all documented:
+  * errors). A hygienic query is audited through its pipeline
+  * (`QueryHygiene.pipelines`), since the plan it serves is an opaque
+  * checkpoint scan. Expected hits, all documented:
   *  - brute-force truth paths: ann_bruteforce_topk (the correctness
   *    baseline), ann_lsh_recall / ann_ivf_recall (they embed that baseline
   *    as truth), dedup_ngram_jaccard (the sampled ground-truth verifier);
@@ -17,7 +19,9 @@ package graft
   *    ledger summary), q22_dormant_rich_anti (the 1-row positive-balance
   *    threshold), stats_countmin / stream_countmin (the 1-row CMS grid
   *    probed by the exact top-10), stats_kmv_setops (the 1-row sketch
-  *    and exact-side aggregates composed into the single audit row).
+  *    and exact-side aggregates composed into the single audit row),
+  *    basket_lift (the 1-row order total), dedup_simhash (the 1-row
+  *    audit annotation; PlanSpec pins it as the only nested loop).
   * Anything else appearing here is a regression.
   */
 object PlanAudit {
@@ -29,7 +33,14 @@ object PlanAudit {
     val shuffles = scala.collection.mutable.LinkedHashMap[String, Int]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val p = fn(spark, sf).queryExecution.executedPlan.toString
+        // a hygienic query's served plan is an opaque checkpoint scan:
+        // audit its pipeline instead
+        val p = ops.QueryHygiene.pipelines.get(name) match {
+          case Some(pipeline) =>
+            val st = pipeline(spark, sf)
+            try st.plan.queryExecution.executedPlan.toString finally st.release()
+          case None => fn(spark, sf).queryExecution.executedPlan.toString
+        }
         val cart = p.contains("CartesianProduct")
         val bnl = p.contains("BroadcastNestedLoopJoin")
         if (cart || bnl) println(s"AUDIT $name cartesian=$cart bnl=$bnl")

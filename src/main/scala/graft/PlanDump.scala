@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev measurement main (optimization guide §1.1/§1.4/§7.2): dump the
   * EXECUTED physical plan (`explain("formatted")`, AQE-final) for named
@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    coalesced reads), not the `isFinalPlan=false` guess;
   *  - hygienic queries return a materialized local checkpoint whose outer
   *    plan is an opaque `Scan ExistingRDD`; for those the dump uses the
-  *    op's `*Staged` accessor and prints the real pipeline plan (the same
-  *    plan PlanSpec pins), releasing the stage's caches afterwards.
+  *    op's pipeline (`QueryHygiene.pipelines`) and prints the real plan
+  *    (the same plan PlanSpec pins), releasing the stage's caches afterwards.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> [query ...]
   * (no query names = every registered query). Data dir from
@@ -23,19 +23,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * PlanAudit.
   */
 object PlanDump {
-
-  /** Inner-pipeline accessors for hygienic queries (outer plan is opaque). */
-  private val stagedAccessors: Map[String, (SparkSession, String) => ops.QueryHygiene.Staged] =
-    Map(
-      "basket_lift" -> (ops.ProductAnalyticsOps.basketLiftStaged _),
-      "dedup_simhash" -> (ops.DedupOps.dedupSimhashStaged _),
-      "dedup_minhash_lsh" -> (ops.DedupOps.dedupMinhashLshStaged _),
-      "dedup_ngram_jaccard" -> (ops.DedupOps.dedupNgramJaccardStaged _),
-      "dedup_containment" -> (ops.DedupOps.dedupContainmentStaged _),
-      "dedup_incremental" -> (ops.IncrementalDedupOps.dedupIncrementalStaged _),
-      "graph_triangles" -> (ops.ClusterOps.graphTrianglesStaged _),
-      "stats_kmv_setops" -> (ops.CoverageOps.statsKmvSetopsStaged _)
-    )
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [query ...]")
@@ -54,7 +41,7 @@ object PlanDump {
     if (missing.nonEmpty) System.err.println(s"[plandump] unknown queries: ${missing.mkString(", ")}")
     selected.filter(SparkEntry.queries.contains).foreach { name =>
       try {
-        val (df, release): (DataFrame, () => Unit) = stagedAccessors.get(name) match {
+        val (df, release): (DataFrame, () => Unit) = ops.QueryHygiene.pipelines.get(name) match {
           case Some(acc) =>
             val st = acc(spark, sfDir)
             (st.plan, () => st.release())

@@ -1,12 +1,15 @@
 package graft.etl
 
+import java.io.{FileNotFoundException, IOException}
 import java.sql.Timestamp
+import java.time.{Instant, ZoneId}
+import java.time.temporal.ChronoUnit
 import java.util.UUID
 
 import scala.util.Random
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,9 +30,9 @@ import graft.model.{EngineError, EtlJobMessage, EtlStatus}
   * Scale: the only driver-side values are the 1-row (count, max) reduce and
   * the tiny config/status rows. The data path is scan → filter → one
   * REBALANCE shuffle on `export_date` → write; the destination is
-  * partitioned by `export_date` so a 100 TB history stays prunable, and
-  * Exact mode replaces just the affected date partitions
-  * ([[replacePartitions]]).
+  * partitioned by `export_date` so a 100 TB history stays prunable. Both
+  * modes only append: no run reads, rewrites or deletes a committed row,
+  * so each run writes only its own rows.
   */
 object EtlJob {
 
@@ -38,9 +41,13 @@ object EtlJob {
     *    `>= watermark` and the sink is append-only, so the boundary row
     *    duplicates on every consecutive run.
     *  - Exact — idempotent: strict `>` resume (boundary rows were already
-    *    loaded — they ARE the watermark) plus replacement of every date
-    *    partition the run touches ([[replacePartitions]]), so both the
-    *    steady state and crash-replay produce no duplicates.
+    *    loaded — they ARE the watermark) plus an append whose files are
+    *    named after the window ([[appendRun]]). Every attempt first deletes
+    *    the files an unfinished attempt at the same window left, so both
+    *    the steady state and crash-replay produce no duplicates.
+    *    Trade-offs: a reader can see a run's files before its SUCCESS row
+    *    (as in Parity mode, and as with the reference's batched inserts),
+    *    and a crashed attempt's files stay visible until it is replayed.
     */
   sealed trait Mode
   case object Parity extends Mode
@@ -64,7 +71,7 @@ object EtlJob {
     * reference's response taxonomy. Like the reference (`:190-191`), a
     * non-200 response means the caller re-runs the whole message; Parity
     * mode then compounds the N1 boundary duplicates, Exact mode's
-    * partition replacement makes the replay idempotent.
+    * roll-back by name makes the replay idempotent.
     *
     * PARTIAL_SUCCESS is a RUNNER response code, deliberately NOT an
     * [[graft.model.EtlStatus]] enum value: the reference's status TABLE
@@ -90,8 +97,8 @@ object EtlJob {
     *
     * @param source       the client's billing table (any DataFrame with `watermarkCol`)
     * @param watermarkCol event-time column driving incrementality (`export_time` in the reference)
-    * @param destDir      destination parquet directory (appended to in Parity
-    *                     mode; its touched date partitions replaced in Exact)
+    * @param destDir      destination parquet directory, appended to in both
+    *                     modes (Exact names its files after the window)
     * @param jobTime      end of the extraction window — passed in (not now()) for determinism
     * @param transform    U1 hook (reference: billing_etl.py:301-303, identity by default)
     * @param maxRetries   W6 (reference: billing_etl.py:58)
@@ -155,41 +162,23 @@ object EtlJob {
 
         // S7 — write the destination, partitioned by event date so the
         // 100 TB layout prunes on time (SURVEY §4 physical-layout decision).
-        // Exact mode replaces only the touched date partitions, making
-        // crash-replay idempotent.
-        if (stats.rows > 0) {
-          // REBALANCE(export_date) before the partitioned write: without it
-          // every task writes a sliver of every date it saw (tasks × dates
-          // small files per run — a compaction debt the destination pays on
-          // every read). The AQE rebalance coalesces each date to ~one
-          // advisory-sized file on small runs AND splits a hot date across
-          // tasks on huge ones — the shape a 100 TB daily increment needs.
-          // Plain repartition(col) would pin one task per date (hot-date
-          // bottleneck); no-AQE sessions degrade to the pre-rebalance plan.
-          val out = transformed.withColumn("export_date", to_date(col(watermarkCol)))
-            .hint("rebalance", col("export_date"))
-          mode match {
-            case Parity =>
+        // REBALANCE(export_date) before the partitioned write: without it
+        // every task writes a sliver of every date it saw (tasks × dates
+        // small files per run — a compaction debt the destination pays on
+        // every read). The AQE rebalance coalesces each date to ~one
+        // advisory-sized file on small runs AND splits a hot date across
+        // tasks on huge ones — the shape a 100 TB daily increment needs.
+        // Plain repartition(col) would pin one task per date (hot-date
+        // bottleneck); no-AQE sessions degrade to the pre-rebalance plan.
+        val out = transformed.withColumn("export_date", to_date(col(watermarkCol)))
+          .hint("rebalance", col("export_date"))
+        mode match {
+          case Parity =>
+            if (stats.rows > 0)
               out.write.mode(SaveMode.Append).partitionBy("export_date").parquet(destDir)
-            case Exact =>
-              // The window may start mid-partition (a run boundary is rarely
-              // date-aligned), and replacePartitions swaps WHOLE partitions —
-              // so rows of the boundary partition loaded by earlier runs
-              // (ts <= start) are carried into the rewrite or they would be
-              // lost. The carry is a lazy read: the write lands in a hidden
-              // stage and nothing in destDir changes until it has finished.
-              // Reading with the outgoing schema skips footer inference and
-              // returns no rows from a destination that holds no files yet
-              // (a failed first write leaves just the empty directory).
-              // The existence check goes through Hadoop FileSystem so
-              // HDFS/S3 destinations behave like local paths.
-              val full =
-                if (!graft.util.Fs.exists(spark, destDir)) out
-                else out.unionByName(spark.read.schema(out.schema).parquet(destDir)
-                  .where(col("export_date") >= to_date(lit(start)) &&
-                    col(watermarkCol) <= lit(start)))
-              replacePartitions(spark, full, "export_date", destDir)
-          }
+          case Exact =>
+            appendRun(spark, if (stats.rows > 0) Some(out) else None, destDir,
+              message.org_id, start)
         }
 
         onBeforeCommit()
@@ -227,6 +216,76 @@ object EtlJob {
   def readDestination(spark: SparkSession, destDir: String): DataFrame =
     spark.read.parquet(destDir).drop("export_date")
 
+  /** Exact mode's load: an append under the window's tag
+    * `run-o<org>-w<start µs>`, after a roll-back by that tag.
+    *
+    * Every attempt at a window that never reached SUCCESS resumes from the
+    * same `start` (the max SUCCESS watermark), while a committed non-empty
+    * run moves that watermark past its own start, so no committed file
+    * carries the tag being loaded (a committed empty run writes no files).
+    * Roll-back deletes what an unfinished attempt at this window may have
+    * left: the stage `destDir/_staging_<tag>` and every `<tag>-*` file in
+    * the `export_date` partitions dated on or after `start` (an attempt
+    * writes no row before its window). Then `out`, when there is one, is
+    * written into that stage and each staged file moves into its partition
+    * as `<tag>-<name>` ([[publishFiles]]); the emptied stage is deleted.
+    * No committed file is read, rewritten or deleted. The roll-back only
+    * finds files named after the window, so a maintenance writer
+    * ([[replacePartitions]]) must not run between a crashed attempt and
+    * its replay: it would re-encode the crashed rows into untagged files.
+    */
+  private def appendRun(spark: SparkSession, out: Option[DataFrame], destDir: String,
+                        orgId: Int, start: Timestamp): Unit = {
+    val tag = s"run-o$orgId-w${ChronoUnit.MICROS.between(Instant.EPOCH, start.toInstant)}"
+    // to_date(start) in the session time zone, spelled as the partition
+    // directories spell it; the first window has no lower bound
+    val fromDate = if (start == IncrementalExtract.Epoch) "" else start.toInstant
+      .atZone(ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)).toLocalDate.toString
+    val destPath = new Path(destDir)
+    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val stagePath = new Path(destPath, s"_staging_$tag")
+    def list(p: Path) = try fs.listStatus(p).toSeq catch { case _: FileNotFoundException => Nil }
+    fs.delete(stagePath, true)
+    list(destPath)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("export_date=") &&
+        st.getPath.getName.stripPrefix("export_date=") >= fromDate)
+      .flatMap(st => list(st.getPath))
+      .filter(_.getPath.getName.startsWith(s"$tag-"))
+      .foreach(st => fs.delete(st.getPath, false))
+    out.foreach { df =>
+      df.write.mode(SaveMode.Overwrite).partitionBy("export_date").parquet(stagePath.toString)
+      publishFiles(fs, stagePath, destPath, tag)
+      fs.delete(stagePath, true)
+    }
+  }
+
+  /** Move every `part-` file staged under `stageDir`, at its top level or
+    * in a `col=value` subdirectory, into the same place under `destDir` as
+    * `<prefix>-<name>`. One rename per file — a metadata move on HDFS and
+    * local disk. Renames are idempotent on these deterministic names: a
+    * failed rename whose target exists was done by a racing publisher of
+    * the same stage, and counts as done. Returns the published names
+    * relative to `destDir`.
+    */
+  def publishFiles(fs: FileSystem, stageDir: Path, destDir: Path,
+                   prefix: String): Seq[String] = {
+    def walk(from: Path, into: Path, rel: String): Seq[String] = {
+      fs.mkdirs(into)
+      fs.listStatus(from).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory && name.contains("=")) walk(st.getPath, new Path(into, name), s"$rel$name/")
+        else if (st.isDirectory || !name.startsWith("part-")) Nil
+        else {
+          val to = new Path(into, s"$prefix-$name")
+          if (!fs.rename(st.getPath, to) && !fs.exists(to))
+            throw new IOException(s"publish failed for ${st.getPath}")
+          Seq(s"$rel${to.getName}")
+        }
+      }
+    }
+    walk(stageDir, destDir, "")
+  }
+
   /** Replace the `partitionCol` partitions of `destDir` that `df` holds
     * rows for, leaving every other partition's files untouched. `df` is
     * written, partitioned, into one hidden `_staging_<uuid>` directory
@@ -240,7 +299,8 @@ object EtlJob {
     * dynamic-overwrite commit takes. A reader that lists a partition
     * between those two steps finds it absent; nothing is atomic across
     * partitions. Returns the replaced values as they appear in the
-    * directory names, sorted.
+    * directory names, sorted. Only the maintenance writers (compaction,
+    * tombstone deletes, backfill) replace partitions; ETL runs append.
     */
   def replacePartitions(spark: SparkSession, df: DataFrame, partitionCol: String,
                         destDir: String): Seq[String] = {

@@ -109,19 +109,8 @@ object TextFunctions {
   def hamming(a: Column, b: Column): Column =
     call_function("bit_count", a.bitwiseXOR(b))
 
-  /** Blocked simhash keys: split the 60-bit hash into `blocks` equal chunks.
-    * By pigeonhole, two hashes within hamming distance `blocks - 1` share at
-    * least one identical block — so block-equality bucketing finds all pairs
-    * up to that radius without any pairwise scan.
-    */
-  def simhashBlocks(sim: Column, blocks: Int): Column = {
-    val width = 60 / blocks
-    val mask = (1L << width) - 1
-    transform(sequence(lit(0), lit(blocks - 1)),
-      b => call_function("shiftright", sim, b * width).bitwiseAND(mask))
-  }
-
-  /** Block-PAIR probe keys: one key per unordered block pair (i<j), each the
+  /** Block-PAIR probe keys: the 60-bit hash splits into `blocks` equal
+    * chunks, and there is one key per unordered block pair (i<j), each the
     * concatenation of the two block values. h bit errors dirty at most h
     * blocks, so two hashes within hamming ≤ blocks−2 share at least one
     * clean pair → equality join on (pair_idx, key) finds them. Doubling the

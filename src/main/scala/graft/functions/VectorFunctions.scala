@@ -20,24 +20,4 @@ object VectorFunctions {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Sign-LSH signature: `nPlanes` pseudo-random hyperplanes (components
-    * derived deterministically from xxhash64, uniform in [-1, 1]); bit p of
-    * the signature = sign of the projection on plane p. Scale-invariant
-    * (sign(k·v·h) = sign(v·h) for k > 0), so scaled duplicates always share
-    * a bucket.
-    */
-  def signLshSignature(vec: Column, nPlanes: Int, dim: Int, seed: String = "hp"): Column = {
-    def planeComponent(p: Int, j: Column): Column =
-      (pmod(call_function("xxhash64", concat(lit(s"${seed}_${p}_"), j.cast("string"))),
-        lit(1000001L)).cast("double") / 500000.0) - 1.0
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), lit(dim - 1)),
-          (x, j) => x.cast("double") * planeComponent(p, j)),
-        lit(0.0), (s, v) => s + v)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 }

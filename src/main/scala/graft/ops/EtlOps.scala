@@ -142,8 +142,10 @@ object EtlOps {
   }
 
   /** Exact (idempotent) mode: same two-run schedule, strict-`>` resume +
-    * dynamic partition overwrite ⇒ destination equals the source window
-    * with NO boundary duplicate (SURVEY N1's "fix via range-overwrite").
+    * append of each run's own rows under a window-scoped file name ⇒
+    * destination equals the source window with NO boundary duplicate
+    * (SURVEY N1). A replay of an unfinished window first deletes that
+    * window's files by name, so it never loads a row twice.
     */
   private def etlRunDestExact(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Cache hygiene for queries whose RETURNED plan references query-local
   * `.cache()`d intermediates (self-join pipelines, multi-branch rollups).
@@ -44,6 +44,21 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * switch to the reliable checkpointer or write-through-a-path instead.
   */
 private[graft] object QueryHygiene {
+
+  /** The registry queries served as a [[Staged.hygienic]] view, mapped to
+    * their lazily-built pipelines. A served query's physical plan is the
+    * materialized checkpoint's opaque `Scan ExistingRDD`, so the plan
+    * mains (PlanAudit, PlanDump) inspect these pipelines instead.
+    */
+  val pipelines: Map[String, (SparkSession, String) => Staged] = Map(
+    "basket_lift" -> (ProductAnalyticsOps.basketLiftStaged _),
+    "dedup_simhash" -> (DedupOps.dedupSimhashStaged _),
+    "dedup_minhash_lsh" -> (DedupOps.dedupMinhashLshStaged _),
+    "dedup_ngram_jaccard" -> (DedupOps.dedupNgramJaccardStaged _),
+    "dedup_containment" -> (DedupOps.dedupContainmentStaged _),
+    "dedup_incremental" -> (IncrementalDedupOps.dedupIncrementalStaged _),
+    "graph_triangles" -> (ClusterOps.graphTrianglesStaged _),
+    "stats_kmv_setops" -> (CoverageOps.statsKmvSetopsStaged _))
 
   /** A lazily-built query pipeline plus the query-local caches its plan
     * references. `plan` is what PlanSpec inspects; `hygienic()` is what

@@ -141,6 +141,11 @@ object ScaleOps {
     * between its delete and its rename finds it absent. Returns (files
     * before, files after).
     *
+    * Precondition on an Exact-mode destination: every tenant's last run
+    * committed. Compaction writes untagged files, so a crashed Exact
+    * attempt's rows compacted before its replay could no longer be rolled
+    * back by name and would load twice ([[graft.etl.EtlJob.Mode]]).
+    *
     * At cluster scale this runs as periodic maintenance over recent
     * partitions only — date pruning keeps the rewrite proportional to the
     * compaction window, not the table's history.
@@ -236,7 +241,10 @@ object ScaleOps {
     * untouched partitions keep their files. The oracle recomputes the
     * clean per-date rollup from the source, so the hash check proves the
     * backfill restored the corpus exactly. This is the maintenance move a 100 TB date-partitioned store
-    * lives by: repair windows are O(window), never O(history).
+    * lives by: repair windows are O(window), never O(history). Like
+    * compaction, it writes untagged files, so on an Exact-mode
+    * destination it runs only while every tenant's last run committed
+    * ([[compactDatePartitions]]).
     */
   private def etlBackfillWindow(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.load(s, dir, "events").select(
@@ -519,7 +527,9 @@ object ScaleOps {
     * hidden stage, then swapped in by per-partition rename); a partition
     * that lost every row has nothing staged, so it is deleted after the
     * swap. A reader listing an affected partition between its delete and
-    * its rename finds it absent.
+    * its rename finds it absent. Like compaction, it writes untagged
+    * files, so on an Exact-mode destination it runs only while every
+    * tenant's last run committed ([[compactDatePartitions]]).
     * Cost is O(affected partitions), never O(history) — the shape a
     * takedown/right-to-be-forgotten sweep needs on a 100 TB corpus, where
     * deletion demands arrive daily but touch a sliver of the store.
@@ -781,20 +791,12 @@ object ScaleOps {
     if (n != claimedRows)
       Left(s"audit rejected batch $batchId: staged=$n claimed=$claimedRows")
     else {
-      val conf = s.sessionState.newHadoopConf()
       val dest = new org.apache.hadoop.fs.Path(destDir)
-      val fs = dest.getFileSystem(conf)
-      fs.mkdirs(dest)
-      val src = new org.apache.hadoop.fs.Path(stageDir)
-      val published = fs.listStatus(src)
-        .filter(_.getPath.getName.startsWith("part-")).map { f =>
-          val tgt = new org.apache.hadoop.fs.Path(dest, s"$batchId-${f.getPath.getName}")
-          // a failed rename whose target exists was won by a racing
-          // publisher of the same staged batch — identical outcome
-          if (!fs.rename(f.getPath, tgt) && !fs.exists(tgt))
-            throw new java.io.IOException(s"publish failed for ${f.getPath}")
-          tgt.getName
-        }
+      val fs = dest.getFileSystem(s.sessionState.newHadoopConf())
+      // target names derive from (batchId, staged part name): a racing
+      // publisher of the same staged batch moves the same files
+      val published = graft.etl.EtlJob.publishFiles(fs,
+        new org.apache.hadoop.fs.Path(stageDir), dest, batchId)
       // snapshot ledger: one manifest per published batch (the `_` prefix
       // keeps Spark's reader from scanning it as data). Time travel reads
       // the union of manifests ≤ the wanted snapshot — metadata only.

@@ -9,10 +9,11 @@ import org.apache.spark.sql.SparkSession
 /** Storage-agnostic filesystem probes via Hadoop's FileSystem API.
   *
   * The engine's destination paths are HDFS/S3/GCS at cluster scale; any
-  * `java.nio.file` check silently returns false there (the path is not a
-  * local file), which in Exact mode would drop the boundary-partition carry
-  * rows from the partition replacement — data loss. Everything
-  * path-existence-shaped must go through here.
+  * `java.nio.file` probe silently finds nothing there (the path is not a
+  * local file), which in Exact mode would let a roll-back miss a crashed
+  * attempt's files and load its rows twice. Everything
+  * path-existence-shaped goes through Hadoop's FileSystem, here or
+  * directly.
   *
   * Listing contract: a listing reads only each entry's path, length and
   * `isDirectory`. It never builds a `LocatedFileStatus` (what

@@ -85,7 +85,7 @@ class EtlJobSpec extends AnyFunSuite {
       sleeper = _ => (), mode = EtlJob.Exact)
     val dest = EtlJob.readDestination(spark, s"$root/dest")
     assert(dest.count() == events.where(col("ts") < lit(nextDay)).count(),
-      "the partition replacement must carry the boundary partition's " +
+      "the second run must append beside the boundary partition's " +
         "earlier rows, not drop them")
     assert(dest.where(col("ts") < lit(noon) &&
       col("ts") >= lit(utcTs("2024-01-15 00:00:00"))).count() == morning)
@@ -125,18 +125,18 @@ class EtlJobSpec extends AnyFunSuite {
     val expected = events.where(col("ts") < lit(end)).count()
     assert(EtlJob.readDestination(spark, s"$root/dest").count() == expected,
       "strict-> resume must not replay the watermark row")
-    // crash-replay: rerunning the second window verbatim must overwrite its
-    // date partitions, not append to them
+    // re-running the committed second window verbatim resumes past it
+    // and must load nothing again
     EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7), end,
       sleeper = _ => (), mode = EtlJob.Exact)
     assert(EtlJob.readDestination(spark, s"$root/dest").count() == expected,
-      "partition replacement makes replay idempotent")
+      "a re-run of a committed window is idempotent")
   }
 
   test("exact mode: a write that fails in a task once does not wedge the tenant") {
-    // A write job that fails after it was set up leaves an empty destination
-    // directory behind; the retry's boundary carry must read that as no
-    // rows, not fail on it. With AQE the failing filter would run while the
+    // A write job that fails after it was set up leaves a partial stage
+    // behind; the retry must roll it back, not fail on it or publish it.
+    // With AQE the failing filter would run while the
     // rebalance stage is materialized, before the write job is set up, so
     // this session runs without it: the failure then lands where a failed
     // write-stage task (a lost executor, a full disk) lands.
@@ -156,6 +156,27 @@ class EtlJobSpec extends AnyFunSuite {
     assert(res.map(_.attempts) == Right(2), s"$res")
     assert(EtlJob.readDestination(spark, s"$root/dest").count() ==
       events.where(col("ts") < lit(mid)).count())
+  }
+
+  test("exact mode: compaction between committed runs leaves a later crash replayable") {
+    // the order maintenance may run in: after every run committed. The
+    // crashed fourth run's files keep their window's name, so its replay
+    // rolls them back beside the compacted, untagged files.
+    val (meta, root) = freshMeta(7)
+    val dest = s"$root/dest"
+    def run(jobTime: String, onBeforeCommit: () => Unit = () => ()) =
+      EtlJob.run(spark, meta, events, "ts", dest, EtlJobMessage(7), utcTs(jobTime),
+        sleeper = _ => (), maxRetries = 1, mode = EtlJob.Exact, onBeforeCommit = onBeforeCommit)
+    Seq("2024-01-05 12:00:00", "2024-01-10 12:00:00", "2024-01-15 12:00:00")
+      .foreach(t => assert(run(t).isRight, t))
+    ops.ScaleOps.compactDatePartitions(spark, dest)
+    val end = "2024-01-20 12:00:00"
+    assert(run(end, () => throw new RuntimeException("simulated crash before commit")).isLeft)
+    assert(run(end).isRight)
+    val loaded = EtlJob.readDestination(spark, dest)
+    val window = events.where(col("ts") < lit(utcTs(end)))
+    assert(loaded.count() == window.count())
+    assert(loaded.exceptAll(window).isEmpty && window.exceptAll(loaded).isEmpty)
   }
 
   test("partitioned write coalesces each date to O(1) files (rebalance)") {

@@ -365,12 +365,25 @@ class PlanSpec extends AnyFunSuite {
 
   test("destination partitions are replaced one way") {
     // EtlJob.replacePartitions is the only way a destination partition is
-    // replaced, and the Exact carry reads the destination lazily
+    // replaced (no dynamic overwrite), and the ETL job checkpoints nothing
     val overwrite = mainSourcesContaining("partitionOverwriteMode")
     assert(overwrite.isEmpty, s"dynamic partition overwrite in src/main: $overwrite")
     val etlCheckpoints = mainSourcesContaining("localCheckpoint")
       .filter(_.startsWith("src/main/scala/graft/etl/"))
     assert(etlCheckpoints.isEmpty, s"localCheckpoint in the ETL job: $etlCheckpoints")
+  }
+
+  test("ETL runs only append; maintenance writers alone replace partitions") {
+    // Exact mode appends under a window-scoped name and rolls back by name,
+    // so no run re-reads committed rows into its write, and
+    // replacePartitions serves compaction, tombstone deletes and backfill
+    val callers = mainSourcesContaining("replacePartitions(").filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))
+      src.split('\n').exists(l => l.contains("replacePartitions(") && !l.contains("def replacePartitions("))
+    }
+    assert(callers == Set("src/main/scala/graft/ops/ScaleOps.scala"), callers)
+    val unions = mainSourcesContaining("unionByName").filter(_.startsWith("src/main/scala/graft/etl/"))
+    assert(unions.isEmpty, s"unionByName in the ETL job: $unions")
   }
 
   test("analytic joins: fixed dims broadcast, no cartesian, distinct via Expand") {
