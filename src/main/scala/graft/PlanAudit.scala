@@ -1,52 +1,138 @@
 package graft
 
-/** Dev audit main: prints every registered query whose physical plan
-  * contains a CartesianProduct or BroadcastNestedLoopJoin (plus plan
-  * errors). A hygienic query is audited through its pipeline
-  * (`QueryHygiene.pipelines`), since the plan it serves is an opaque
-  * checkpoint scan. Expected hits, all documented:
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.graft.GraftSqlBridge
+
+/** Dev plan main: runs registered queries and audits the physical plans
+  * that ran. Each selected query is built once and executed with every
+  * column of every row computed (what a noop sink does), so with AQE the
+  * audited plan is the FINAL re-optimized one: runtime join rewrites,
+  * coalesced reads, stages AQE found empty and dropped. A hygienic query
+  * is run through its pipeline ([[SparkEntry.pipelines]]), since the plan
+  * it serves is an opaque checkpoint scan; the pipeline's caches are
+  * released afterwards. Side-effecting builders (ETL writes, stream
+  * drains) execute as part of plan construction.
+  *
+  * Per query it prints `AUDIT <name> cartesian=… bnl=…` when the plan (or
+  * a subquery's) holds a CartesianProduct or BroadcastNestedLoopJoin, and
+  * `AUDIT <name> PLAN_ERROR …` when the query fails; then the
+  * distribution of data exchanges per query and the heavy tail.
+  *
+  * Expected hits, all documented (the 24 lines of the sf0.001 run):
   *  - brute-force truth paths: ann_bruteforce_topk (the correctness
   *    baseline), ann_lsh_recall / ann_ivf_recall (they embed that baseline
   *    as truth), dedup_ngram_jaccard (the sampled ground-truth verifier);
   *  - deliberate ONE-ROW broadcast cross joins (a scalar carried as a
-  *    column, never a pair explosion): embed_kmeans / semdedup_prune /
-  *    embed_outliers (the centroid array row), embed_pq_codes (the
-  *    codebook row), search_invindex_topk / search_hybrid_fusion (the
-  *    corpus-count row), the stats audits that compare against a 1-row
-  *    total (stats_benford / _bucket_drift / _dq_rules / _hll_merge /
-  *    _key_skew / _approx_topk and the streaming drift twin),
-  *    w11_gap_fill (the 1-row bounds), etl_orphan_audit (the 1-row
-  *    ledger summary), q22_dormant_rich_anti (the 1-row positive-balance
-  *    threshold), stats_countmin / stream_countmin (the 1-row CMS grid
-  *    probed by the exact top-10), stats_kmv_setops (the 1-row sketch
-  *    and exact-side aggregates composed into the single audit row),
-  *    basket_lift (the 1-row order total), dedup_simhash (the 1-row
-  *    audit annotation; PlanSpec pins it as the only nested loop).
+  *    column, never a pair explosion): embed_pq_codes (the codebook row),
+  *    search_invindex_topk / search_hybrid_fusion (the corpus-count row),
+  *    the stats audits that compare against a 1-row total (stats_benford /
+  *    _bucket_drift / _dq_rules / _hll_merge / _key_skew / _approx_topk /
+  *    _runs_updown and the streaming drift twin), w11_gap_fill (the 1-row
+  *    bounds), etl_orphan_audit (the 1-row ledger summary),
+  *    q22_dormant_rich_anti (the 1-row positive-balance threshold),
+  *    geo_nearest_within (the 1-row point count), stats_countmin /
+  *    stream_countmin (the 1-row CMS grid probed by the exact top-10),
+  *    stats_kmv_setops (the 1-row sketch and exact-side aggregates
+  *    composed into the single audit row), basket_lift (the 1-row order
+  *    total), dedup_simhash (the 1-row audit annotation; PlanSpec pins it
+  *    as the only nested loop).
+  * The k-means family's centroid-row cross join (embed_kmeans,
+  * embed_outliers, semdedup_prune) runs inside the `kmeansDistances`
+  * checkpoint, so it does not show here; EmbedClusterSpec pins its plan.
   * Anything else appearing here is a regression.
+  *
+  * Usage: runMain graft.PlanAudit [<outDir> <suffix> [query ...]]
+  * With `<outDir> <suffix>` it also writes each query's executed plan
+  * (`explain("formatted")`) to `<outDir>/<query>_<suffix>.txt` — the
+  * before/after plan evidence an optimization commits beside its bench
+  * numbers — for the named queries (all when none are named). Data dir
+  * from SPARK_GRAFT_SF_DIR (default sf0.001; use a larger SF when
+  * AQE/broadcast thresholds are the question).
   */
 object PlanAudit {
+
+  /** Every node of the plan that ran: AQE's final plan with its query
+    * stages unwrapped, the subqueries, and the plans that filled the
+    * caches it reads (each cache once: a cache read twice is built once).
+    * A reused exchange or subquery is a leaf, so its rows count once.
+    */
+  private def ranNodes(root: SparkPlan): Seq[SparkPlan] = {
+    val caches = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case st: QueryStageExec => Seq(st.plan)
+        case m: InMemoryTableScanExec if !caches.exists(_ eq m.relation.cacheBuilder) =>
+          caches += m.relation.cacheBuilder
+          Seq(m.relation.cachedPlan)
+        case _ => p.children
+      }
+      p +: (inner ++ p.subqueries).flatMap(walk)
+    }
+    walk(root)
+  }
+
   def main(args: Array[String]): Unit = {
+    require(args.length != 1, "usage: PlanAudit [<outDir> <suffix> [query ...]]")
+    val dump = args.take(2) match {
+      case Array(dir, suffix) =>
+        val out = java.nio.file.Paths.get(dir)
+        java.nio.file.Files.createDirectories(out)
+        Some((out, suffix))
+      case _ => None
+    }
+    val names = args.drop(2).toSeq
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = GraftSession.forHarness()
     // the report is the AUDIT lines; keep Spark's WARN chatter out of it
     spark.sparkContext.setLogLevel("ERROR")
-    val sf = "/root/testdata/sf0.001"
+    val missing = names.filterNot(SparkEntry.queries.contains)
+    if (missing.nonEmpty) println(s"AUDIT unknown queries: ${missing.mkString(", ")}")
+    val selected =
+      if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted
+      else names.filter(SparkEntry.queries.contains)
     val shuffles = scala.collection.mutable.LinkedHashMap[String, Int]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    selected.foreach { name =>
       try {
-        // a hygienic query's served plan is an opaque checkpoint scan:
-        // audit its pipeline instead
-        val p = ops.QueryHygiene.pipelines.get(name) match {
+        val (df, release): (DataFrame, () => Unit) = SparkEntry.pipelines.get(name) match {
           case Some(pipeline) =>
-            val st = pipeline(spark, sf)
-            try st.plan.queryExecution.executedPlan.toString finally st.release()
-          case None => fn(spark, sf).queryExecution.executedPlan.toString
+            val st = pipeline(spark, sfDir)
+            (st.plan, () => st.release())
+          case None =>
+            val d = SparkEntry.queries(name)(spark, sfDir)
+            (d, () => GraftSqlBridge.releaseLocalCheckpoint(d))
         }
-        val cart = p.contains("CartesianProduct")
-        val bnl = p.contains("BroadcastNestedLoopJoin")
-        if (cart || bnl) println(s"AUDIT $name cartesian=$cart bnl=$bnl")
-        // data shuffles only: hash/range repartitions (the final ORDER BY's
-        // range exchange counts — it is real row movement)
-        shuffles(name) = "Exchange (hash|range)partitioning".r.findAllIn(p).length
+        try {
+          // run the query's own QueryExecution (a noop sink would plan a
+          // second one), so executedPlan below is the plan that ran
+          val qe = df.queryExecution
+          SQLExecution.withNewExecutionId(qe, Some("PlanAudit")) {
+            qe.executedPlan.execute().foreach(_ => ())
+          }
+          val ran = ranNodes(qe.executedPlan)
+          val cart = ran.exists(_.isInstanceOf[CartesianProductExec])
+          val bnl = ran.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec])
+          if (cart || bnl) println(s"AUDIT $name cartesian=$cart bnl=$bnl")
+          // data shuffles only: hash/range repartitions (the final ORDER
+          // BY's range exchange counts — it is real row movement)
+          shuffles(name) = ran.count {
+            case e: ShuffleExchangeLike => e.outputPartitioning match {
+              case _: HashPartitioning | _: RangePartitioning => true
+              case _ => false
+            }
+            case _ => false
+          }
+          dump.foreach { case (out, suffix) =>
+            java.nio.file.Files.writeString(
+              out.resolve(s"${name}_$suffix.txt"), qe.explainString(FormattedMode))
+          }
+        } finally release()
       } catch { case e: Throwable => println(s"AUDIT $name PLAN_ERROR ${e.getMessage.take(80)}") }
       finally spark.catalog.clearCache()
     }

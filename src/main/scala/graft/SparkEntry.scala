@@ -40,35 +40,39 @@ object SparkEntry {
     etl.EtlJob.readDestination(spark, s"$tmp/dest")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. Each entry
-    * installs the engine on the session it is handed
+  /** The query families, in the order their maps merge. */
+  private val families: Seq[ops.QueryFamily] = Seq(
+    ops.RelationalOps, ops.EtlOps, ops.MessageOps, ops.DedupOps, ops.IncrementalDedupOps,
+    ops.ClusterOps, ops.SimilarityOps, ops.TextAnalysisOps, ops.MultimodalOps,
+    ops.StreamingOps, ops.SamplingOps, ops.IngestScreenOps, ops.CoverageOps,
+    ops.WarehouseOps, ops.EmbedClusterOps, ops.SearchOps, ops.ScaleOps,
+    ops.NestedBillingOps, ops.ProductAnalyticsOps, ops.SeriesOps, ops.GeoOps,
+    ops.SqlSurfaceOps)
+
+  /** Each builder installs the engine on the session it is handed
     * ([[GraftSession.install]]), so every query plans under the same rule
     * set whatever ran before it.
     */
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    (ops.RelationalOps.queries ++ ops.EtlOps.queries ++ ops.MessageOps.queries ++
-      ops.DedupOps.queries ++ ops.IncrementalDedupOps.queries ++ ops.ClusterOps.queries ++
-      ops.SimilarityOps.queries ++ ops.TextAnalysisOps.queries ++
-      ops.MultimodalOps.queries ++ ops.StreamingOps.queries ++
-      ops.SamplingOps.queries ++ ops.IngestScreenOps.queries ++ ops.CoverageOps.queries ++
-      ops.WarehouseOps.queries ++ ops.EmbedClusterOps.queries ++ ops.SearchOps.queries ++
-      ops.ScaleOps.queries ++ ops.NestedBillingOps.queries ++
-      ops.ProductAnalyticsOps.queries ++ ops.SeriesOps.queries ++ ops.GeoOps.queries ++
-      ops.SqlSurfaceOps.queries).map { case (name, fn) =>
+  private def installing[A](fns: Map[String, (SparkSession, String) => A])
+      : Map[String, (SparkSession, String) => A] =
+    fns.map { case (name, fn) =>
       name -> ((spark: SparkSession, dir: String) => fn(GraftSession.install(spark), dir))
     }
+
+  /** One entry per implemented operator from SURVEY.md §2. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    installing(families.flatMap(_.queries).toMap)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check.
     */
-  val oracleSql: Map[String, String] =
-    ops.RelationalOps.oracleSql ++ ops.EtlOps.oracleSql ++ ops.MessageOps.oracleSql ++
-      ops.DedupOps.oracleSql ++ ops.IncrementalDedupOps.oracleSql ++ ops.ClusterOps.oracleSql ++
-      ops.SimilarityOps.oracleSql ++ ops.TextAnalysisOps.oracleSql ++
-      ops.MultimodalOps.oracleSql ++ ops.StreamingOps.oracleSql ++
-      ops.SamplingOps.oracleSql ++ ops.IngestScreenOps.oracleSql ++ ops.CoverageOps.oracleSql ++
-      ops.WarehouseOps.oracleSql ++ ops.EmbedClusterOps.oracleSql ++ ops.SearchOps.oracleSql ++
-      ops.ScaleOps.oracleSql ++ ops.NestedBillingOps.oracleSql ++
-      ops.ProductAnalyticsOps.oracleSql ++ ops.SeriesOps.oracleSql ++ ops.GeoOps.oracleSql ++
-      ops.SqlSurfaceOps.oracleSql
+  val oracleSql: Map[String, String] = families.flatMap(_.oracleSql).toMap
+
+  /** Every query served whole as a hygienic checkpoint, mapped to its
+    * lazily-built pipeline ([[ops.QueryFamily.pipelines]]). Derived from
+    * the same families as [[queries]], so no query is served as an opaque
+    * checkpoint scan without its pipeline reaching the plan tools.
+    */
+  private[graft] val pipelines: Map[String, (SparkSession, String) => ops.QueryHygiene.Staged] =
+    installing(families.flatMap(_.pipelines).toMap)
 }

@@ -49,7 +49,7 @@ import org.apache.spark.sql.graft.GraftSqlBridge
   * generalizes to content identity: `is_canonical` = "first by doc_id in
   * the duplicate family".
   */
-object ClusterOps {
+object ClusterOps extends QueryFamily {
 
   /** Propagation-round ceiling. Each round is one edge-propagation PLUS one
     * pointer-jump (label-of-label), so reach doubles per round: 32 rounds
@@ -566,9 +566,6 @@ object ClusterOps {
     * desc, id asc) — pure integer math, replayed exactly by the DuckDB
     * oracle's identical SQL unrolling.
     */
-  private def graphTriangles(s: SparkSession, dir: String): DataFrame =
-    graphTrianglesStaged(s, dir).hygienic()
-
   private[graft] def graphTrianglesStaged(s: SparkSession, dir: String): Staged = {
     // the graph table stores the degree-ORIENTED edge half, so the whole
     // per-run prep — halving scan, degree rollup, two orientation joins —
@@ -770,12 +767,14 @@ object ClusterOps {
       .orderBy(col("hop"))
   }
 
+  override val pipelines: Map[String, (SparkSession, String) => Staged] =
+    Map("graph_triangles" -> (graphTrianglesStaged _))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_clusters" -> (dedupClusters _),
     "graph_pagerank" -> (graphPagerank _),
-    "graph_triangles" -> (graphTriangles _),
     "graph_bfs_hops" -> (graphBfsHops _)
-  )
+  ) ++ QueryHygiene.served(pipelines)
 
   /** Oracle: DuckDB recursive CTE computes the transitive closure of the
     * same edge set (exact clique edges + EXHAUSTIVE near-dup pairs — the

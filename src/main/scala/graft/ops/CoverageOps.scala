@@ -12,7 +12,7 @@ import graft.etl.CatalogOps
   * (S6). Small by design — each is one declarative query with a DuckDB
   * oracle, so the §2 inventory is checkable line by line.
   */
-object CoverageOps {
+object CoverageOps extends QueryFamily {
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
   private val DuckTsFmt = "%Y-%m-%d %H:%M:%S.%f"
@@ -239,6 +239,17 @@ object CoverageOps {
       .orderBy(col("event_date"))
   }
 
+  /** Bind the `graft` catalog ([[graft.sources.GraftCatalog]]) to the
+    * directory holding `zone`, so `graft.`<name>`` resolves to the zone;
+    * returns that name. The binding is two session confs and stays set.
+    */
+  private def bindGraftCatalog(s: SparkSession, zone: String): String = {
+    val p = new org.apache.hadoop.fs.Path(zone)
+    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft.root", p.getParent.toString)
+    p.getName
+  }
+
   /** Day-scoped OVERWRITE through the connector's `SupportsOverwrite`
     * ([[graft.sources.TsvTable.newWriteBuilder]]): the corrected-delivery
     * workflow — a full zone lands through the commit protocol, then one
@@ -261,10 +272,8 @@ object CoverageOps {
     val day = "2024-01-10"
     val corrected = ev.where(col("event_date") === day)
       .withColumn("value_cents", col("value_cents") * 2)
-    val p = new org.apache.hadoop.fs.Path(zone)
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft.root", p.getParent.toString)
-    corrected.writeTo(s"graft.`${p.getName}`").overwrite(col("event_date") === day)
+    corrected.writeTo(s"graft.`${bindGraftCatalog(s, zone)}`")
+      .overwrite(col("event_date") === day)
     s.read.format(cls).option("path", zone).load()
       .groupBy(col("event_date"))
       .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("cents"))
@@ -437,8 +446,6 @@ object CoverageOps {
     * driver compare is order-insensitive.
     */
   private def srcDsv2SpjAgg(s: SparkSession, dir: String): DataFrame = {
-    // option-gated on this query's scans, inert for every other read
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val out = buildTsvZone(s, dir)
     s.read.format(classOf[graft.sources.TsvLandingSource].getName)
       .option("path", out).option("reportPartitioning", "true").load()
@@ -456,14 +463,13 @@ object CoverageOps {
     * above it all run inside the storage partitioning. At 100 TB this is
     * the bucketed-join story without a bucketed table: the LAYOUT is the
     * bucketing, and neither fact rows nor dimension rows ever move.
-    * Dsv2SourceSpec pins the zero-Exchange sort-merge plan.
+    * Dsv2SourceSpec pins the zero-Exchange sort-merge plan. It relies on
+    * two session confs that default on in Spark 4:
+    * `spark.sql.sources.v2.bucketing.enabled` and `...pushPartValues.enabled`
+    * (a day present on one side only gets an empty partition on the
+    * other instead of a fallback shuffle).
     */
   private def srcDsv2SpjJoin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    // tolerate per-side partition-value gaps (a day present on one side
-    // only) — Spark fills the other side with empty partitions instead
-    // of falling back to a shuffle
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     val fmt = classOf[graft.sources.TsvLandingSource].getName
     val a = s.read.format(fmt).option("path", buildTsvZone(s, dir))
       .option("reportPartitioning", "true").load()
@@ -518,15 +524,13 @@ object CoverageOps {
         col("event_id"), col("user_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("value_cents"))
       .write.format(cls).option("path", zone).mode("append").save()
-    val p = new org.apache.hadoop.fs.Path(zone)
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft.root", p.getParent.toString)
-    s.sql(s"DELETE FROM graft.`${p.getName}` " +
+    val table = bindGraftCatalog(s, zone)
+    s.sql(s"DELETE FROM graft.`$table` " +
       "WHERE event_date >= '2024-01-10' AND event_date < '2024-01-15'")
     s.sql(
       s"""SELECT event_date, count(*) AS n_events,
          |  CAST(sum(value_cents) AS BIGINT) AS cents
-         |FROM graft.`${p.getName}`
+         |FROM graft.`$table`
          |GROUP BY event_date ORDER BY event_date""".stripMargin)
   }
 
@@ -539,14 +543,11 @@ object CoverageOps {
     * pruning (the poison file would throw).
     */
   private def sqlApiCatalogTsv(s: SparkSession, dir: String): DataFrame = {
-    val zone = buildTsvZone(s, dir)
-    val p = new org.apache.hadoop.fs.Path(zone)
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft.root", p.getParent.toString)
+    val table = bindGraftCatalog(s, buildTsvZone(s, dir))
     s.sql(
       s"""SELECT event_type, count(*) AS n,
          |  CAST(sum(value_cents) AS BIGINT) AS cents
-         |FROM graft.`${p.getName}`
+         |FROM graft.`$table`
          |WHERE event_date >= '2024-01-05' AND event_date < '2024-01-20'
          |GROUP BY event_type ORDER BY event_type""".stripMargin)
   }
@@ -955,9 +956,6 @@ object CoverageOps {
     * TakeOrderedAndProject, a map-side top-k then one k-row merge, never
     * a global window; everything after runs on ≤ 3k rows.
     */
-  private def statsKmvSetops(s: SparkSession, dir: String): DataFrame =
-    statsKmvSetopsStaged(s, dir).hygienic()
-
   private[graft] def statsKmvSetopsStaged(s: SparkSession, dir: String): QueryHygiene.Staged = {
     val K = 64
     val ev = Tables.load(s, dir, "events")
@@ -1018,9 +1016,12 @@ object CoverageOps {
       .orderBy(col("dense_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override val pipelines: Map[String, (SparkSession, String) => QueryHygiene.Staged] =
+    Map("stats_kmv_setops" -> (statsKmvSetopsStaged _))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     "o6_dense_ids" -> (o6DenseIds _),
-    "stats_kmv_setops" -> (statsKmvSetops _),
     "stats_countmin" -> (statsCountmin _),
     "stats_kmv_distinct" -> (statsKmvDistinct _),
     "p1_star_projection" -> (p1 _),
@@ -1073,7 +1074,7 @@ object CoverageOps {
       .sql(O5KeysetPageSql)),
     "c15_try_cast" -> ((s, dir) => graft.GraftSession.init(s, dir)
       .sql(C15TryCastSql))
-  )
+  ) ++ QueryHygiene.served(pipelines)
 
   val oracleSql: Map[String, String] = Map(
     "stats_kmv_distinct" ->

@@ -23,7 +23,7 @@ import graft.ops.QueryHygiene.Staged
   * corpus (O(corpus) work, O(1) broadcast side), and the exact truth path
   * ([[exactJaccardPairs]]) is a prefix-filtered posting join — never n².
   */
-object DedupOps {
+object DedupOps extends QueryFamily {
 
   /** Sim threshold with a wide empirical margin — and a banding chosen so
     * the exhaustive-equality oracles are a ≥5σ bet, not a coin flip. The
@@ -122,8 +122,8 @@ object DedupOps {
     * paths. Work is O(corpus) with an O(1) broadcast side; all-pairs is
     * the thing the bucketed variants exist to avoid.
     */
-  private def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
-    dedupNgramJaccardStaged(s, dir).hygienic()
+  private[graft] def dedupNgramJaccardStaged(s: SparkSession, dir: String): Staged =
+    ngramJaccardStaged(documents(s, dir))
 
   /** Verifier anchor-set target: FIXED row count, not a proportion. The
     * old `doc_id % 10` sample grew with the corpus, making the
@@ -158,9 +158,6 @@ object DedupOps {
 
   private def docCount(s: SparkSession, dir: String): Long =
     docCountMemo.getOrElseUpdate(s, dir)(documents(s, dir).count())
-
-  private[graft] def dedupNgramJaccardStaged(s: SparkSession, dir: String): Staged =
-    ngramJaccardStaged(documents(s, dir))
 
   /** The anchor-verifier core over any (doc_id, text) relation —
     * parameterized so the id-space robustness of the anchor rule is
@@ -208,9 +205,6 @@ object DedupOps {
     * up front — they can never verify above threshold, and a shared
     * degenerate signature would otherwise make them all collide.
     */
-  private def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
-    dedupMinhashLshStaged(s, dir).hygienic()
-
   private[graft] def dedupMinhashLshStaged(s: SparkSession, dir: String): Staged = {
     val sh = shingled(documents(s, dir)).cache()
     val st = minhashPairsStaged(documents(s, dir), sh)
@@ -265,9 +259,6 @@ object DedupOps {
     docs.select(col("doc_id"), expr("graft_simhash60_shingles(text)").as("sim"))
       .where(col("sim").isNotNull) // shingleless docs have no signature
   }
-
-  private def dedupSimhash(s: SparkSession, dir: String): DataFrame =
-    dedupSimhashStaged(s, dir).hygienic()
 
   /** Per-pair recall floor for the SimHash screen, graded against the
     * in-query exact truth ([[exactJaccardPairs]]). Measured recall across
@@ -506,8 +497,8 @@ object DedupOps {
           concat_ws(" ", slice(toks, 11, 50)).as("text")))
   }
 
-  private def dedupSpanExact(s: SparkSession, dir: String): DataFrame =
-    spanDedup(withSpanDups(documents(s, dir)))
+  private def dedupSpanExactStaged(s: SparkSession, dir: String): Staged =
+    spanDedupStaged(withSpanDups(documents(s, dir)))
 
   /** Cross-source contamination matrix: which corpus sources near-duplicate
     * each other, and how much. Reuses the verified MinHash-LSH pair
@@ -550,8 +541,8 @@ object DedupOps {
     * shingles appearing in > f docs — stop-shingle removal) to bound the
     * posting-list fanout; integer milli-containment replays exactly.
     */
-  private def dedupContainment(s: SparkSession, dir: String): DataFrame =
-    dedupContainmentStaged(s, dir).hygienic()
+  private[graft] def dedupContainmentStaged(s: SparkSession, dir: String): Staged =
+    containmentStaged(documents(s, dir), containmentMaxDocFreq(docCount(s, dir)))
 
   /** Stop-shingle screen parameters: a shingle appearing in more than
     * `max(floor, corpus/fraction)` documents is BOILERPLATE for
@@ -593,9 +584,6 @@ object DedupOps {
 
   private[graft] def containmentMaxDocFreq(corpusDocs: Long): Long =
     math.max(ContainmentStopFloor, corpusDocs / ContainmentStopFraction)
-
-  private[graft] def dedupContainmentStaged(s: SparkSession, dir: String): Staged =
-    containmentStaged(documents(s, dir), containmentMaxDocFreq(docCount(s, dir)))
 
   /** The containment core over any (doc_id, text) relation: posting-list
     * probe of the suspect stratum against the corpus, stop-shingles with
@@ -641,16 +629,19 @@ object DedupOps {
       .orderBy(col("a_id"), col("b_id")), pf, posts)
   }
 
+  override val pipelines: Map[String, (SparkSession, String) => Staged] = Map(
+    "dedup_containment" -> (dedupContainmentStaged _),
+    "dedup_ngram_jaccard" -> (dedupNgramJaccardStaged _),
+    "dedup_minhash_lsh" -> (dedupMinhashLshStaged _),
+    "dedup_simhash" -> (dedupSimhashStaged _),
+    "dedup_span_exact" -> (dedupSpanExactStaged _)
+  )
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_containment" -> (dedupContainment _),
     "dedup_exact" -> (dedupExact _),
     "dedup_normalized" -> (dedupNormalized _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_minhash_lsh" -> (dedupMinhashLsh _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_span_exact" -> (dedupSpanExact _),
     "dedup_source_matrix" -> (dedupSourceMatrix _)
-  )
+  ) ++ QueryHygiene.served(pipelines)
 
   /** DuckDB mirror of the doc → trigram-set projection (tokens and shingles
     * built with the exact same formula as TextFunctions).

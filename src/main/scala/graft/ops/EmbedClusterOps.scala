@@ -27,7 +27,7 @@ import graft.Tables
   * cluster each iteration's input would be checkpointed; at 3 iterations the
   * nested plan is fine as-is.
   */
-object EmbedClusterOps {
+object EmbedClusterOps extends QueryFamily {
 
   private val KFloor = 8
   private val Iters = 3
@@ -197,7 +197,7 @@ object EmbedClusterOps {
     * injected copies — which makes the exhaustive-truth oracle equal the
     * clustered plan's output.
     */
-  private def semdedupPrune(s: SparkSession, dir: String): DataFrame = {
+  private def semdedupPruneStaged(s: SparkSession, dir: String): QueryHygiene.Staged = {
     val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val fx = e.unionByName(
       e.where(col("vec_id") % 50 === 0)
@@ -213,7 +213,7 @@ object EmbedClusterOps {
         .select(col("b_id").as("vec_id"), col("cid"))
         .distinct()
         .orderBy(col("vec_id")),
-      m).hygienic()
+      m)
   }
 
   /** Embedding-space outlier screen: the top ⌈5%⌉ most-distant members of
@@ -238,11 +238,13 @@ object EmbedClusterOps {
       .orderBy(col("vec_id"))
   }
 
+  override val pipelines: Map[String, (SparkSession, String) => QueryHygiene.Staged] =
+    Map("semdedup_prune" -> (semdedupPruneStaged _))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "embed_kmeans" -> (embedKmeans _),
-    "embed_outliers" -> (embedOutliers _),
-    "semdedup_prune" -> (semdedupPrune _)
-  )
+    "embed_outliers" -> (embedOutliers _)
+  ) ++ QueryHygiene.served(pipelines)
 
   /** Quantization CTE over a source relation (must expose vec_id, embedding). */
   private def quantSql(src: String): String =

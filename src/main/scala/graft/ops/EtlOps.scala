@@ -20,7 +20,7 @@ import graft.model.{ClientBillingConfig, EngineError, EtlJobMessage, StepStatus}
   * reference uses now(), we inject), and returns a sorted, formatted result
   * the DuckDB oracle can reproduce from `events` alone.
   */
-object EtlOps {
+object EtlOps extends QueryFamily {
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
   private val DuckTsFmt = "%Y-%m-%d %H:%M:%S.%f"

@@ -19,7 +19,7 @@ import graft.Tables
   * spatial skew. GeoOpsSpec pins the plan: one equi-join on (cx, cy),
   * zero CartesianProduct/BroadcastNestedLoopJoin nodes.
   */
-object GeoOps {
+object GeoOps extends QueryFamily {
 
   private val R = 64L // radius and grid cell side (Chebyshev-safe: 3×3 covers)
 

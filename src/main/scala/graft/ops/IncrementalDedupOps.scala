@@ -29,7 +29,7 @@ import graft.functions.TextFunctions.{bandHashes, jaccardSorted}
   *   4. the batch's band rows are APPENDED to the index — existing index
   *      files are never rewritten (asserted in IncrementalDedupSpec).
   */
-object IncrementalDedupOps {
+object IncrementalDedupOps extends QueryFamily {
 
   /** Batch membership: the ~12.5 % md5-nibble bucket of docs arrives as
     * "today's batch", the rest is the standing corpus — sf-stable,
@@ -178,9 +178,6 @@ object IncrementalDedupOps {
     * corpus-wide native shingling they avoid) and deliberately NOT taken;
     * see OPTIMIZATION_r17.md "dead ends" before re-trying it.
     */
-  private def dedupIncremental(s: SparkSession, dir: String): DataFrame =
-    dedupIncrementalStaged(s, dir).hygienic()
-
   private[graft] def dedupIncrementalStaged(s: SparkSession, dir: String): QueryHygiene.Staged = {
     val docs = documents(s, dir)
     val corpus = docs.where(s"NOT ($BatchPred)")
@@ -217,9 +214,11 @@ object IncrementalDedupOps {
     QueryHygiene.Staged(pairs, batchBands)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_incremental" -> (dedupIncremental _)
-  )
+  override val pipelines: Map[String, (SparkSession, String) => QueryHygiene.Staged] =
+    Map("dedup_incremental" -> (dedupIncrementalStaged _))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QueryHygiene.served(pipelines)
 
   // posting-list candidate generation (provably ≡ the corpus × batch
   // theta join it replaced: J ≥ 0.5 > 0 requires a shared shingle, and

@@ -35,7 +35,7 @@ import graft.functions.TextFunctions.jaccardSorted
   * same "new arrivals" split the decontamination queries use) + verbatim
   * copies of every 50th corpus doc (re-crawls → dup_exact) + the PII rows.
   */
-object IngestScreenOps {
+object IngestScreenOps extends QueryFamily {
 
   private def bucket: Column =
     substring(md5(col("doc_id").cast("string")), 32, 1)
@@ -53,7 +53,7 @@ object IngestScreenOps {
           .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
       .unionByName(TextAnalysisOps.piiFixtureDf(docs.sparkSession))
 
-  private def ingestScreen(s: SparkSession, dir: String): DataFrame = {
+  private def ingestScreenStaged(s: SparkSession, dir: String): QueryHygiene.Staged = {
     val docs = documents(s, dir)
     val corpus = corpusDocs(docs).cache()
     val batch = batchDocs(docs).cache()
@@ -110,7 +110,7 @@ object IngestScreenOps {
             .when(!col("__keep"), "repetitive")
             .otherwise("accepted").as("disposition"))
         .orderBy(col("doc_id")),
-      corpus, batch).hygienic()
+      corpus, batch)
   }
 
   // ---------------------------------------------------------------------
@@ -217,11 +217,13 @@ object IngestScreenOps {
       .withColumn("n_quarantined", lit(bad.size))
   }
 
+  override val pipelines: Map[String, (SparkSession, String) => QueryHygiene.Staged] =
+    Map("ingest_screen_pipeline" -> (ingestScreenStaged _))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ingest_screen_pipeline" -> (ingestScreen _),
     "ingest_corrupt_quarantine" -> (ingestCorruptQuarantine _),
     "stream_corrupt_tolerant" -> (streamCorruptTolerant _)
-  )
+  ) ++ QueryHygiene.served(pipelines)
 
   /** Oracle: the same five-way disposition rebuilt relationally in DuckDB —
     * exhaustive Jaccard for the near-dup stage (the engine's banded

@@ -13,7 +13,7 @@ import graft.etl.MessageFrontEnd
   * shapes for non-object `message` fields — pushed through the columnar
   * decode chain.
   */
-object MessageOps {
+object MessageOps extends QueryFamily {
 
   private def fixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -23,7 +23,7 @@ import graft.multimodal.Multimodal.MediaRecord
   *   video: frames = id%6+2, w/h as image,
   *          pixel(t,x,y) = (id·31 + t·11 + x·7 + y·13) % 256
   */
-object MultimodalOps {
+object MultimodalOps extends QueryFamily {
 
   /** The typed media fixture: one MediaRecord per document, modality by
     * doc_id mod 3, payloads generated in partition-parallel map tasks

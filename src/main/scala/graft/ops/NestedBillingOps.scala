@@ -41,7 +41,7 @@ import graft.schema.BillingExportSchema
   * expression pair, so the path holds at 100 TB exactly like the plain
   * ETL slice.
   */
-object NestedBillingOps {
+object NestedBillingOps extends QueryFamily {
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
   private val DuckTsFmt = "%Y-%m-%d %H:%M:%S.%f"

@@ -18,7 +18,7 @@ import graft.Tables
   * A 100 TB event history with a billion users shuffles once by user and
   * never sorts globally.
   */
-object ProductAnalyticsOps {
+object ProductAnalyticsOps extends QueryFamily {
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")
@@ -131,9 +131,6 @@ object ProductAnalyticsOps {
     * choose a broadcast when runtime stats say the rollup is small (it
     * does at bench SF); only the 1-row total is pinned broadcast.
     */
-  private def basketLift(s: SparkSession, dir: String): DataFrame =
-    basketLiftStaged(s, dir).hygienic()
-
   private[graft] def basketLiftStaged(s: SparkSession, dir: String): QueryHygiene.Staged = {
     // the per-order sets feed the pair explosion, the per-part counts, and
     // the order total — three references, cached once (|orders| rows of
@@ -266,16 +263,18 @@ object ProductAnalyticsOps {
           (col("n_a") + col("n_b")) * 1083).as("srm"))
       .orderBy(col("event_type"))
 
+  override val pipelines: Map[String, (SparkSession, String) => QueryHygiene.Staged] =
+    Map("basket_lift" -> (basketLiftStaged _))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ab_assignment_srm" -> (abAssignmentSrm _),
     "ab_conversion_lift" -> (abConversionLift _),
     "ab_segment_balance" -> (abSegmentBalance _),
-    "basket_lift" -> (basketLift _),
     "funnel_conversion" -> (funnelConversion _),
     "cohort_retention" -> (cohortRetention _),
     "path_transitions" -> (pathTransitions _),
     "basket_copurchase" -> (basketCopurchase _)
-  )
+  ) ++ QueryHygiene.served(pipelines)
 
   val oracleSql: Map[String, String] = Map(
     "ab_assignment_srm" ->

@@ -45,20 +45,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 private[graft] object QueryHygiene {
 
-  /** The registry queries served as a [[Staged.hygienic]] view, mapped to
-    * their lazily-built pipelines. A served query's physical plan is the
-    * materialized checkpoint's opaque `Scan ExistingRDD`, so the plan
-    * mains (PlanAudit, PlanDump) inspect these pipelines instead.
+  /** Serve each whole-query pipeline as its registry entry: the
+    * [[Staged.hygienic]] view ([[QueryFamily.pipelines]]).
     */
-  val pipelines: Map[String, (SparkSession, String) => Staged] = Map(
-    "basket_lift" -> (ProductAnalyticsOps.basketLiftStaged _),
-    "dedup_simhash" -> (DedupOps.dedupSimhashStaged _),
-    "dedup_minhash_lsh" -> (DedupOps.dedupMinhashLshStaged _),
-    "dedup_ngram_jaccard" -> (DedupOps.dedupNgramJaccardStaged _),
-    "dedup_containment" -> (DedupOps.dedupContainmentStaged _),
-    "dedup_incremental" -> (IncrementalDedupOps.dedupIncrementalStaged _),
-    "graph_triangles" -> (ClusterOps.graphTrianglesStaged _),
-    "stats_kmv_setops" -> (CoverageOps.statsKmvSetopsStaged _))
+  def served(pipelines: Map[String, (SparkSession, String) => Staged])
+      : Map[String, (SparkSession, String) => DataFrame] =
+    pipelines.map { case (name, build) =>
+      name -> ((s: SparkSession, dir: String) => build(s, dir).hygienic())
+    }
 
   /** A lazily-built query pipeline plus the query-local caches its plan
     * references. `plan` is what PlanSpec inspects; `hygienic()` is what

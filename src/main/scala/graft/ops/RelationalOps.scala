@@ -32,7 +32,7 @@ import graft.Tables
   * `customer` stands in for the `billing_alerts_setting` config table
   * (reference: core/database/billing_etl_db.py:63-89).
   */
-object RelationalOps {
+object RelationalOps extends QueryFamily {
 
   /** Output format for timestamp columns (micros, zero-padded). */
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"

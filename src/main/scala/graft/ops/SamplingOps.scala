@@ -21,7 +21,7 @@ import graft.functions.TextFunctions.{jaccardSorted, tokens}
   * sampling state, no seed bookkeeping — and the split assignment never
   * has to be stored: it can always be re-derived from the id.
   */
-object SamplingOps {
+object SamplingOps extends QueryFamily {
 
   /** Last hex nibble of md5(doc_id): '0'..'f', uniform by construction. */
   private def bucket: Column =

@@ -13,7 +13,7 @@ import graft.Tables
   * operators: `j4_salted_skew_join` (salting must be result-invariant) and
   * `etl_compact_dest` (compaction must be row-multiset-invariant).
   */
-object ScaleOps {
+object ScaleOps extends QueryFamily {
 
   /** Equi-join that survives heavy key skew: the left (large, skewed) side
     * gets a uniform salt derived from a per-row fingerprint; the right

@@ -37,7 +37,7 @@ import graft.functions.TextFunctions._
   * Reference: the reference engine has no search operator; this is a
   * north-star extension in the spirit of SURVEY §2's text family.
   */
-object SearchOps {
+object SearchOps extends QueryFamily {
 
   /** Literal multi-term queries — mirrored verbatim in the oracle SQL. */
   private[graft] val SearchQueries: Seq[(Int, String)] = Seq(

@@ -15,7 +15,7 @@ import graft.Tables
   * loops), in exact integer arithmetic so the DuckDB oracle hash-matches
   * bit for bit.
   */
-object SeriesOps {
+object SeriesOps extends QueryFamily {
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")

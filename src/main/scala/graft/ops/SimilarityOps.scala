@@ -47,14 +47,15 @@ import graft.Tables
   * signature gap, so the same plan prunes far harder at the same recall;
   * the parameters are per-deployment knobs, the plan shape is not.
   */
-object SimilarityOps {
+object SimilarityOps extends QueryFamily {
 
   private val TopK = 10
 
   /** Multi-table sign-LSH config for the ANN path: 32 tables × 4 bits,
     * radius-1 multi-probe on the query side. Tuned on the driver corpus for
-    * per-query recall ≥ [[RecallFloor]] at every shipped scale factor (see
-    * AnnTune; measured mean recall ≥ 0.97 at sf0.001/0.01/0.1).
+    * per-query recall ≥ [[LshRecallFloor]] at every shipped scale factor
+    * (measured mean recall ≥ 0.97 at sf0.001/0.01/0.1; `ann_lsh_recall`
+    * re-checks the floor on every oracle run).
     */
   private val LshBands = 32
   private val LshBits = 4
@@ -118,8 +119,10 @@ object SimilarityOps {
     */
   private[graft] def ivfNprobe(nlists: Int): Int =
     math.max(IvfNprobeFloor, (nlists + 1) / 2)
-  /** Per-query-point recall floors asserted by the oracle. Measured minima
-    * across sf0.001/0.01/0.1 (AnnTune): LSH 1.00 at every query point
+  /** Per-query-point recall floors asserted by the oracle
+    * (`ann_lsh_recall` / `ann_ivf_recall`). Measured minima across
+    * sf0.001/0.01/0.1 by a bands/bits/nprobe sweep (SCALE.md "Sweep
+    * hygiene" has its recovery line): LSH 1.00 at every query point
     * (analytic per-neighbor miss ≈ 5e-8 at the 10th-NN angle), IVF 0.90.
     * The floors sit well under those; SimilaritySpec asserts the means.
     */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.ScopedConf
 
 /** SQL-surface depth: the session capabilities a reference user driving
   * everything through SQL text expects — recursive CTEs, table-valued
@@ -12,7 +13,7 @@ import graft.Tables
   * extension points, not the DataFrame DSL, because the surface itself
   * is what's being shipped.
   */
-object SqlSurfaceOps {
+object SqlSurfaceOps extends QueryFamily {
 
   /** Recursive CTE — hierarchy walk without a driver-side loop. The part
     * catalog forms a decimal trie (parent(p) = p div 10, roots < 10);
@@ -107,9 +108,8 @@ object SqlSurfaceOps {
   private def govScanGuard(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.ScanGuard
     val ev = Tables.load(s, dir, "events")
-    s.conf.set(ScanGuard.EnabledKey, "true")
-    s.conf.set(ScanGuard.PathsKey, "events.parquet")
-    try {
+    ScopedConf.withConfs(s,
+        ScanGuard.EnabledKey -> "true", ScanGuard.PathsKey -> "events.parquet") {
       val compliant = ev
         .where(col("ts") >= lit("2024-01-01").cast("timestamp"))
         .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -122,9 +122,6 @@ object SqlSurfaceOps {
         catch { case _: IllegalStateException => true }
       require(blocked, "scan guard must reject the unfiltered scan")
       compliant
-    } finally {
-      s.conf.set(ScanGuard.EnabledKey, "false")
-      s.conf.unset(ScanGuard.PathsKey)
     }
   }
 

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingIngest
+import graft.util.ScopedConf
 
 /** Streaming queries, oracle-checked against the same DuckDB SQL as their
   * batch twins (the streaming engine must converge to the batch answer at
   * AvailableNow drain).
   */
-object StreamingOps {
+object StreamingOps extends QueryFamily {
 
   private val TsFmt = "%Y-%m-%d %H:%M:%S.%f"
 
@@ -123,13 +124,11 @@ object StreamingOps {
     // executor memory); RocksDB spills state to local SSD with an
     // off-heap block cache, so per-partition state can exceed the heap —
     // the backend every large always-on deployment runs. The drain runs
-    // with the provider set and restores the default afterwards.
-    "stream_sessionize_rocksdb" -> ((s, dir) => {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try StreamingIngest.sessionWindows(s, dir) // drains eagerly inside
-      finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }),
+    // with the provider set and restores the session's own afterwards.
+    "stream_sessionize_rocksdb" -> ((s, dir) =>
+      ScopedConf.withConfs(s, StreamingIngest.RocksDbProvider) {
+        StreamingIngest.sessionWindows(s, dir) // drains eagerly inside
+      }),
     "stream_session_timers" -> ((s, dir) => StreamingIngest.streamSessionTimers(s, dir)),
     // the same timer-closed sessions on transformWithState (explicit
     // timer lifecycle + handleExpiredTimer, RocksDB-backed) — same oracle

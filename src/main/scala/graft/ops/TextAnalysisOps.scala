@@ -13,7 +13,7 @@ import graft.functions.TextFunctions._
   * is mirrored in DuckDB SQL, integer-ratio arithmetic keeps the doubles
   * bit-identical across engines, and md5 is the shared hash.
   */
-object TextAnalysisOps {
+object TextAnalysisOps extends QueryFamily {
 
   /** Tiny function-word list: enough signal for a synthetic-corpus heuristic. */
   private val Stopwords = Seq("a", "an", "the", "of", "to", "in", "and", "is", "on", "for")

@@ -20,7 +20,7 @@ import graft.Tables
   * `CAST(round(x*100) AS BIGINT)` so every aggregate is order-independent
   * exact integer math (see RelationalOps header).
   */
-object WarehouseOps {
+object WarehouseOps extends QueryFamily {
 
   private def orders(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "orders")
   private def events(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "events")

@@ -11,11 +11,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stream queries scale on STATE (keys held across micro-batches) and
   * horizon, not input rows: their row-scaling slopes are floor-dominated
   * (a drain pays a fixed ~0.5-0.9 s of micro-batch planning + state-store
-  * commit machinery regardless of input — DrainProfile measures the
-  * decomposition). This main measures the axis that actually grows at
-  * 100 TB: it drains the SAME input through the registry's stateful
-  * shapes at a ladder of state-key counts, and fits the log-log slope of
-  * drain time vs MEASURED state rows on the largest pair.
+  * commit machinery regardless of input — SCALE.md "Streaming drain
+  * floor", round 19, records the per-batch decomposition). This main
+  * measures the axis that actually grows at 100 TB: it drains the SAME
+  * input through the registry's stateful shapes at a ladder of state-key
+  * counts, and fits the log-log slope of drain time vs MEASURED state
+  * rows on the largest pair.
   *
   * Making the ladder load-bearing (round 19): the fixture's events table
   * caps distinct keys at its row count (100 k at sf0.1), which left the
@@ -128,12 +129,8 @@ object StateScaleBench {
     // be the only variable
     spark.conf.set("spark.sql.shuffle.partitions", "4")
 
-    val RocksProvider =
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    def withRocks[A](f: => A): A = {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
-      try f finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    def withRocks[A](f: => A): A =
+      graft.util.ScopedConf.withConfs(spark, StreamingIngest.RocksDbProvider)(f)
 
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadBefore = osBean.getSystemLoadAverage

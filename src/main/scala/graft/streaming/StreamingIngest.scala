@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.LongType
 
+import graft.util.ScopedConf
+
 /** Structured-Streaming re-expression of the reference's incremental
   * semantics (SURVEY §2.9): the billing source as an append-only stream,
   * consumed with `Trigger.AvailableNow` — engine-managed offsets replace
@@ -167,8 +169,6 @@ object StreamingIngest {
     * package namespace. Failure is ignored: this is hygiene, not
     * correctness, and must never fail a query over an internal rename.
     */
-  private[streaming] def unloadStateStoresForProfile(): Unit = unloadStateStores()
-
   private def unloadStateStores(): Unit =
     try {
       val cls = Class.forName("org.apache.spark.sql.execution.streaming.state.StateStore$")
@@ -181,18 +181,21 @@ object StreamingIngest {
     * cardinality (users/windows here), not to cores. Every stateful drain
     * in this file runs under this wrapper; a real deployment tunes the
     * number per query. Default 4 (round 19, was 8): the fixtures hold
-    * ~150 users / ~46 windows / ≤10 buckets of state, and DrainProfile
+    * ~150 users / ~46 windows / ≤10 buckets of state, and a per-batch
+    * drain profile (SCALE.md "Streaming drain floor", round 19)
     * measured each extra partition costing ~10-15 ms of store
     * open/commit + task overhead per micro-batch with zero parallelism
     * benefit at this state size (grain 8 → 4: keyed-agg drain
     * 0.83 → 0.72 s, mgws 0.64 → 0.59 s; 4 → 2 was inside noise, so 4
     * keeps headroom without paying for idle stores).
     */
-  private def withStateGrain[A](spark: SparkSession, partitions: Int = 4)(f: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withStateGrain[A](spark: SparkSession, partitions: Int = 4)(f: => A): A =
+    ScopedConf.withConfs(spark, "spark.sql.shuffle.partitions" -> partitions.toString)(f)
+
+  /** The RocksDB state-store provider, as a conf for [[ScopedConf.withConfs]]. */
+  private[graft] val RocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Disable the trailing no-data micro-batch for drains whose OUTPUT is
     * watermark-independent. An AvailableNow drain of a watermark-carrying
@@ -204,8 +207,8 @@ object StreamingIngest {
     * moment both sides exist; dropDuplicatesWithinWatermark: the first
     * occurrence emits on arrival) job (a) is vacuous, and (b) is
     * irrelevant to a drain whose checkpoint is discarded — the batch is
-    * pure overhead, measured at 0.3-0.8 s per drain (DrainProfile;
-    * SCALE.md "Streaming drain floor"). ADMISSIBILITY RULE: never use
+    * pure overhead, measured at 0.3-0.8 s per drain (SCALE.md
+    * "Streaming drain floor", round 19). ADMISSIBILITY RULE: never use
     * this on outer joins, Append-mode windowed aggregations, or
     * timer-based operators — their correctness depends on that final
     * batch (the left/full outer joins and both session-timer ops keep
@@ -213,15 +216,8 @@ object StreamingIngest {
     * batches for timely emission regardless. The DuckDB oracle pins
     * output equality for every query this wraps.
     */
-  private def withoutFinalNoDataBatch[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withoutFinalNoDataBatch[A](spark: SparkSession)(f: => A): A =
+    ScopedConf.withConfs(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(f)
 
   /** W3 as a *streaming* windowed aggregation: tumbling 1-day event-time
     * windows with a 1-hour watermark, complete at AvailableNow drain.
@@ -590,10 +586,7 @@ object StreamingIngest {
     */
   def streamSessionTimersTws(spark: SparkSession, dir: String): DataFrame =
     withStateGrain(spark) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try streamSessionTimersTwsInner(spark, dir)
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      ScopedConf.withConfs(spark, RocksDbProvider)(streamSessionTimersTwsInner(spark, dir))
     }
 
   private class SessionTimerProcessor(gapUs: Long)
@@ -933,10 +926,7 @@ object StreamingIngest {
     */
   def streamUserWatermarkTws(spark: SparkSession, dir: String): DataFrame =
     withStateGrain(spark) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try streamUserWatermarkTwsInner(spark, dir)
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      ScopedConf.withConfs(spark, RocksDbProvider)(streamUserWatermarkTwsInner(spark, dir))
     }
 
   private class MaxWatermarkProcessor

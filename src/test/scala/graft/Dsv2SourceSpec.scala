@@ -632,4 +632,16 @@ class Dsv2SourceSpec extends AnyFunSuite {
     assert(causes(e).exists(c => Option(c.getMessage).exists(_.contains("malformed"))),
       s"expected the reader's malformed-line error, got: $e")
   }
+
+  test("src_dsv2_spj_join moves no rows on a fresh session, under Spark's default confs") {
+    // the query sets no v2-bucketing conf: both keys it relies on default
+    // on, so a session that never touched them still plans the SPJ
+    val fresh = spark.newSession()
+    val df = SparkEntry.queries("src_dsv2_spj_join")(fresh, Sf0001)
+    assert(df.count() > 0)
+    assert(allShuffles(df.queryExecution.executedPlan).isEmpty,
+      s"SPJ must move no rows on either side\n${df.queryExecution.executedPlan}")
+    assert(!fresh.conf.getAll.keys.exists(_.startsWith("spark.sql.sources.v2.bucketing")),
+      "the query must not set v2-bucketing confs on the session")
+  }
 }

@@ -63,4 +63,27 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(fresh.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
   }
+
+  test("queries that override session confs put back what the session had") {
+    // a session that already runs RocksDB state and an armed scan guard
+    // keeps both after the queries that set them for their own drains
+    import graft.plans.ScanGuard
+    val fresh = spark.newSession()
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    fresh.conf.set(provider, rocks)
+    fresh.conf.set(ScanGuard.EnabledKey, "true")
+    fresh.conf.set(ScanGuard.PathsKey, "orders.parquet")
+    val grain = fresh.conf.get("spark.sql.shuffle.partitions")
+    Seq("stream_sessionize_rocksdb", "stream_session_timers_tws",
+      "stream_user_watermark_tws", "gov_scan_guard").foreach { q =>
+      assert(SparkEntry.queries(q)(fresh, Sf0001).count() > 0, q)
+      assert(fresh.conf.get(provider) == rocks, s"$q dropped the state-store provider")
+      assert(fresh.conf.get(ScanGuard.EnabledKey) == "true", s"$q disarmed the scan guard")
+      assert(fresh.conf.get(ScanGuard.PathsKey) == "orders.parquet",
+        s"$q dropped the guarded paths")
+      assert(fresh.conf.get("spark.sql.shuffle.partitions") == grain, s"$q kept its state grain")
+    }
+    assert(!fresh.conf.getAll.contains("spark.sql.streaming.noDataMicroBatches.enabled"))
+  }
 }

@@ -312,14 +312,10 @@ class PlanSpec extends AnyFunSuite {
   test("memory sinks are confined to the bounded-drain helper (SCALE.md sink rule)") {
     // the memory sink is driver-resident; the only sanctioned use is
     // runToMemory's Complete/Update-mode aggregate drains. A new
-    // format("memory") anywhere else in src/main is a scale regression.
-    // DrainProfile is a diagnostic main, not a registry query: its memory
-    // drains are Complete-mode bounded aggregates (same admissibility as
-    // runToMemory), and it needs the raw StreamingQuery handle for
-    // recentProgress, which the helper deliberately hides
-    val allowed = Set(
-      "src/main/scala/graft/streaming/StreamingIngest.scala",
-      "src/main/scala/graft/streaming/DrainProfile.scala")
+    // format("memory") anywhere else in src/main is a scale regression,
+    // dev mains included (the drain profile's numbers are on record in
+    // SCALE.md "Streaming drain floor", round 19)
+    val allowed = Set("src/main/scala/graft/streaming/StreamingIngest.scala")
     val offenders = mainSourcesContaining("format(\"memory\")")
     assert(offenders.subsetOf(allowed),
       s"memory sink outside the sanctioned drain helper: ${offenders -- allowed}")
@@ -337,6 +333,22 @@ class PlanSpec extends AnyFunSuite {
     // by construction; a main that differs sets it on the returned session
     assert(mainSourcesContaining("SparkSession.builder") ==
       Set("src/main/scala/graft/GraftSession.scala"))
+  }
+
+  test("the mains are Bench, Verify, PlanAudit and StateScaleBench") {
+    // each has its one-line reason in SCALE.md "Sweep hygiene"; a new dev
+    // main comes with its reason there, and a settled one is deleted
+    assert(mainSourcesContaining("def main(") == Set(
+      "src/main/scala/graft/Bench.scala", "src/main/scala/graft/Verify.scala",
+      "src/main/scala/graft/PlanAudit.scala",
+      "src/main/scala/graft/streaming/StateScaleBench.scala"))
+  }
+
+  test("session confs are put back in one place") {
+    // ScopedConf.withConfs restores each key's previous value or unsets it;
+    // a hand-written set-then-unset elsewhere drops what the session had
+    assert(mainSourcesContaining("conf.unset(") ==
+      Set("src/main/scala/graft/util/ScopedConf.scala"))
   }
 
   test("no system-property measurement seam in src/main") {

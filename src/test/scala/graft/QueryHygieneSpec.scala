@@ -92,4 +92,32 @@ class QueryHygieneSpec extends AnyFunSuite {
       assert(written > 0, "reliable checkpoint wrote no files")
     } finally spark.sparkContext.setCheckpointDir(null)
   }
+
+  test("every query served as a checkpoint exposes its pipeline to the plan tools") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan, WholeStageCodegenExec}
+    // derived from the query families: every query the registry serves
+    // whole as a checkpoint
+    assert(SparkEntry.pipelines.keySet == Set(
+      "basket_lift", "dedup_simhash", "dedup_minhash_lsh", "dedup_ngram_jaccard",
+      "dedup_containment", "dedup_incremental", "graph_triangles", "stats_kmv_setops",
+      "dedup_span_exact", "semdedup_prune", "ingest_screen_pipeline"))
+    def checkpointScan(p: SparkPlan): Boolean = p match {
+      case w: WholeStageCodegenExec => checkpointScan(w.child)
+      case _: RDDScanExec => true
+      case _ => false
+    }
+    SparkEntry.pipelines.toSeq.sortBy(_._1).foreach { case (name, pipeline) =>
+      val served = SparkEntry.queries(name)(spark, Sf0001)
+      assert(checkpointScan(served.queryExecution.executedPlan),
+        s"$name is not served as a checkpoint scan\n${served.queryExecution.executedPlan}")
+      GraftSqlBridge.releaseLocalCheckpoint(served)
+      val st = pipeline(spark, Sf0001)
+      try {
+        val plan = st.plan.queryExecution.executedPlan
+        assert(!checkpointScan(plan) && plan.toString.contains("Join"),
+          s"$name's pipeline must show its joins\n$plan")
+      } finally st.release()
+    }
+    assert(GraftSqlBridge.cacheManagerEmpty(spark))
+  }
 }
