@@ -93,10 +93,9 @@ object Bench {
         // blocks are dead after the count — free them in BOTH modes (this
         // is the query's own lifecycle, not harness hygiene).
         // INVARIANT: registry queries must not return plans referencing a
-        // SHARED checkpointed Dataset unless it was registered via
-        // GraftSqlBridge.protectSharedCheckpoint — this call unpersists
-        // every unprotected LogicalRDD in the plan, and local checkpoints
-        // are unrecoverable once unpersisted.
+        // SHARED checkpointed Dataset — this call unpersists every
+        // LogicalRDD in the plan, and local checkpoints are unrecoverable
+        // once unpersisted.
         org.apache.spark.sql.graft.GraftSqlBridge.releaseLocalCheckpoint(df)
         if (!sweepMode)
           spark.catalog.clearCache() // per-query caches must not leak across timings

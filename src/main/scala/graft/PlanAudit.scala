@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{EmptyRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{EmptyRelationExec, FormattedMode, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, LogicalQueryStage, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -13,7 +14,8 @@ import org.apache.spark.sql.graft.GraftSqlBridge
   * that ran. Each selected query is built once and executed with every
   * column of every row computed (what a noop sink does), so with AQE the
   * audited plan is the FINAL re-optimized one: runtime join rewrites,
-  * coalesced reads, stages AQE found empty and dropped. A hygienic query
+  * coalesced reads, subtrees AQE found empty and replaced (keeping the
+  * stages that ran before the replacement). A hygienic query
   * is run through its pipeline ([[SparkEntry.pipelines]]), since the plan
   * it serves is an opaque checkpoint scan; the pipeline's caches are
   * released afterwards. Side-effecting builders (ETL writes, stream
@@ -61,13 +63,24 @@ object PlanAudit {
     * stages unwrapped, the subqueries, and the plans that filled the
     * caches it reads (each cache once: a cache read twice is built once).
     * A reused exchange or subquery is a leaf, so its rows count once.
+    * When AQE replaced a subtree with an empty relation after some of its
+    * stages ran, those stages are kept in the replaced logical plan, and
+    * they count too.
     */
-  private def ranNodes(root: SparkPlan): Seq[SparkPlan] = {
+  private[graft] def ranNodes(root: SparkPlan): Seq[SparkPlan] = {
     val caches = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
+    // an empty relation keeps the plan it replaced, which may itself hold
+    // an earlier replacement
+    def stagesIn(l: LogicalPlan): Seq[SparkPlan] = l.flatMap {
+      case st: LogicalQueryStage => Seq(st.physicalPlan)
+      case er: EmptyRelation => stagesIn(er.logical)
+      case _ => Nil
+    }
     def walk(p: SparkPlan): Seq[SparkPlan] = {
       val inner = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case st: QueryStageExec => Seq(st.plan)
+        case e: EmptyRelationExec => stagesIn(e.logical)
         case m: InMemoryTableScanExec if !caches.exists(_ eq m.relation.cacheBuilder) =>
           caches += m.relation.cacheBuilder
           Seq(m.relation.cachedPlan)

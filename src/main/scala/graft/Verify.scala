@@ -19,10 +19,9 @@ object Verify {
         // blocks are dead once the dump is written — free them now rather
         // than waiting for a driver GC (no-op for lazy queries).
         // INVARIANT: registry queries must not return plans referencing a
-        // SHARED checkpointed Dataset unless it was registered via
-        // GraftSqlBridge.protectSharedCheckpoint — this call unpersists
-        // every unprotected LogicalRDD in the plan, and local checkpoints
-        // are unrecoverable once unpersisted.
+        // SHARED checkpointed Dataset — this call unpersists every
+        // LogicalRDD in the plan, and local checkpoints are unrecoverable
+        // once unpersisted.
         org.apache.spark.sql.graft.GraftSqlBridge.releaseLocalCheckpoint(df)
       }
       catch { case e: Throwable =>

@@ -1,8 +1,8 @@
 package graft.etl
 
-import java.sql.{Connection, DriverManager, SQLException}
+import java.sql.{Connection, DriverManager, PreparedStatement, ResultSet, SQLException, Timestamp}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.model.{ClientBillingConfig, EtlStatus, StepStatus}
 
@@ -10,30 +10,33 @@ import graft.model.{ClientBillingConfig, EtlStatus, StepStatus}
   * runs (MySQL: core/database/database_class.py:26-47,
   * billing_etl_db.py:12-162), with the reference's own table names.
   *
-  * Split of responsibilities, mirroring the reference:
-  *   - **reads** go through `spark.read.jdbc` — the control tables are
-  *     ordinary DataFrames to the rest of the engine, so every consumer
-  *     (watermark resume, config lookup join, saga read-back) is
-  *     backend-agnostic. Control tables are tiny (rows scale with
-  *     tenants, not data), so the single-partition default read is the
-  *     right plan; a genuinely large table would add
-  *     partitionColumn/numPartitions bounds.
-  *   - **appends** (S8 status log) go through the Spark JDBC writer.
-  *   - **updates** (S9/S10) are genuine SQL UPDATEs issued driver-side
-  *     with `rows_affected` from `executeUpdate` — exactly the
-  *     reference's cursor `.rowcount` contract. Unlike the FS backend's
-  *     snapshot-swap emulation, no table rewrite happens at all.
+  * Every call is plain JDBC on the driver, one prepared statement each,
+  * as the reference answers each control-plane question with one MySQL
+  * statement:
+  *   - **point reads** (config lookup, top-1 watermark, next seq) are one
+  *     SELECT each; the whole-table reads (`configs`, `steps`,
+  *     `statusLog`) SELECT every row and hand them to the rest of the
+  *     engine as local Datasets, so every consumer (saga read-back,
+  *     status queries) stays backend-agnostic. Control tables are tiny
+  *     (rows scale with tenants, not data).
+  *   - **appends** (S8 status log) are one INSERT.
+  *   - **updates** (S9/S10) are genuine SQL UPDATEs with `rows_affected`
+  *     from `executeUpdate` — exactly the reference's cursor `.rowcount`
+  *     contract. Unlike the FS backend's whole-file rewrite, no table
+  *     rewrite happens at all.
+  *   - **replace-whole-table** (the `put*` fixture path) is a DELETE plus a
+  *     batched INSERT in one transaction, so a reader sees the old rows or
+  *     the new ones, never an empty table.
   *
   * Tests run it on embedded Derby (`jdbc:derby:<dir>;create=true` — in
   * the Spark distribution's classpath already, since Hive metastores use
-  * it); the DDL is deliberately vanilla ANSI (INT/BIGINT/VARCHAR/
-  * TIMESTAMP/BOOLEAN) so the same class points at MySQL/Postgres by
-  * swapping url + driver.
+  * it); the DDL and statements are deliberately vanilla ANSI
+  * (INT/BIGINT/VARCHAR/TIMESTAMP/BOOLEAN) so the same class points at
+  * MySQL/Postgres by swapping url + driver.
   *
   * Identifier case: tables are created UNQUOTED, so the database folds
-  * names to its canonical case (upper, for Derby); reads rename columns
-  * back to the engine's lowercase schema positionally, and the Spark JDBC
-  * writer maps DataFrame fields onto table columns case-insensitively.
+  * names to its canonical case (upper, for Derby); the statements name
+  * columns unquoted too and read results by position.
   */
 final class JdbcMetaStore(
     url: String,
@@ -41,28 +44,42 @@ final class JdbcMetaStore(
     (implicit spark: SparkSession) extends MetaStore {
   import spark.implicits._
 
-  JdbcMetaStore.ensureDialect
-
   private val ConfigTable = "billing_alerts_setting"
   private val StepperTable = "user_stepper_form_step_status"
   private val StatusTable = "billing_etl_status"
 
+  // in the case classes' field order, so a row's productIterator binds them
   private val ConfigCols = Seq("org_id", "projectid", "billingdataset", "tableid",
     "pulsebillingdataset", "pulsetableid", "customerserviceaccountid")
   private val StepperCols = Seq("stepid", "org_id", "step_completed")
-  private val StatusCols = Seq("seq", "org_id", "project_id", "status", "end_date_time")
-
-  private def props: java.util.Properties = {
-    val p = new java.util.Properties()
-    p.setProperty("driver", driver)
-    p
-  }
 
   private def withConnection[A](f: Connection => A): A = {
     Class.forName(driver)
     val c = DriverManager.getConnection(url)
     try f(c) finally c.close()
   }
+
+  /** Binds `params` in order; None binds SQL NULL (the driver takes the
+    * parameter's type from the statement).
+    */
+  private def bind(ps: PreparedStatement, params: Seq[Any]): Unit =
+    params.zipWithIndex.foreach { case (v, i) =>
+      ps.setObject(i + 1, v match { case o: Option[_] => o.getOrElse(null); case x => x })
+    }
+
+  private def prepared[A](c: Connection, sql: String, params: Any*)(run: PreparedStatement => A): A = {
+    val ps = c.prepareStatement(sql)
+    try { bind(ps, params); run(ps) } finally ps.close()
+  }
+
+  private def query[A](sql: String, params: Any*)(row: ResultSet => A): Seq[A] =
+    withConnection(c => prepared(c, sql, params: _*) { ps =>
+      val rs = ps.executeQuery()
+      try Iterator.continually(rs).takeWhile(_.next()).map(row).toList finally rs.close()
+    })
+
+  private def update(sql: String, params: Any*): Long =
+    withConnection(c => prepared(c, sql, params: _*)(_.executeUpdate().toLong))
 
   /** Create-if-absent: Derby has no IF NOT EXISTS, so an existing table is
     * recognized by SQLState X0Y32 (MySQL/Postgres would use IF NOT EXISTS
@@ -75,9 +92,6 @@ final class JdbcMetaStore(
     finally st.close()
   }
 
-  // explicit DDL instead of writer-created tables: Spark's Derby dialect
-  // maps StringType to CLOB, which Derby refuses to compare with `=` —
-  // pushed-down filters (org_id + projectid point lookups) need VARCHAR
   ensureTable(s"""CREATE TABLE $ConfigTable (
     org_id INT NOT NULL, projectid VARCHAR(256) NOT NULL,
     billingdataset VARCHAR(256), tableid VARCHAR(256),
@@ -89,24 +103,36 @@ final class JdbcMetaStore(
     seq BIGINT NOT NULL, org_id INT NOT NULL, project_id VARCHAR(256) NOT NULL,
     status VARCHAR(32) NOT NULL, end_date_time TIMESTAMP)""")
 
-  /** `spark.read.jdbc` with the engine's lowercase column names restored
-    * (SELECT * returns columns in DDL order, so the rename is positional).
+  /** Replace-whole-table fixture path: DELETE + batched INSERT, committed
+    * together. `rows` hold the values in `cols` order.
     */
-  private def readTable(table: String, names: Seq[String]): DataFrame =
-    spark.read.jdbc(url, table, props).toDF(names: _*)
+  private def replaceTable(table: String, cols: Seq[String], rows: Seq[Seq[Any]]): Unit =
+    withConnection { c =>
+      c.setAutoCommit(false)
+      try {
+        prepared(c, s"DELETE FROM $table")(_.executeUpdate())
+        val marks = cols.map(_ => "?").mkString(", ")
+        prepared(c, s"INSERT INTO $table (${cols.mkString(", ")}) VALUES ($marks)") { ps =>
+          rows.foreach { r => bind(ps, r); ps.addBatch() }
+          ps.executeBatch()
+        }
+        c.commit()
+      } catch { case e: Throwable => c.rollback(); throw e }
+    }
 
-  /** Replace-whole-table fixture path: TRUNCATE (keeps our VARCHAR DDL —
-    * a drop-and-recreate by the writer would resurrect the CLOB mapping)
-    * + Spark JDBC append.
-    */
-  private def replaceTable(df: DataFrame, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("truncate", "true").jdbc(url, table, props)
+  private def configRow(rs: ResultSet) = ClientBillingConfig(rs.getInt(1), rs.getString(2),
+    rs.getString(3), rs.getString(4), Option(rs.getString(5)), Option(rs.getString(6)),
+    Option(rs.getString(7)))
+
+  private val SelectConfig = s"SELECT ${ConfigCols.mkString(", ")} FROM $ConfigTable"
 
   override def putConfigs(rows: Seq[ClientBillingConfig]): Unit =
-    replaceTable(rows.toDF(), ConfigTable)
+    replaceTable(ConfigTable, ConfigCols, rows.map(_.productIterator.toSeq))
 
-  override def configs: Dataset[ClientBillingConfig] =
-    readTable(ConfigTable, ConfigCols).as[ClientBillingConfig]
+  override def configs: Dataset[ClientBillingConfig] = query(SelectConfig)(configRow).toDS()
+
+  override def configFor(orgId: Int): Option[ClientBillingConfig] =
+    query(s"$SelectConfig WHERE org_id = ?", orgId)(configRow).headOption
 
   override def updateConfig(orgId: Int, projectId: String,
                             fields: Map[String, String]): Long = {
@@ -116,71 +142,35 @@ final class JdbcMetaStore(
       .toMap.toSeq.sortBy(_._1)
     if (allowed.isEmpty) return 0L
     val sets = allowed.map { case (k, _) => s"$k = ?" }.mkString(", ")
-    withConnection { c =>
-      val ps = c.prepareStatement(
-        s"UPDATE $ConfigTable SET $sets WHERE org_id = ? AND projectid = ?")
-      try {
-        allowed.zipWithIndex.foreach { case ((_, v), i) => ps.setString(i + 1, v) }
-        ps.setInt(allowed.size + 1, orgId)
-        ps.setString(allowed.size + 2, projectId)
-        ps.executeUpdate().toLong
-      } finally ps.close()
-    }
+    update(s"UPDATE $ConfigTable SET $sets WHERE org_id = ? AND projectid = ?",
+      allowed.map(_._2) ++ Seq(orgId, projectId): _*)
   }
 
   override def putSteps(rows: Seq[StepStatus]): Unit =
-    replaceTable(rows.toDF(), StepperTable)
+    replaceTable(StepperTable, StepperCols, rows.map(_.productIterator.toSeq))
 
   override def steps: Dataset[StepStatus] =
-    readTable(StepperTable, StepperCols).as[StepStatus]
+    query(s"SELECT ${StepperCols.mkString(", ")} FROM $StepperTable")(rs =>
+      StepStatus(rs.getInt(1), rs.getInt(2), rs.getBoolean(3))).toDS()
 
   override def updateStepCompleted(stepId: Int, orgId: Int, completed: Boolean): Long =
-    withConnection { c =>
-      val ps = c.prepareStatement(
-        s"UPDATE $StepperTable SET step_completed = ? WHERE stepid = ? AND org_id = ?")
-      try {
-        ps.setBoolean(1, completed)
-        ps.setInt(2, stepId)
-        ps.setInt(3, orgId)
-        ps.executeUpdate().toLong
-      } finally ps.close()
-    }
+    update(s"UPDATE $StepperTable SET step_completed = ? WHERE stepid = ? AND org_id = ?",
+      completed, stepId, orgId)
 
   override def appendStatus(seq: Long, s: EtlStatus): Unit =
-    Seq((seq, s.org_id, s.project_id, s.status, s.end_date_time.orNull))
-      .toDF(StatusCols: _*)
-      .coalesce(1).write.mode(SaveMode.Append).jdbc(url, StatusTable, props)
+    update(s"INSERT INTO $StatusTable (${MetaStore.StatusCols.mkString(", ")}) VALUES (?, ?, ?, ?, ?)",
+      seq, s.org_id, s.project_id, s.status, s.end_date_time)
 
-  override def statusLog: DataFrame = readTable(StatusTable, StatusCols)
-}
+  override def statusLog: DataFrame =
+    query(s"SELECT ${MetaStore.StatusCols.mkString(", ")} FROM $StatusTable")(rs =>
+      (rs.getLong(1), rs.getInt(2), rs.getString(3), rs.getString(4), Option(rs.getTimestamp(5))))
+      .toDF(MetaStore.StatusCols: _*)
 
-object JdbcMetaStore {
-  /** Spark's built-in Derby dialect maps StringType to CLOB, which poisons
-    * BOTH directions against our VARCHAR DDL: the writer's `setNull` binds
-    * Types.CLOB into VARCHAR columns (SQLState 22005), and Derby refuses
-    * `=` comparisons on CLOB if the writer ever created the table itself.
-    * This override maps StringType to VARCHAR(256) and leaves every other
-    * type to the built-in dialect (registered dialects are consulted
-    * first; None falls through).
-    */
-  private object DerbyVarcharDialect extends org.apache.spark.sql.jdbc.JdbcDialect {
-    override def canHandle(url: String): Boolean =
-      url.toLowerCase(java.util.Locale.ROOT).startsWith("jdbc:derby")
-    override def getJDBCType(dt: org.apache.spark.sql.types.DataType)
-        : Option[org.apache.spark.sql.jdbc.JdbcType] = dt match {
-      case org.apache.spark.sql.types.StringType =>
-        Some(org.apache.spark.sql.jdbc.JdbcType("VARCHAR(256)", java.sql.Types.VARCHAR))
-      case _ => None
-    }
-    // Derby TRUNCATE does not cascade; declaring it makes the writer's
-    // Overwrite+truncate path actually TRUNCATE instead of dropping and
-    // recreating the table (which would discard our DDL's unquoted,
-    // case-folded identifiers for quoted lowercase ones and break the
-    // driver-side UPDATE statements)
-    override def isCascadingTruncateTable(): Option[Boolean] = Some(false)
-  }
+  override def lastSuccessWatermark(orgId: Int, projectId: String): Option[Timestamp] =
+    query(s"SELECT MAX(end_date_time) FROM $StatusTable " +
+      "WHERE org_id = ? AND project_id = ? AND status = ?", orgId, projectId, EtlStatus.Success)(
+      rs => Option(rs.getTimestamp(1))).head
 
-  /** Idempotent one-time registration (lazy val body runs once per JVM). */
-  lazy val ensureDialect: Unit =
-    org.apache.spark.sql.jdbc.JdbcDialects.registerDialect(DerbyVarcharDialect)
+  override def nextStatusSeq: Long =
+    query(s"SELECT COALESCE(MAX(seq), 0) + 1 FROM $StatusTable")(_.getLong(1)).head
 }

@@ -3,8 +3,9 @@ package graft.etl
 import java.sql.Timestamp
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.model.{ClientBillingConfig, EtlStatus, StepStatus}
 
@@ -18,14 +19,18 @@ import graft.model.{ClientBillingConfig, EtlStatus, StepStatus}
   *   - `stepper` — same update pattern (S10)
   *   - `status`  — append-only log (S8); never rewritten
   *
-  * Two interchangeable backends implement the trait (MetaStoreSpec runs
-  * the same battery against both):
-  *   - [[FsMetaStore]] — versioned parquet snapshots + an atomically
-  *     swapped CURRENT pointer; no external service needed.
+  * Every call runs on the driver and launches no Spark job: the tables
+  * hold one row per tenant or per run, which the reference answers with
+  * one MySQL statement each. The Dataset-returning reads wrap driver rows
+  * in a local relation. Two interchangeable backends implement the trait
+  * (MetaStoreSpec runs the same battery against both):
+  *   - [[FsMetaStore]] — one JSON Lines file per updatable table, replaced
+  *     whole by an atomic rename, and a log of 1-row parquet files for
+  *     `status`; no external service needed.
   *   - [[JdbcMetaStore]] — a real JDBC database (embedded Derby in tests;
-  *     the URL/driver generalize to the reference's MySQL), read through
-  *     `spark.read.jdbc` and updated with genuine SQL UPDATEs, matching
-  *     the reference's `.rowcount` semantics.
+  *     the URL/driver generalize to the reference's MySQL), one prepared
+  *     statement per call, with genuine SQL UPDATEs matching the
+  *     reference's `.rowcount` semantics.
   */
 trait MetaStore {
 
@@ -46,8 +51,7 @@ trait MetaStore {
   /** Config point-lookup, S3/P2/F3 (reference: billing_etl_db.py:63-89).
     * Driver-side single-row fetch — the table is tiny by construction.
     */
-  def configFor(orgId: Int): Option[ClientBillingConfig] =
-    configs.where(col("org_id") === orgId).head(1).headOption
+  def configFor(orgId: Int): Option[ClientBillingConfig]
 
   // ----------------------------------------------------------------- stepper
 
@@ -73,113 +77,81 @@ trait MetaStore {
   /** Checkpoint top-1 read, S4/F2/O1/A3 (reference: billing_etl_db.py:45-61):
     * latest SUCCESS watermark for (org, project), None on first run.
     */
-  def lastSuccessWatermark(orgId: Int, projectId: String): Option[Timestamp] =
-    statusLog
-      .where(col("org_id") === orgId && col("project_id") === projectId &&
-        col("status") === EtlStatus.Success)
-      .agg(max(col("end_date_time")))
-      .head(1).headOption.flatMap(r => Option(r.getTimestamp(0)))
+  def lastSuccessWatermark(orgId: Int, projectId: String): Option[Timestamp]
 
-  def nextStatusSeq: Long =
-    statusLog.agg(coalesce(max(col("seq")), lit(0L))).head().getLong(0) + 1L
+  def nextStatusSeq: Long
 }
 
 object MetaStore {
   /** The reference's updatable-column whitelist (billing_etl_db.py:126-129). */
   val UpdatableConfigColumns: Set[String] = Set("pulsebillingdataset", "pulsetableid")
 
-  /** Default backend: versioned parquet + atomic pointer swap. */
+  /** Column names of [[MetaStore.statusLog]], in order. */
+  private[etl] val StatusCols = Seq("seq", "org_id", "project_id", "status", "end_date_time")
+
+  /** One status row, in [[StatusCols]] order. */
+  private[etl] type StatusRow = (Long, Int, String, String, Option[Timestamp])
+
+  /** Default backend: JSON Lines tables + a parquet status log. */
   def apply(root: String)(implicit spark: SparkSession): FsMetaStore =
     new FsMetaStore(root)
 }
 
-/** Filesystem backend. Vanilla Spark tables have no in-place UPDATE, so
-  * overwrites are implemented as **versioned snapshots with an
-  * atomically-swapped CURRENT pointer** (write the new snapshot dir in
-  * full, then atomic-rename a tiny pointer file): readers either see the
-  * old version or the new one, never a half-written table. This is the
-  * write-temp-then-swap pattern of SURVEY §7.4.5 and gives
-  * last-writer-wins under concurrent updaters. Control tables are tiny
+/** Filesystem backend. `config` and `stepper` are one JSON Lines file
+  * each (`$root/config.jsonl`, `$root/stepper.jsonl`; `spark.read.json`
+  * reads either as a table). Vanilla files have no in-place UPDATE, so an
+  * update reads the file, changes the rows on the driver and writes the
+  * file back whole through [[graft.util.Fs.writeSmallTextAtomic]] (write a
+  * temp in full, then rename over the target): readers see the old table
+  * or the new one, never a half-written one. This is the
+  * write-temp-then-swap pattern of SURVEY §7.4.5. Control tables are tiny
   * (one row per org), so rewriting them whole is O(orgs), not O(data) —
   * this never becomes a bottleneck at 100 TB of *billing* data because
   * config/status volume scales with tenants, not rows.
   *
-  * Because the tables are O(tenants), the authoritative working copy lives
-  * on the DRIVER: each read-modify-write folds the affected-row count into
-  * one in-memory pass and issues exactly one Spark write job (the durable
-  * snapshot), instead of a scan job + a count job + a rewrite job. Reads
-  * serve a LocalRelation-backed Dataset from a snapshot cache keyed by the
-  * CURRENT pointer version — every access still probes the pointer (one
-  * small FS read), so a concurrent updater's swap invalidates this
-  * instance's cache; the cache removes the Spark scan, not the coherence
-  * check. This mirrors what the reference gets for free from MySQL: the
-  * control plane is row-at-a-time state, not a distributed dataset.
+  * Updates are last-writer-wins PER TABLE, not per row: two instances
+  * updating different orgs' rows at once each write back the table they
+  * read, so one of the two updates can be lost. One writer per table at a
+  * time (the provisioning saga of one org at a time) is the supported
+  * shape; MetaStoreSpec's racing-saga test pins that a race on ONE row
+  * ends in one writer's complete last update.
+  *
+  * Every read goes back to storage (one small file read), so another
+  * instance's update is seen at once; nothing is cached across calls.
+  * Stores written with the earlier layout (`config/` and `stepper/`
+  * parquet snapshots behind a CURRENT pointer) are not read.
   */
 final class FsMetaStore(val root: String)(implicit spark: SparkSession)
     extends MetaStore {
   import spark.implicits._
+  import MetaStore.StatusRow
 
-  private val configDir = s"$root/config"
-  private val stepperDir = s"$root/stepper"
+  // All reads and writes go through graft.util.Fs (Hadoop FileSystem): the
+  // control-plane root is HDFS/S3/GCS at cluster scale, where a java.nio
+  // probe silently answers false — config lookups would come back empty
+  // and the watermark resume would restart from epoch.
+  private val configFile = s"$root/config.jsonl"
+  private val stepperFile = s"$root/stepper.jsonl"
   private val statusDir = s"$root/status/data"
 
-  // ---------------------------------------------------------------- versions
-  //
-  // All pointer probes/reads/swaps go through graft.util.Fs (Hadoop
-  // FileSystem): the control-plane root is HDFS/S3/GCS at cluster scale,
-  // where a java.nio probe silently answers false — config lookups would
-  // come back empty and the watermark resume would restart from epoch.
+  private def readTable[T](file: String, cls: Class[T]): Seq[T] =
+    graft.util.Fs.readSmallText(spark, file).toSeq
+      .flatMap(_.linesIterator.filter(_.nonEmpty))
+      .map(FsMetaStore.Json.readValue(_, cls))
 
-  private def currentPointer(tableDir: String): String = s"$tableDir/CURRENT"
-
-  private def currentVersion(tableDir: String): Option[String] =
-    graft.util.Fs.readSmallText(spark, currentPointer(tableDir)).map(_.trim)
-
-  /** tableDir -> (pointer version it was collected at, driver-side rows). */
-  private val snapCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Seq[Any])]
-
-  /** Write `rows` as a fresh snapshot, then atomically repoint CURRENT
-    * (write-in-full + rename-OVERWRITE; see Fs.writeSmallTextAtomic for the
-    * S3 caveat), and seed the snapshot cache with the rows just written.
-    */
-  private def overwriteVersioned(tableDir: String, df: DataFrame, rows: Seq[Any]): Unit = {
-    val v = s"v_${UUID.randomUUID().toString.take(8)}"
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/$v")
-    graft.util.Fs.writeSmallTextAtomic(spark, currentPointer(tableDir), v)
-    snapCache.put(tableDir, (v, rows))
-  }
-
-  /** Driver-side rows at the CURRENT version; one Spark collect on first
-    * read per version, pointer-probe-only afterwards.
-    */
-  private def snapshotRows[T](tableDir: String)(read: String => Seq[T]): Seq[T] =
-    currentVersion(tableDir) match {
-      case None => Seq.empty
-      case Some(v) =>
-        snapCache.get(tableDir) match {
-          case Some((`v`, rows)) => rows.asInstanceOf[Seq[T]]
-          case _ =>
-            val rows = read(s"$tableDir/$v")
-            snapCache.put(tableDir, (v, rows))
-            rows
-        }
-    }
+  private def writeTable(file: String, rows: Seq[AnyRef]): Unit =
+    graft.util.Fs.writeSmallTextAtomic(spark, file,
+      rows.map(FsMetaStore.Json.writeValueAsString(_) + "\n").mkString)
 
   private def configRows: Seq[ClientBillingConfig] =
-    snapshotRows(configDir)(p => spark.read.parquet(p).as[ClientBillingConfig].collect().toSeq)
+    readTable(configFile, classOf[ClientBillingConfig])
 
-  private def stepRows: Seq[StepStatus] =
-    snapshotRows(stepperDir)(p => spark.read.parquet(p).as[StepStatus].collect().toSeq)
+  private def stepRows: Seq[StepStatus] = readTable(stepperFile, classOf[StepStatus])
 
-  override def putConfigs(rows: Seq[ClientBillingConfig]): Unit =
-    overwriteVersioned(configDir, rows.toDF(), rows)
+  override def putConfigs(rows: Seq[ClientBillingConfig]): Unit = writeTable(configFile, rows)
 
   override def configs: Dataset[ClientBillingConfig] = configRows.toDS()
 
-  // point-lookup straight off the driver snapshot — no Dataset analysis
-  // per run (the trait default is kept for the JDBC backend, where the
-  // lookup IS a SQL query)
   override def configFor(orgId: Int): Option[ClientBillingConfig] =
     configRows.find(_.org_id == orgId)
 
@@ -191,21 +163,19 @@ final class FsMetaStore(val root: String)(implicit spark: SparkSession)
     def hit(r: ClientBillingConfig) = r.org_id == orgId && r.projectid == projectId
     val affected = rows.count(hit).toLong
     if (affected > 0) {
-      val updated = rows.map { r =>
+      writeTable(configFile, rows.map { r =>
         if (!hit(r)) r
         else allowed.foldLeft(r) {
           case (acc, ("pulsebillingdataset", v)) => acc.copy(pulsebillingdataset = Some(v))
           case (acc, ("pulsetableid", v)) => acc.copy(pulsetableid = Some(v))
           case (acc, _) => acc
         }
-      }
-      overwriteVersioned(configDir, updated.toDF(), updated)
+      })
     }
     affected
   }
 
-  override def putSteps(rows: Seq[StepStatus]): Unit =
-    overwriteVersioned(stepperDir, rows.toDF(), rows)
+  override def putSteps(rows: Seq[StepStatus]): Unit = writeTable(stepperFile, rows)
 
   override def steps: Dataset[StepStatus] = stepRows.toDS()
 
@@ -213,10 +183,8 @@ final class FsMetaStore(val root: String)(implicit spark: SparkSession)
     val rows = stepRows
     def hit(r: StepStatus) = r.stepid == stepId && r.org_id == orgId
     val affected = rows.count(hit).toLong
-    if (affected > 0) {
-      val updated = rows.map(r => if (hit(r)) r.copy(step_completed = completed) else r)
-      overwriteVersioned(stepperDir, updated.toDF(), updated)
-    }
+    if (affected > 0)
+      writeTable(stepperFile, rows.map(r => if (hit(r)) r.copy(step_completed = completed) else r))
     affected
   }
 
@@ -246,40 +214,27 @@ final class FsMetaStore(val root: String)(implicit spark: SparkSession)
 
   /** Driver-side mirror of the log, keyed by (unique) file name. Files
     * appended by THIS instance are cached at write time; files from other
-    * writers are picked up by listing the log dir and read in one batched
-    * Spark job on first sight — so the steady state launches no jobs at
-    * all, while a concurrent appender's rows are never missed. What every
-    * read still pays is that listing: one LIST of the flat log dir, reading
-    * only names and lengths (Fs's listing contract: no per-file permission
-    * probe, which forks a process per file on a local FS without Hadoop's
-    * native library). A run reads the log three times (the watermark resume
-    * and `nextStatusSeq` before each of its two appends), so its control-
-    * plane cost still grows with the log, at the rate of directory entries.
+    * writers are picked up by listing the log dir and read with parquet-mr
+    * on the driver on first sight — so no read launches a job, while a
+    * concurrent appender's rows are never missed. What every read still
+    * pays is that listing: one LIST of the flat log dir, reading only names
+    * and lengths (Fs's listing contract: no per-file permission probe,
+    * which forks a process per file on a local FS without Hadoop's native
+    * library). A run reads the log three times (the watermark resume and
+    * `nextStatusSeq` before each of its two appends), so its control-plane
+    * cost still grows with the log, at the rate of directory entries.
     */
-  private val statusFileRows =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Int, String, String, Option[Timestamp])]]
+  private val statusFileRows = scala.collection.concurrent.TrieMap.empty[String, Seq[StatusRow]]
 
-  private def statusRowsDriver(): Seq[(Long, Int, String, String, Option[Timestamp])] = {
-    val files = graft.util.Fs.listParquetFiles(spark, statusDir)
-      .map { case (p, _) => new org.apache.hadoop.fs.Path(p).getName -> p }
-    val unknown = files.filterNot { case (name, _) => statusFileRows.contains(name) }
-    if (unknown.nonEmpty) {
-      val byFile = spark.read.parquet(unknown.map(_._2): _*)
-        .select(input_file_name().as("_f"), col("seq"), col("org_id"),
-          col("project_id"), col("status"), col("end_date_time"))
-        .collect()
-        .groupBy(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName)
-      unknown.foreach { case (name, _) =>
-        statusFileRows.put(name, byFile.getOrElse(name, Array.empty).toSeq
-          .map(r => (r.getLong(1), r.getInt(2), r.getString(3), r.getString(4),
-            Option(r.getTimestamp(5)))))
-      }
+  private def statusRowsDriver(): Seq[StatusRow] = {
+    lazy val conf = spark.sessionState.newHadoopConf()
+    graft.util.Fs.listParquetFiles(spark, statusDir).flatMap { case (p, _) =>
+      val path = new Path(p)
+      statusFileRows.getOrElseUpdate(path.getName, FsMetaStore.readStatusFile(path, conf))
     }
-    files.flatMap { case (name, _) => statusFileRows.getOrElse(name, Seq.empty) }
   }
 
   override def appendStatus(seq: Long, s: EtlStatus): Unit = {
-    import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(statusDir)
     val fsys = dir.getFileSystem(conf)
@@ -314,13 +269,8 @@ final class FsMetaStore(val root: String)(implicit spark: SparkSession)
       Seq((seq, s.org_id, s.project_id, s.status, s.end_date_time)))
   }
 
-  override def statusLog: DataFrame =
-    statusRowsDriver().toDF("seq", "org_id", "project_id", "status", "end_date_time")
+  override def statusLog: DataFrame = statusRowsDriver().toDF(MetaStore.StatusCols: _*)
 
-  // Driver-side overrides of the trait's Spark-job reads: same semantics
-  // (MetaStoreSpec runs the battery against both backends), none of the
-  // per-run job-launch cost. JdbcMetaStore keeps the trait defaults — its
-  // reads are already row-at-a-time SQL.
   override def lastSuccessWatermark(orgId: Int, projectId: String): Option[Timestamp] = {
     val hits = statusRowsDriver().collect {
       case (_, o, p, st, Some(ts)) if o == orgId && p == projectId && st == EtlStatus.Success => ts
@@ -330,4 +280,60 @@ final class FsMetaStore(val root: String)(implicit spark: SparkSession)
 
   override def nextStatusSeq: Long =
     statusRowsDriver().foldLeft(0L)((m, r) => math.max(m, r._1)) + 1L
+}
+
+object FsMetaStore {
+  private val Json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule).build()
+
+  /** Rows of one status file, read with parquet-mr on the driver. The file
+    * may come from [[FsMetaStore.appendStatus]] or from a Spark write of the
+    * same columns (nullable, and with Spark's default INT96 timestamps).
+    */
+  private def readStatusFile(path: Path, conf: org.apache.hadoop.conf.Configuration)
+      : Seq[MetaStore.StatusRow] = {
+    // built on the caller's conf: the Path-based builder makes a fresh Hadoop
+    // Configuration per reader, whose first read parses the default XML
+    // resources (~15 ms a file, the bulk of a cold store's first read)
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+        new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport() = new org.apache.parquet.hadoop.example.GroupReadSupport()
+    }.build()
+    def has(g: Group, f: String) = g.getFieldRepetitionCount(f) > 0
+    def str(g: Group, f: String) = if (has(g, f)) g.getString(f, 0) else null
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+      (g.getLong("seq", 0), g.getInteger("org_id", 0), str(g, "project_id"), str(g, "status"),
+        Option.when(has(g, "end_date_time"))(timestampAt(g, "end_date_time")))
+    }.toList
+    finally reader.close()
+  }
+
+  private val JulianDayOfEpoch = 2440588L
+  private val MicrosPerDay = 86400L * 1000000L
+
+  /** A parquet timestamp field as a Timestamp: INT64 in any unit, or INT96
+    * (nanos of the day, then the Julian day, both little-endian).
+    */
+  private def timestampAt(g: Group, f: String): Timestamp = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val t = g.getType.getType(f).asPrimitiveType()
+    val micros = (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (PrimitiveTypeName.INT96, _) =>
+        val b = g.getInt96(f, 0).toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        val nanosOfDay = b.getLong
+        (b.getInt - JulianDayOfEpoch) * MicrosPerDay + nanosOfDay / 1000L
+      case (PrimitiveTypeName.INT64, ts: TimestampLogicalTypeAnnotation) =>
+        val v = g.getLong(f, 0)
+        ts.getUnit match {
+          case TimeUnit.MILLIS => v * 1000L
+          case TimeUnit.MICROS => v
+          case TimeUnit.NANOS => Math.floorDiv(v, 1000L)
+        }
+      case _ => throw new IllegalArgumentException(s"status column $f is not a timestamp: $t")
+    }
+    Timestamp.from(java.time.Instant.ofEpochSecond(
+      Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L))
+  }
 }

@@ -53,17 +53,11 @@ object EngineError {
   final case class MissingConfig(orgId: Int) extends EngineError {
     def message = s"no billing_alerts_setting row for org_id=$orgId"
   }
-  final case class InvalidMessage(detail: String) extends EngineError {
-    def message = s"invalid job message: $detail"
-  }
   final case class ProvisioningFailed(detail: String) extends EngineError {
     def message = s"provisioning saga failed: $detail"
   }
   final case class ExtractionFailed(detail: String) extends EngineError {
     def message = s"extraction failed: $detail"
-  }
-  final case class LoadFailed(detail: String) extends EngineError {
-    def message = s"load failed: $detail"
   }
   final case class CredentialDenied(orgId: Int, serviceAccount: String) extends EngineError {
     def message = s"credential denied for org_id=$orgId sa=$serviceAccount"

@@ -131,8 +131,8 @@ object EtlOps extends QueryFamily {
 
   /** The same saga through the real-JDBC control plane (embedded Derby —
     * the reference's MySQL shape): S9/S10 are genuine SQL UPDATEs with
-    * `.rowcount` semantics, and the read-back goes through
-    * `spark.read.jdbc`. Distinct org id keeps its catalog namespace and
+    * `.rowcount` semantics, and the read-back is a plain JDBC SELECT.
+    * Distinct org id keeps its catalog namespace and
     * oracle row disjoint from the FS variant.
     */
   private def etlProvisionSagaJdbc(spark: SparkSession, dir: String): DataFrame = {

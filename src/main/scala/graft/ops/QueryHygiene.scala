@@ -23,7 +23,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * Cluster note: `localCheckpoint` blocks live on executors, so an
   * executor loss between the checkpoint and the caller's terminal action
-  * fails the query (it simply re-runs — the inputs are immutable). That is
+  * fails the query (it simply re-runs — the inputs are immutable;
+  * QueryHygieneSpec drops a served query's blocks and pins both). That is
   * the same trade the iterative ops' default [[ClusterOps.localCheckpointer]]
   * makes; jobs wanting executor-loss-proof intermediates pass
   * [[ClusterOps.reliableCheckpointer]] (and set a checkpoint dir) to

@@ -30,51 +30,11 @@ object GraftSqlBridge {
     * are untouched: their RDDs are not persisted, so `unpersist` is a
     * no-op and the files stay owned by the checkpoint dir's lifecycle.
     */
-  /** RDD ids whose checkpoint blocks OUTLIVE a single query — memoized /
-    * session-shared checkpointed Datasets register here so a caller-side
-    * [[releaseLocalCheckpoint]] (Bench/Verify free every returned result's
-    * blocks after consuming it) cannot destroy them: a local checkpoint
-    * has no lineage, so an unpersisted one is unrecoverable, and every
-    * later query sharing the memo would fail. Today all SessionMemos
-    * store paths or collected rows, so the set stays empty — this guard
-    * exists so the NEXT memo that caches a checkpointed plan is safe by
-    * construction (register at memo-build time).
-    */
-  private val protectedRddIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
-  // RDD ids restart from 0 when a SparkContext is recreated in the same
-  // JVM, so the key carries the owning context's applicationId — a stale
-  // protection from a stopped context can never shield an unrelated new
-  // checkpoint that happens to reuse the integer id.
-  private def key(lr: org.apache.spark.sql.execution.LogicalRDD): (String, Int) =
-    (lr.rdd.context.applicationId, lr.rdd.id)
-
-  /** Marks a checkpointed Dataset as shared: [[releaseLocalCheckpoint]]
-    * will skip its blocks. Call once, when the Dataset is built, before
-    * handing it to any registry query.
-    */
-  def protectSharedCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val _ = protectedRddIds.add(key(lr))
-      case _ => ()
-    }
-
   def releaseLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD
-          if !protectedRddIds.contains(key(lr)) =>
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
-    }
-
-  /** RDD ids of the LogicalRDD leaves in a plan — test-only introspection
-    * (LogicalRDD is private[sql]) for pinning the protect/release guard.
-    */
-  def logicalRddIds(df: DataFrame): Seq[Int] =
-    df.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }
 
   /** True when the session's CacheManager holds no cached relations —

@@ -7,9 +7,9 @@ import graft.model.{ClientBillingConfig, EtlStatus, StepStatus}
 
 /** Control-table semantics: S9/S10 whitelisted UPDATEs, S8 append log, S4
   * checkpoint read (SURVEY §7.4 items 3/5) — the SAME battery against both
-  * backends: the versioned-parquet FS store and the real-JDBC (embedded
-  * Derby) store, so backend choice can never change control-plane
-  * behavior.
+  * backends: the FS store (JSON Lines tables, parquet status log) and the
+  * real-JDBC (embedded Derby) store, so backend choice can never change
+  * control-plane behavior.
   */
 class MetaStoreSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -96,7 +96,7 @@ class MetaStoreSpec extends AnyFunSuite {
   test("FS status log: a second instance's appends are visible through the driver cache") {
     // the driver-side status mirror must never go stale against a foreign
     // appender: visibility comes from the per-read FS listing, and rows of
-    // unseen files are fetched in one batched read
+    // unseen files are read with parquet-mr on the driver
     val root = tmpDir("meta_xinst_")
     val a = MetaStore(s"$root/meta")
     val b = MetaStore(s"$root/meta")
@@ -203,6 +203,88 @@ class MetaStoreSpec extends AnyFunSuite {
       val seqs = fin.statusLog.select("seq").collect().map(_.getLong(0)).sorted
       assert(seqs.toSeq == (1L to 2L * n).toSeq,
         s"$name: all ${2 * n} concurrent status appends must land exactly once")
+    }
+  }
+
+  test("no call launches a Spark job, on storage another instance wrote (both backends)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t1 = utcTs("2024-01-10 00:00:00")
+    val t2 = utcTs("2024-01-12 06:30:00.123456")
+    val t3 = utcTs("2024-01-13 00:00:00")
+    val c1 = ClientBillingConfig(1, "p1", "bd", "t", Some("ds1"), None, None)
+    val c2 = ClientBillingConfig(2, "p2", "bd2", "t2", None, None, Some("sa2"))
+    val envs: Seq[(String, () => MetaStore)] = Seq(
+      { val root = tmpDir("meta_nojob_")
+        // a status file written by Spark itself (default INT96 timestamps,
+        // nullable columns), with a row whose end_date_time is null
+        import org.apache.spark.sql.Row
+        import org.apache.spark.sql.types._
+        val schema = StructType(Seq(StructField("seq", LongType), StructField("org_id", IntegerType),
+          StructField("project_id", StringType), StructField("status", StringType),
+          StructField("end_date_time", TimestampType)))
+        spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+          Row(3L, 1, "p1", EtlStatus.Success, t2), Row(4L, 1, "p1", EtlStatus.Failed, null)), 1), schema)
+          .write.parquet(s"$root/status/data")
+        val sparkFile = new java.io.File(s"$root/status/data").listFiles()
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(sparkFile.getPath), new org.apache.hadoop.conf.Configuration()))
+        try assert(footer.getFileMetaData.getSchema.getColumnDescription(Array("end_date_time"))
+          .getPrimitiveType.getPrimitiveTypeName.name == "INT96")
+        finally footer.close()
+        ("fs", () => MetaStore(root)) },
+      { val url = s"jdbc:derby:${tmpDir("meta_nojob_jdbc_")}/db;create=true"
+        val other = new JdbcMetaStore(url)
+        other.appendStatus(3, EtlStatus(1, "p1", EtlStatus.Success, Some(t2)))
+        other.appendStatus(4, EtlStatus(1, "p1", EtlStatus.Failed, None))
+        ("jdbc", () => new JdbcMetaStore(url)) })
+    envs.foreach { case (name, make) =>
+      val writer = make()
+      writer.putConfigs(Seq(c1, c2))
+      writer.putSteps(Seq(StepStatus(3, 1, step_completed = false)))
+      writer.appendStatus(1, EtlStatus(1, "p1", EtlStatus.InProgress, Some(t1)))
+      writer.appendStatus(2, EtlStatus(1, "p1", EtlStatus.Success, Some(t1)))
+
+      val tag = java.util.UUID.randomUUID().toString
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("graft.test.jobs") == tag)) jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setLocalProperty("graft.test.jobs", tag)
+      try {
+        val m = make()
+        assert(m.configFor(1).contains(c1) && m.configFor(9).isEmpty, name)
+        assert(m.configs.collect().toSet == Set(c1, c2), name)
+        assert(m.steps.collect().toSeq == Seq(StepStatus(3, 1, step_completed = false)), name)
+        val log = m.statusLog.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
+          r.getString(3), Option(r.getTimestamp(4)))).sortBy(_._1).toSeq
+        assert(log == Seq((1L, 1, "p1", EtlStatus.InProgress, Some(t1)),
+          (2L, 1, "p1", EtlStatus.Success, Some(t1)), (3L, 1, "p1", EtlStatus.Success, Some(t2)),
+          (4L, 1, "p1", EtlStatus.Failed, None)), name)
+        assert(m.lastSuccessWatermark(1, "p1").contains(t2), name)
+        assert(m.lastSuccessWatermark(2, "p2").isEmpty, name)
+        assert(m.nextStatusSeq == 5L, name)
+        assert(m.updateConfig(1, "p1", Map("pulsetableid" -> "tb9")) == 1, name)
+        assert(m.configFor(1).contains(c1.copy(pulsetableid = Some("tb9"))), name)
+        assert(m.updateStepCompleted(3, 1, completed = true) == 1, name)
+        assert(m.steps.collect().toSeq == Seq(StepStatus(3, 1, step_completed = true)), name)
+        m.appendStatus(5, EtlStatus(1, "p1", EtlStatus.Success, Some(t3)))
+        assert(m.lastSuccessWatermark(1, "p1").contains(t3), name)
+        assert(m.nextStatusSeq == 6L, name)
+        assert(m.statusLog.collect().length == 5, name)
+        m.putConfigs(Seq(c2))
+        m.putSteps(Seq(StepStatus(4, 2, step_completed = true)))
+        assert(m.configFor(1).isEmpty && m.configs.collect().toSeq == Seq(c2), name)
+        assert(m.steps.collect().toSeq == Seq(StepStatus(4, 2, step_completed = true)), name)
+      } finally {
+        spark.sparkContext.setLocalProperty("graft.test.jobs", null)
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(jobs.get == 0, s"$name: ${jobs.get} Spark jobs ran for control-plane calls")
     }
   }
 

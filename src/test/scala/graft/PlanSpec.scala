@@ -398,6 +398,34 @@ class PlanSpec extends AnyFunSuite {
     assert(unions.isEmpty, s"unionByName in the ETL job: $unions")
   }
 
+  test("the control plane runs on the driver: no Spark JDBC dialect, write or file-name read") {
+    // MetaStore calls launch no Spark job; a JDBC dialect registration is
+    // JVM-global and changes the DDL of every other Spark JDBC write
+    assert(mainSourcesContaining("JdbcDialects").isEmpty)
+    Seq("src/main/scala/graft/etl/MetaStore.scala", "src/main/scala/graft/etl/JdbcMetaStore.scala")
+      .foreach { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))
+        // a DataFrameWriter (`.write` not called as a method); parquet-mr's
+        // `writer.write(group)` on the driver is the status append itself
+        assert("""\.write\b(?!\s*\()""".r.findFirstIn(src).isEmpty, s"$f uses a Spark writer")
+        assert(!src.contains("input_file_name"), s"$f reads files through Spark")
+      }
+  }
+
+  test("PlanAudit counts the shuffle stages that ran before AQE emptied the plan") {
+    // the partial aggregate's shuffle stage runs and finds no rows; AQE
+    // replaces the final aggregate with an empty relation, then the sort
+    // above it (and its range exchange, which never runs) with another
+    import org.apache.spark.sql.execution.EmptyRelationExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val df = spark.range(0, 1000).where(col("id") < 0)
+      .groupBy((col("id") % 10).as("k")).count().orderBy("k")
+    assert(df.collect().isEmpty)
+    val ran = PlanAudit.ranNodes(df.queryExecution.executedPlan)
+    assert(ran.exists(_.isInstanceOf[EmptyRelationExec]), s"not emptied:\n${ran.head}")
+    assert(ran.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, ran.mkString("\n"))
+  }
+
   test("analytic joins: fixed dims broadcast, no cartesian, distinct via Expand") {
     // q5: nation/region are fixed-cardinality at any SF — their broadcasts
     // are pinned; everything else is AQE's call. No plan may go cartesian.

@@ -51,23 +51,21 @@ class QueryHygieneSpec extends AnyFunSuite {
     assert(GraftSqlBridge.cacheManagerEmpty(spark))
   }
 
-  test("protectSharedCheckpoint shields a shared Dataset from release") {
-    import spark.implicits._
-    val shared = (1 to 100).toDF("x").localCheckpoint(eager = true)
-    val ephemeral = (1 to 100).toDF("y").localCheckpoint(eager = true)
-    GraftSqlBridge.protectSharedCheckpoint(shared)
-    // Bench/Verify free every returned result's blocks — a shared memoized
-    // checkpoint must survive that (a local checkpoint has no lineage, so
-    // an unpersisted one is unrecoverable for every later query)
-    GraftSqlBridge.releaseLocalCheckpoint(shared)
-    GraftSqlBridge.releaseLocalCheckpoint(ephemeral)
-    val persistedIds = spark.sparkContext.getPersistentRDDs.keySet
-    assert(GraftSqlBridge.logicalRddIds(shared).forall(persistedIds.contains),
-      "protected checkpoint blocks were unpersisted")
-    assert(GraftSqlBridge.logicalRddIds(ephemeral).forall(!persistedIds.contains(_)),
-      "unprotected checkpoint blocks were not freed")
-    assert(shared.count() == 100) // still readable after the release pass
-    shared.unpersist(blocking = false)
+  test("a lost checkpoint block fails the next action cleanly; a rebuild returns the same rows") {
+    // QueryHygiene's cluster note: local checkpoint blocks live on
+    // executors, so losing them fails the query instead of serving wrong
+    // rows, and the query simply re-runs from its immutable inputs
+    val name = "dedup_span_exact"
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val served = SparkEntry.queries(name)(spark, Sf0001)
+    val before = rows(served)
+    assert(before.nonEmpty)
+    GraftSqlBridge.releaseLocalCheckpoint(served)
+    val e = intercept[org.apache.spark.SparkException](served.collect())
+    assert(e.getMessage.contains("Checkpoint block rdd_"), e.getMessage)
+    val rebuilt = SparkEntry.queries(name)(spark, Sf0001)
+    try assert(rows(rebuilt) == before)
+    finally GraftSqlBridge.releaseLocalCheckpoint(rebuilt)
   }
 
   test("hygienic() with the reliable checkpointer survives and matches") {
