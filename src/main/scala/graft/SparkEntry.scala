@@ -37,7 +37,7 @@ object SparkEntry {
     val r = etl.EtlJob.run(spark, meta, src, "ts", s"$tmp/dest",
       graft.model.EtlJobMessage(1), jobTime, sleeper = _ => ())
     require(r.isRight, s"entry run failed: $r")
-    etl.EtlJob.readDestination(spark, s"$tmp/dest")
+    etl.Destination.read(spark, s"$tmp/dest")
   }
 
   /** The query families, in the order their maps merge. */

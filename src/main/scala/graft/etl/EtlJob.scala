@@ -1,16 +1,13 @@
 package graft.etl
 
-import java.io.{FileNotFoundException, IOException}
 import java.sql.Timestamp
 import java.time.{Instant, ZoneId}
 import java.time.temporal.ChronoUnit
-import java.util.UUID
 
 import scala.util.Random
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{EngineError, EtlJobMessage, EtlStatus}
@@ -42,7 +39,7 @@ object EtlJob {
     *    duplicates on every consecutive run.
     *  - Exact — idempotent: strict `>` resume (boundary rows were already
     *    loaded — they ARE the watermark) plus an append whose files are
-    *    named after the window ([[appendRun]]). Every attempt first deletes
+    *    named after the window ([[loadWindow]]). Every attempt first deletes
     *    the files an unfinished attempt at the same window left, so both
     *    the steady state and crash-replay produce no duplicates.
     *    Trade-offs: a reader can see a run's files before its SUCCESS row
@@ -170,14 +167,14 @@ object EtlJob {
         // tasks on huge ones — the shape a 100 TB daily increment needs.
         // Plain repartition(col) would pin one task per date (hot-date
         // bottleneck); no-AQE sessions degrade to the pre-rebalance plan.
-        val out = transformed.withColumn("export_date", to_date(col(watermarkCol)))
-          .hint("rebalance", col("export_date"))
+        val out = transformed
+          .withColumn(Destination.PartitionCol, to_date(col(watermarkCol)))
+          .hint("rebalance", col(Destination.PartitionCol))
         mode match {
           case Parity =>
-            if (stats.rows > 0)
-              out.write.mode(SaveMode.Append).partitionBy("export_date").parquet(destDir)
+            if (stats.rows > 0) Destination.append(out, destDir)
           case Exact =>
-            appendRun(spark, if (stats.rows > 0) Some(out) else None, destDir,
+            loadWindow(spark, if (stats.rows > 0) Some(out) else None, destDir,
               message.org_id, start)
         }
 
@@ -212,116 +209,23 @@ object EtlJob {
     Left(EngineError.ExtractionFailed(detail))
   }
 
-  /** Read the destination back without the layout column. */
-  def readDestination(spark: SparkSession, destDir: String): DataFrame =
-    spark.read.parquet(destDir).drop("export_date")
-
-  /** Exact mode's load: an append under the window's tag
-    * `run-o<org>-w<start µs>`, after a roll-back by that tag.
+  /** Exact mode's load under the window's tag `run-o<org>-w<start µs>`
+    * ([[Destination.appendRun]]).
     *
     * Every attempt at a window that never reached SUCCESS resumes from the
     * same `start` (the max SUCCESS watermark), while a committed non-empty
     * run moves that watermark past its own start, so no committed file
     * carries the tag being loaded (a committed empty run writes no files).
-    * Roll-back deletes what an unfinished attempt at this window may have
-    * left: the stage `destDir/_staging_<tag>` and every `<tag>-*` file in
-    * the `export_date` partitions dated on or after `start` (an attempt
-    * writes no row before its window). Then `out`, when there is one, is
-    * written into that stage and each staged file moves into its partition
-    * as `<tag>-<name>` ([[publishFiles]]); the emptied stage is deleted.
-    * No committed file is read, rewritten or deleted. The roll-back only
-    * finds files named after the window, so a maintenance writer
-    * ([[replacePartitions]]) must not run between a crashed attempt and
-    * its replay: it would re-encode the crashed rows into untagged files.
+    * An attempt writes no row before its window, so the roll-back searches
+    * the partitions dated on or after `start`.
     */
-  private def appendRun(spark: SparkSession, out: Option[DataFrame], destDir: String,
+  private def loadWindow(spark: SparkSession, out: Option[DataFrame], destDir: String,
                         orgId: Int, start: Timestamp): Unit = {
     val tag = s"run-o$orgId-w${ChronoUnit.MICROS.between(Instant.EPOCH, start.toInstant)}"
     // to_date(start) in the session time zone, spelled as the partition
     // directories spell it; the first window has no lower bound
     val fromDate = if (start == IncrementalExtract.Epoch) "" else start.toInstant
       .atZone(ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)).toLocalDate.toString
-    val destPath = new Path(destDir)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val stagePath = new Path(destPath, s"_staging_$tag")
-    def list(p: Path) = try fs.listStatus(p).toSeq catch { case _: FileNotFoundException => Nil }
-    fs.delete(stagePath, true)
-    list(destPath)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("export_date=") &&
-        st.getPath.getName.stripPrefix("export_date=") >= fromDate)
-      .flatMap(st => list(st.getPath))
-      .filter(_.getPath.getName.startsWith(s"$tag-"))
-      .foreach(st => fs.delete(st.getPath, false))
-    out.foreach { df =>
-      df.write.mode(SaveMode.Overwrite).partitionBy("export_date").parquet(stagePath.toString)
-      publishFiles(fs, stagePath, destPath, tag)
-      fs.delete(stagePath, true)
-    }
-  }
-
-  /** Move every `part-` file staged under `stageDir`, at its top level or
-    * in a `col=value` subdirectory, into the same place under `destDir` as
-    * `<prefix>-<name>`. One rename per file — a metadata move on HDFS and
-    * local disk. Renames are idempotent on these deterministic names: a
-    * failed rename whose target exists was done by a racing publisher of
-    * the same stage, and counts as done. Returns the published names
-    * relative to `destDir`.
-    */
-  def publishFiles(fs: FileSystem, stageDir: Path, destDir: Path,
-                   prefix: String): Seq[String] = {
-    def walk(from: Path, into: Path, rel: String): Seq[String] = {
-      fs.mkdirs(into)
-      fs.listStatus(from).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.contains("=")) walk(st.getPath, new Path(into, name), s"$rel$name/")
-        else if (st.isDirectory || !name.startsWith("part-")) Nil
-        else {
-          val to = new Path(into, s"$prefix-$name")
-          if (!fs.rename(st.getPath, to) && !fs.exists(to))
-            throw new IOException(s"publish failed for ${st.getPath}")
-          Seq(s"$rel${to.getName}")
-        }
-      }
-    }
-    walk(stageDir, destDir, "")
-  }
-
-  /** Replace the `partitionCol` partitions of `destDir` that `df` holds
-    * rows for, leaving every other partition's files untouched. `df` is
-    * written, partitioned, into one hidden `_staging_<uuid>` directory
-    * inside `destDir` (underscore-prefixed, so no reader lists it; same
-    * filesystem, so the swap is a metadata move). `df` may read `destDir`
-    * itself: nothing there changes until the write has finished. A failed
-    * write deletes the stage and rethrows, leaving `destDir`'s partitions
-    * as they were (a missing `destDir` is left behind empty).
-    * Each staged `col=value` directory is then swapped in by deleting the
-    * old one and renaming the new one, the two steps Spark's
-    * dynamic-overwrite commit takes. A reader that lists a partition
-    * between those two steps finds it absent; nothing is atomic across
-    * partitions. Returns the replaced values as they appear in the
-    * directory names, sorted. Only the maintenance writers (compaction,
-    * tombstone deletes, backfill) replace partitions; ETL runs append.
-    */
-  def replacePartitions(spark: SparkSession, df: DataFrame, partitionCol: String,
-                        destDir: String): Seq[String] = {
-    val destPath = new Path(destDir)
-    val stagePath = new Path(destPath, s"_staging_${UUID.randomUUID()}")
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    try df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(stagePath.toString)
-    catch {
-      case e: Throwable =>
-        fs.delete(stagePath, true)
-        throw e
-    }
-    val replaced = fs.listStatus(stagePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partitionCol="))
-      .map { st =>
-        val to = new Path(destPath, st.getPath.getName)
-        fs.delete(to, true)
-        require(fs.rename(st.getPath, to), s"partition swap rename failed: ${st.getPath} -> $to")
-        st.getPath.getName.stripPrefix(s"$partitionCol=")
-      }
-    fs.delete(stagePath, true) // _SUCCESS marker + emptied scaffold
-    replaced.sorted
+    Destination.appendRun(spark, out, destDir, tag, fromDate)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.etl.{CatalogOps, EtlJob, JdbcMetaStore, MetaStore}
+import graft.etl.{CatalogOps, Destination, EtlJob, JdbcMetaStore, MetaStore}
 import graft.model.{ClientBillingConfig, EngineError, EtlJobMessage, StepStatus}
 
 /** Oracle-checkable queries that exercise the end-to-end ETL slice
@@ -71,7 +71,7 @@ object EtlOps extends QueryFamily {
     */
   private def etlRunDest(spark: SparkSession, dir: String): DataFrame = {
     val (_, dest) = runTwice(spark, dir)
-    EtlJob.readDestination(spark, dest)
+    Destination.read(spark, dest)
       .select(col("event_id"), fmt(col("ts")).as("ts_iso"), col("user_id"),
         col("event_type"), col("value"), col("props"))
       .orderBy(col("event_id"))
@@ -160,7 +160,7 @@ object EtlOps extends QueryFamily {
     val r2 = EtlJob.run(spark, meta, src, "ts", dest, msg, utcTs(End),
       sleeper = _ => (), mode = EtlJob.Exact)
     require(r1.isRight && r2.isRight, s"exact etl runs failed: $r1 / $r2")
-    EtlJob.readDestination(spark, dest)
+    Destination.read(spark, dest)
       .select(col("event_id"), fmt(col("ts")).as("ts_iso"))
       .orderBy(col("event_id"))
   }
@@ -187,7 +187,7 @@ object EtlOps extends QueryFamily {
     val r2 = EtlJob.run(spark, meta, src.unionByName(late), "ts", dest,
       EtlJobMessage(7), utcTs(End), sleeper = _ => ())
     require(r2.isRight, s"parity run2 failed: $r2")
-    val dst = EtlJob.readDestination(spark, dest)
+    val dst = Destination.read(spark, dest)
     dst.agg(
       sum(when(col("event_id") === -999L, 1L).otherwise(0L)).as("late_rows_loaded"),
       count(lit(1)).as("total_rows"))
@@ -206,7 +206,7 @@ object EtlOps extends QueryFamily {
       EtlJobMessage(7), utcTs(Mid), sleeper = _ => (),
       transform = df => df.withColumn("etl_tag", upper(col("event_type"))))
     require(r.isRight, s"run failed: $r")
-    EtlJob.readDestination(spark, dest)
+    Destination.read(spark, dest)
       .select(col("event_id"), col("etl_tag"))
       .orderBy(col("event_id"))
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.etl.{EtlJob, MetaStore}
+import graft.etl.{Destination, EtlJob, MetaStore}
 import graft.model.{ClientBillingConfig, EtlJobMessage}
 import graft.schema.BillingExportSchema
 
@@ -207,7 +207,7 @@ object NestedBillingOps extends QueryFamily {
     * array-of-struct value survived parquet → JSON → parquet intact.
     */
   private def etlNestedCredits(spark: SparkSession, dir: String): DataFrame =
-    nestedRollup(EtlJob.readDestination(spark, nestedDest(spark, dir)))
+    nestedRollup(Destination.read(spark, nestedDest(spark, dir)))
 
   /** The shared rollup over a destination's nested rows — see
     * [[etlNestedCredits]]'s doc for what each column proves.

@@ -1,17 +1,22 @@
 package graft.ops
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.etl.Destination
 
 /** Scale utilities that don't map to a single reference operator but are
-  * load-bearing at 100 TB: skew-safe joins via salting, small-file
-  * compaction, and bucketed-table helpers for shuffle-free repeated joins
-  * (see BucketedJoinSpec for the co-located-join evidence). The two
-  * registered queries promote the techniques to first-class oracled
-  * operators: `j4_salted_skew_join` (salting must be result-invariant) and
-  * `etl_compact_dest` (compaction must be row-multiset-invariant).
+  * load-bearing at 100 TB: skew-safe joins via salting and bucketed-table
+  * helpers for shuffle-free repeated joins (see BucketedJoinSpec for the
+  * co-located-join evidence). The registered queries promote the
+  * techniques to first-class oracled operators, among them
+  * `j4_salted_skew_join` (salting must be result-invariant) and the
+  * destination maintenance and WAP queries over [[graft.etl.Destination]]
+  * (`etl_compact_dest`: compaction must be row-multiset-invariant).
   */
 object ScaleOps extends QueryFamily {
 
@@ -131,42 +136,6 @@ object ScaleOps extends QueryFamily {
     }
   }
 
-  /** Compact a date-partitioned parquet destination: every incremental run
-    * appends `shuffle.partitions` small files per touched partition, and at
-    * 100 TB the accumulated small files dominate scan planning and NameNode
-    * pressure. Rewrites each partition into ~`targetBytes`-sized files and
-    * swaps them in with [[graft.etl.EtlJob.replacePartitions]]: the rows
-    * are encoded once, into a hidden stage inside the destination, and each
-    * partition then moves in by rename. A reader listing a partition
-    * between its delete and its rename finds it absent. Returns (files
-    * before, files after).
-    *
-    * Precondition on an Exact-mode destination: every tenant's last run
-    * committed. Compaction writes untagged files, so a crashed Exact
-    * attempt's rows compacted before its replay could no longer be rolled
-    * back by name and would load twice ([[graft.etl.EtlJob.Mode]]).
-    *
-    * At cluster scale this runs as periodic maintenance over recent
-    * partitions only — date pruning keeps the rewrite proportional to the
-    * compaction window, not the table's history.
-    */
-  def compactDatePartitions(
-      spark: SparkSession,
-      destDir: String,
-      partitionCol: String = "export_date",
-      targetBytes: Long = 128L * 1024 * 1024): (Long, Long) = {
-    // Hadoop FileSystem, not java.nio: the destination is HDFS/S3 at scale.
-    // One recursive listing serves both the file count and the byte total —
-    // each listing is a full remote round-trip on HDFS/S3.
-    val beforeFiles = graft.util.Fs.listParquetFiles(spark, destDir)
-    val before = beforeFiles.size.toLong
-    val totalBytes = beforeFiles.map(_._2).sum
-    val nParts = math.max(1, (totalBytes / targetBytes).toInt)
-    graft.etl.EtlJob.replacePartitions(spark,
-      spark.read.parquet(destDir).repartition(nParts, col(partitionCol)), partitionCol, destDir)
-    (before, graft.util.Fs.listParquetFiles(spark, destDir).size.toLong)
-  }
-
   /** J4 (extension): supplier-revenue rollup where the fact→dim join runs
     * SALTED — the exact plan a 100 TB pipeline needs when one join key is a
     * hot head (a mega-supplier, a boilerplate document hash) and the join
@@ -196,37 +165,50 @@ object ScaleOps extends QueryFamily {
   /** Small-file compaction as a first-class oracled operator: build a
     * deliberately fragmented date-partitioned destination (two appends × 4
     * tasks — the debris pattern every incremental pipeline accumulates),
-    * compact it with [[compactDatePartitions]], and report the per-date row
-    * counts and value mass read back FROM THE COMPACTED FILES. The oracle
+    * compact it with [[graft.etl.Destination.compactDatePartitions]], and
+    * report the per-date row counts and value mass read back FROM THE
+    * COMPACTED FILES. The oracle
     * recomputes the same rollup from the source table, so the hash check
     * proves compaction lost/duplicated nothing; ScaleOpsSpec separately
     * asserts the file count actually shrinks.
     */
   private def etlCompactDest(s: SparkSession, dir: String): DataFrame = {
     // compaction is periodic maintenance over RECENT partitions (see
-    // compactDatePartitions' doc) — the demo window is the last 10 fixture
-    // days, exactly the date-pruned slice a nightly job would rewrite
+    // Destination.compactDatePartitions' doc) — the demo window is the last
+    // 10 fixture days, exactly the date-pruned slice a nightly job would
+    // rewrite
     val ev = Tables.load(s, dir, "events")
       .where(date_format(col("ts"), "yyyy-MM-dd") >= "2024-01-21")
       .select(
         col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("value_cents"),
-        date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
+        date_format(col("ts"), "yyyy-MM-dd").as(Destination.PartitionCol))
     val dest = graft.util.TempDirs.create("graft_compactq_")
     // the small-file fixture in ONE write job (round 18): the union of the
     // two independently-repartitioned halves keeps the 8-files-per-day
     // damaged layout of the two sequential incremental appends, one
     // scan/commit round cheaper (−14% mins, 5/6 paired cycles,
     // OPTIMIZATION_r18.md §9)
-    ev.where(col("event_id") % 2 === 0).repartition(4)
-      .unionByName(ev.where(col("event_id") % 2 =!= 0).repartition(4))
-      .write.mode(SaveMode.Append).partitionBy("export_date").parquet(dest)
-    compactDatePartitions(s, dest, "export_date")
-    s.read.parquet(dest)
-      .groupBy(col("export_date").cast("string").as("export_date"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
-      .orderBy(col("export_date"))
+    Destination.append(ev.where(col("event_id") % 2 === 0).repartition(4)
+      .unionByName(ev.where(col("event_id") % 2 =!= 0).repartition(4)), dest)
+    Destination.compactDatePartitions(s, dest)
+    dayRollup(Destination.scan(s, dest))
   }
+
+  /** The destination queries' fixture: each event's id, the `keep`
+    * columns, its value in integer cents and its day as the partition
+    * column.
+    */
+  private def dayCents(s: SparkSession, dir: String, keep: String*): DataFrame =
+    Tables.load(s, dir, "events").select((col("event_id") +: keep.map(col)) ++ Seq(
+      round(col("value") * 100).cast("long").as("value_cents"),
+      date_format(col("ts"), "yyyy-MM-dd").as(Destination.PartitionCol)): _*)
+
+  /** Rows and cents per day, by day: the destination queries' read-back. */
+  private def dayRollup(df: DataFrame): DataFrame =
+    df.groupBy(col(Destination.PartitionCol).cast("string").as(Destination.PartitionCol))
+      .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
+      .orderBy(col(Destination.PartitionCol))
 
   /** Dates a crashed partial re-run duplicated; present at every shipped SF
     * (events span 2024-01-01..2024-01-30 at all scale factors).
@@ -237,20 +219,17 @@ object ScaleOps extends QueryFamily {
     * partial re-run APPENDS duplicate rows into two date partitions (the
     * at-least-once failure the reference's Parity mode tolerates, SURVEY
     * §2.9 W5); the repair rewrites EXACTLY the damaged window from the
-    * source of truth with [[graft.etl.EtlJob.replacePartitions]] —
+    * source of truth with [[graft.etl.Destination.replacePartitions]] —
     * untouched partitions keep their files. The oracle recomputes the
     * clean per-date rollup from the source, so the hash check proves the
     * backfill restored the corpus exactly. This is the maintenance move a 100 TB date-partitioned store
     * lives by: repair windows are O(window), never O(history). Like
     * compaction, it writes untagged files, so on an Exact-mode
     * destination it runs only while every tenant's last run committed
-    * ([[compactDatePartitions]]).
+    * ([[graft.etl.Destination.compactDatePartitions]]).
     */
   private def etlBackfillWindow(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"), col("user_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
+    val ev = dayCents(s, dir, "user_id")
     val dest = graft.util.TempDirs.create("graft_backfillq_")
     // the damaged store in ONE write job (round 18): full history plus the
     // crashed partial re-run's duplicate copies of the two dates — the
@@ -259,15 +238,11 @@ object ScaleOps extends QueryFamily {
     // OPTIMIZATION_r18.md §8).
     // The repair below is unchanged: it must fix the duplicates whichever
     // files they sit in.
-    ev.unionByName(ev.where(col("export_date").isin(BackfillDates: _*)))
-      .write.mode(SaveMode.Append).partitionBy("export_date").parquet(dest)
+    val damaged = ev.where(col(Destination.PartitionCol).isin(BackfillDates: _*))
+    Destination.append(ev.unionByName(damaged), dest)
     // the repair: replace exactly the damaged window
-    graft.etl.EtlJob.replacePartitions(s,
-      ev.where(col("export_date").isin(BackfillDates: _*)), "export_date", dest)
-    s.read.parquet(dest)
-      .groupBy(col("export_date").cast("string").as("export_date"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
-      .orderBy(col("export_date"))
+    Destination.replacePartitions(s, damaged, dest)
+    dayRollup(Destination.scan(s, dest))
   }
 
   /** Bit-interleave of two 4-bit dimension indices (bit i of d1 → z-bit 2i,
@@ -322,27 +297,12 @@ object ScaleOps extends QueryFamily {
     * cost model of retention: expiry is metadata work.
     */
   private def etlVacuumRetention(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
+    val ev = dayCents(s, dir)
     val dest = graft.util.TempDirs.create("graft_vacuumq_")
-    ev.write.mode(SaveMode.Append).partitionBy("export_date").parquet(dest)
+    Destination.append(ev, dest)
     // expire: directory deletes only — storage-agnostic via Hadoop FS
-    val (fsys, root) = {
-      val p = new org.apache.hadoop.fs.Path(dest)
-      (p.getFileSystem(s.sessionState.newHadoopConf()), p)
-    }
-    fsys.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("export_date=") &&
-        name.stripPrefix("export_date=") < RetentionCutoff)
-        fsys.delete(st.getPath, true)
-    }
-    s.read.parquet(dest)
-      .groupBy(col("export_date").cast("string").as("export_date"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
-      .orderBy(col("export_date"))
+    Destination.dropPartitions(s, dest)(_ < RetentionCutoff)
+    dayRollup(Destination.scan(s, dest))
   }
 
   /** Reproducibility manifest — the dataset-card fingerprint a training
@@ -498,9 +458,8 @@ object ScaleOps extends QueryFamily {
     // repartition on the partition column before the write — the same
     // no-small-file-spray rule etl_partition_evolution encodes (without
     // it every input task writes a file into every day directory)
-    ev.repartition(col("export_date"))
-      .write.mode(SaveMode.Overwrite).partitionBy("export_date").parquet(dest)
-    val fact = s.read.parquet(dest)
+    Destination.append(ev.repartition(col("export_date")), dest)
+    val fact = Destination.scan(s, dest)
     val d = ev.groupBy(col("export_date")).agg(count(lit(1)).as("day_rows"))
     // the busier-than-average threshold is collected driver-side (ONE row
     // — control plane, like the bloom sketch): DPP's selective-predicate
@@ -519,62 +478,22 @@ object ScaleOps extends QueryFamily {
       .orderBy(col("event_type"))
   }
 
-  /** Copy-on-write deletion propagation through a date-partitioned store:
-    * anti-join the tombstone keys out of EXACTLY the partitions that
-    * contain a hit, leaving every other partition's files untouched. One
-    * partition-pruned scan writes the affected partitions' survivors
-    * through [[graft.etl.EtlJob.replacePartitions]] (encoded once into a
-    * hidden stage, then swapped in by per-partition rename); a partition
-    * that lost every row has nothing staged, so it is deleted after the
-    * swap. A reader listing an affected partition between its delete and
-    * its rename finds it absent. Like compaction, it writes untagged
-    * files, so on an Exact-mode destination it runs only while every
-    * tenant's last run committed ([[compactDatePartitions]]).
-    * Cost is O(affected partitions), never O(history) — the shape a
-    * takedown/right-to-be-forgotten sweep needs on a 100 TB corpus, where
-    * deletion demands arrive daily but touch a sliver of the store.
-    * Returns the affected-partition values (the audit ledger entry).
-    */
-  def deleteFromDatePartitions(s: SparkSession, dest: String, partitionCol: String,
-                               tombstones: DataFrame, keyCol: String): Seq[String] = {
-    val snapshot = s.read.parquet(dest)
-    val affected = snapshot.join(broadcast(tombstones), Seq(keyCol), "left_semi")
-      .select(col(partitionCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    if (affected.nonEmpty) {
-      val swapped = graft.etl.EtlJob.replacePartitions(s, snapshot
-        .where(col(partitionCol).isin(affected: _*))
-        .join(broadcast(tombstones), Seq(keyCol), "left_anti"), partitionCol, dest)
-      val destPath = new org.apache.hadoop.fs.Path(dest)
-      val fs = destPath.getFileSystem(s.sessionState.newHadoopConf())
-      affected.diff(swapped).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(destPath, s"$partitionCol=$v"), true)
-      }
-    }
-    affected
-  }
-
   /** The deletion sweep as an oracled operator: build a date-partitioned
     * destination from the fixture, tombstone a deterministic user subset,
-    * run [[deleteFromDatePartitions]], and report the post-delete per-day
-    * rollup read back from the store. The oracle recomputes the rollup
-    * from the source with the tombstone predicate inverted, so the hash
-    * check proves the sweep deleted every targeted row and nothing else.
+    * run [[graft.etl.Destination.deleteFromDatePartitions]], and report the
+    * post-delete per-day rollup read back from the store. The oracle
+    * recomputes the rollup from the source with the tombstone predicate
+    * inverted, so the hash check proves the sweep deleted every targeted
+    * row and nothing else.
     */
   private def etlTombstoneDelete(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"), col("user_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
+    val ev = dayCents(s, dir, "user_id")
     val dest = graft.util.TempDirs.create("graft_tombq_")
-    ev.write.mode(SaveMode.Append).partitionBy("export_date").parquet(dest)
+    Destination.append(ev, dest)
     val tombstones = ev.where(col("user_id") % 97 === 0)
       .select(col("user_id")).distinct()
-    deleteFromDatePartitions(s, dest, "export_date", tombstones, "user_id")
-    s.read.parquet(dest)
-      .groupBy(col("export_date").cast("string").as("export_date"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
-      .orderBy(col("export_date"))
+    Destination.deleteFromDatePartitions(s, dest, tombstones, "user_id")
+    dayRollup(Destination.scan(s, dest))
   }
 
   /** Key-skew diagnostics — the report you run BEFORE choosing a join
@@ -737,99 +656,24 @@ object ScaleOps extends QueryFamily {
       .orderBy(col("event_type"))
   }
 
-  /** Write-Audit-Publish: batches land in a per-batch staging directory,
-    * an audit gate compares what is actually ON DISK against the
-    * extraction's own claim, and only audited batches are published into
-    * the live destination — the lakehouse WAP discipline that keeps a
-    * torn or short write invisible to readers forever, instead of until
-    * someone notices. Key properties: the audit reads the STAGED files
-    * (exactly what readers would see), never the writer's in-memory
-    * belief; publish is a rename per part-file — O(files) metadata ops,
-    * no data movement on HDFS-like stores (object stores substitute a
-    * manifest/metadata swap, same contract); a rejected batch stays
-    * quarantined in staging with its files intact, so the retry path is
-    * re-audit + publish, not re-extract. Returns the published row count
-    * or the audit failure.
+  /** The WAP queries' two batches, days 2024-01-01..10 and 11..20, each
+    * with its row count. Both counts come from ONE conditional-aggregate
+    * scan (round 18, guide §2.3): two count() passes collapse into one.
     */
-  def writeAuditPublish(s: SparkSession, destDir: String, stagingRoot: String,
-                        batchId: String, batch: DataFrame,
-                        claimedRows: Long): Either[String, Long] = {
-    val stageDir = s"$stagingRoot/$batchId"
-    batch.write.mode(SaveMode.Overwrite).parquet(stageDir)
-    publishStaged(s, destDir, stageDir, batchId, claimedRows)
+  private def twoBatches(ev: DataFrame): ((DataFrame, Long), (DataFrame, Long)) = {
+    val first = col("export_date") < "2024-01-11"
+    val second = col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21"
+    val n = ev.agg(sum(when(first, 1L).otherwise(0L)), sum(when(second, 1L).otherwise(0L)))
+      .collect()(0)
+    ((ev.where(first), n.getLong(0)), (ev.where(second), n.getLong(1)))
   }
 
-  /** Audit + publish of an ALREADY-staged batch (the retry half of WAP —
-    * a batch rejected over a bad claim republishes without re-extraction).
-    *
-    * Concurrency contract: batch ids are unique per logical batch, but two
-    * publishers MAY race on the same id (a retried driver plus a zombie of
-    * its first attempt). The path is safe for that race because every step
-    * is idempotent on deterministic names: target file names derive from
-    * (batchId, staged part name), so a rename that fails WITH the target
-    * present means the racer moved it — success either way; and the
-    * manifest is committed create-if-absent, so exactly one writer wins
-    * the ledger and the loser acks from the committed manifest. What the
-    * contract does NOT allow is two publishers staging DIFFERENT data
-    * under one batchId — that is a batch-identity violation upstream, not
-    * a race this layer can resolve.
-    */
-  def publishStaged(s: SparkSession, destDir: String, stageDir: String,
-                    batchId: String, claimedRows: Long): Either[String, Long] = {
-    // the manifest is the COMMIT POINT — check it first. A retry after a
-    // crash-between-publish-and-ack would otherwise find an empty staging
-    // dir (the files already moved) and overwrite the good manifest with
-    // an empty one: silent snapshot data loss. With the check, such a
-    // retry is an idempotent success acked from the committed manifest.
-    // (A crash MID-rename leaves moved files invisible to readAsOf —
-    // they're not in any manifest — so snapshot readers stay consistent;
-    // recovery is re-staging the batch under the same id.)
-    if (graft.util.Fs.readSmallText(s, s"$destDir/_manifests/$batchId.manifest")
-        .isDefined)
-      return Right(readAsOf(s, destDir, Seq(batchId)).count())
-    val n = s.read.parquet(stageDir).count()
-    if (n != claimedRows)
-      Left(s"audit rejected batch $batchId: staged=$n claimed=$claimedRows")
-    else {
-      val dest = new org.apache.hadoop.fs.Path(destDir)
-      val fs = dest.getFileSystem(s.sessionState.newHadoopConf())
-      // target names derive from (batchId, staged part name): a racing
-      // publisher of the same staged batch moves the same files
-      val published = graft.etl.EtlJob.publishFiles(fs,
-        new org.apache.hadoop.fs.Path(stageDir), dest, batchId)
-      // snapshot ledger: one manifest per published batch (the `_` prefix
-      // keeps Spark's reader from scanning it as data). Time travel reads
-      // the union of manifests ≤ the wanted snapshot — metadata only.
-      // Create-if-absent: the FIRST publisher commits; a lost race means a
-      // racer already committed this batch's (identical) file list, so
-      // fall through to the same idempotent ack either way.
-      graft.util.Fs.writeSmallTextIfAbsent(s,
-        s"$destDir/_manifests/$batchId.manifest", published.sorted.mkString("\n"))
-      Right(n)
-    }
-  }
-
-  /** Read the destination AS OF a set of published batches: the union of
-    * their manifests names exactly the files to scan — no directory
-    * listing of the data, no tombstones, no rewrite; a snapshot is just
-    * a subset of immutable files. This is the simplified shape of table-
-    * format time travel (a manifest per commit, readers pick a manifest
-    * set); at warehouse scale the manifest list itself comes from a
-    * catalog pointer instead of the caller.
-    */
-  def readAsOf(s: SparkSession, destDir: String, batchIds: Seq[String]): DataFrame = {
-    // a repeated id must not double-count its files
-    val files = batchIds.distinct.flatMap { b =>
-      graft.util.Fs.readSmallText(s, s"$destDir/_manifests/$b.manifest")
-        .getOrElse(throw new IllegalArgumentException(s"no manifest for batch $b"))
-        .split("\n").filter(_.nonEmpty).map(f => s"$destDir/$f")
-    }
-    // zero paths would fail schema inference with an opaque "unable to
-    // infer schema" — name the empty snapshot instead
-    if (files.isEmpty) throw new IllegalArgumentException(
-      s"snapshot over batches ${batchIds.mkString("[", ",", "]")} at $destDir " +
-        "names no data files (empty manifest set)")
-    s.read.parquet(files: _*)
+  /** Run independent tasks from a pool of `threads`; results in task order. */
+  private def inParallel[T](threads: Int)(tasks: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
+    finally pool.shutdown()
   }
 
   /** WAP as an oracled operator: a clean batch publishes, a torn batch
@@ -841,102 +685,19 @@ object ScaleOps extends QueryFamily {
     * survive, and a corrected-claim republish lands them.
     */
   private def etlWap(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
-    val goodBatch = ev.where(col("export_date") < "2024-01-11")
-    val badFull = ev.where(
-      col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21")
-    // both extraction claims from ONE conditional-aggregate scan (round 18,
-    // guide §2.3) — the good batch's honest count and the torn batch's
-    // full-extract claim; two count() passes collapse into one. Measured
-    // −13% (5/6 paired cycles, OPTIMIZATION_r18.md §8).
-    val cnt = ev.agg(
-      sum(when(col("export_date") < "2024-01-11", 1L).otherwise(0L)).as("good"),
-      sum(when(col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21",
-        1L).otherwise(0L)).as("claimed")).collect()(0)
-    val (goodCount, claimed) = (cnt.getLong(0), cnt.getLong(1))
+    // the good batch's honest count and the torn batch's full-extract
+    // claim from one scan (`twoBatches`); measured −13% against two
+    // count() passes (5/6 paired cycles, OPTIMIZATION_r18.md §8)
+    val ((goodBatch, goodCount), (badFull, claimed)) = twoBatches(dayCents(s, dir))
     val badTorn = badFull.where(col("event_id") % 5 =!= 0)
     val root = graft.util.TempDirs.create("graft_wap_")
-    val r1 = writeAuditPublish(s, s"$root/dest", s"$root/staging",
+    val r1 = Destination.writeAuditPublish(s, s"$root/dest", s"$root/staging",
       "batch_good", goodBatch, goodCount)
     require(r1.isRight, s"good batch must publish: $r1")
-    val r2 = writeAuditPublish(s, s"$root/dest", s"$root/staging",
+    val r2 = Destination.writeAuditPublish(s, s"$root/dest", s"$root/staging",
       "batch_torn", badTorn, claimed)
     require(r2.isLeft, "torn batch must be rejected by the audit")
-    s.read.parquet(s"$root/dest")
-      .groupBy(col("export_date"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
-      .orderBy(col("export_date"))
-  }
-
-  /** Zero-copy BRANCHES over the manifest ledger — the experiment-isolation
-    * workflow ("try the new filter on a branch, diff, merge") without
-    * copying a byte of data: a branch is a directory of manifest files
-    * under `_manifests/<branch>/`; creating one copies the chosen batches'
-    * manifests (KBs), branch publishes land their manifests there, and
-    * MAIN readers never see them until merge adopts the manifest files.
-    * All data files stay flat and immutable in the destination — shared
-    * by every branch. Merge is fast-forward adoption by batch id (ids
-    * already on main are skipped — the idempotent replay rule again);
-    * divergent meanings for one id are excluded by the same
-    * unique-batch-id discipline publishing already requires.
-    */
-  def createBranch(s: SparkSession, destDir: String, branch: String,
-                   fromBatches: Seq[String]): Unit =
-    fromBatches.distinct.foreach { b =>
-      val m = graft.util.Fs.readSmallText(s, s"$destDir/_manifests/$b.manifest")
-        .getOrElse(throw new IllegalArgumentException(s"no manifest for batch $b"))
-      graft.util.Fs.writeSmallTextAtomic(s, s"$destDir/_manifests/$branch/$b.manifest", m)
-    }
-
-  private def listManifests(s: SparkSession, manifestDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest")).map(_.stripSuffix(".manifest")).toSeq.sorted
-  }
-
-  /** Read a branch's committed view (its manifest set over the shared
-    * immutable files). `branch = None` reads main.
-    */
-  def readBranch(s: SparkSession, destDir: String,
-                 branch: Option[String]): DataFrame = {
-    val mDir = branch match {
-      case Some(b) => s"$destDir/_manifests/$b"
-      case None => s"$destDir/_manifests"
-    }
-    val ids = listManifests(s, mDir)
-    // .distinct: a reader racing manifest COMPACTION can list both the
-    // consolidated manifest and not-yet-deleted originals — the same
-    // file named twice must scan once (see compactManifests)
-    val files = ids.flatMap { b =>
-      graft.util.Fs.readSmallText(s, s"$mDir/$b.manifest").get
-        .split("\n").filter(_.nonEmpty).map(f => s"$destDir/$f")
-    }.distinct
-    // a fresh destination / just-created empty branch has no manifests —
-    // fail with the snapshot's name, not a schema-inference error
-    if (files.isEmpty) throw new IllegalArgumentException(
-      s"branch ${branch.getOrElse("main")} at $destDir names no data files " +
-        "(no published batches yet)")
-    s.read.parquet(files: _*)
-  }
-
-  /** Fast-forward merge: adopt the branch's manifests onto main, skipping
-    * batch ids main already has.
-    */
-  def mergeBranch(s: SparkSession, destDir: String, branch: String): Seq[String] = {
-    val onMain = listManifests(s, s"$destDir/_manifests").toSet
-    val adopted = listManifests(s, s"$destDir/_manifests/$branch")
-      .filterNot(onMain)
-    adopted.foreach { b =>
-      val m = graft.util.Fs
-        .readSmallText(s, s"$destDir/_manifests/$branch/$b.manifest").get
-      graft.util.Fs.writeSmallTextAtomic(s, s"$destDir/_manifests/$b.manifest", m)
-    }
-    adopted
+    dayRollup(Destination.scan(s, s"$root/dest"))
   }
 
   /** Branch isolation as an oracled operator: b1 publishes to main, a dev
@@ -946,45 +707,28 @@ object ScaleOps extends QueryFamily {
     * (≡ dev) — each as a per-view rollup the hash check pins exactly.
     */
   private def etlBranchIsolation(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
-    val b1 = ev.where(col("export_date") < "2024-01-11")
-    val b2 = ev.where(
-      col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21")
-    // both expectations from one scan (round 18, guide §2.3; −13% mins,
-    // 4/6 paired cycles, OPTIMIZATION_r18.md §9). The publish SEQUENCE
-    // stays sequential: it is dependency-ordered (b1 → branch fork → b2 →
-    // manifest relocation).
-    val cnt = ev.agg(
-      sum(when(col("export_date") < "2024-01-11", 1L).otherwise(0L)).as("n1"),
-      sum(when(col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21",
-        1L).otherwise(0L)).as("n2")).collect()(0)
+    // both expectations from one scan (`twoBatches`; −13% mins, 4/6
+    // paired cycles, OPTIMIZATION_r18.md §9). The publish SEQUENCE stays
+    // sequential: it is dependency-ordered (b1 → branch fork → b2 on the
+    // branch).
+    val ((b1, n1), (b2, n2)) = twoBatches(dayCents(s, dir))
     val root = graft.util.TempDirs.create("graft_branch_")
     val dest = s"$root/dest"
-    require(writeAuditPublish(s, dest, s"$root/staging", "b1", b1, cnt.getLong(0)).isRight)
-    createBranch(s, dest, "dev", Seq("b1"))
+    require(Destination.writeAuditPublish(s, dest, s"$root/staging", "b1", b1, n1).isRight)
+    Destination.createBranch(s, dest, "dev", Seq("b1"))
     // publish b2 to the BRANCH: stage + audit as usual, manifest to dev
     val stage2 = s"$root/staging/b2"
     b2.write.mode(SaveMode.Overwrite).parquet(stage2)
-    val r2 = publishStaged(s, dest, stage2, "b2", cnt.getLong(1))
+    val r2 = Destination.publishStaged(s, dest, stage2, "b2", n2, Some("dev"))
     require(r2.isRight, s"b2 must publish: $r2")
-    // move b2's manifest from main to dev (publishStaged targets main;
-    // branch-targeted publish = relocating the commit record)
-    val m2 = graft.util.Fs.readSmallText(s, s"$dest/_manifests/b2.manifest").get
-    graft.util.Fs.writeSmallTextAtomic(s, s"$dest/_manifests/dev/b2.manifest", m2)
-    val fs = new org.apache.hadoop.fs.Path(dest)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dest/_manifests/b2.manifest"), false)
     def roll(df: DataFrame, view: String) =
       df.groupBy(col("export_date"))
         .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
         .withColumn("view", lit(view))
-    val pre = roll(readBranch(s, dest, None), "main_pre")
-    val dev = roll(readBranch(s, dest, Some("dev")), "dev")
-    mergeBranch(s, dest, "dev")
-    val post = roll(readBranch(s, dest, None), "main_post")
+    val pre = roll(Destination.readBranch(s, dest, None), "main_pre")
+    val dev = roll(Destination.readBranch(s, dest, Some("dev")), "dev")
+    Destination.mergeBranch(s, dest, "dev")
+    val post = roll(Destination.readBranch(s, dest, None), "main_post")
     pre.unionByName(dev).unionByName(post)
       .select(col("view"), col("export_date"), col("n_rows"), col("value_cents"))
       .orderBy(col("view"), col("export_date"))
@@ -1003,35 +747,19 @@ object ScaleOps extends QueryFamily {
     * deleting the orphans; both leave snapshot readers untouched.
     */
   private def etlOrphanAudit(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
-    val b1 = ev.where(col("export_date") < "2024-01-11").repartition(1)
-    val b2 = ev.where(
-      col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21")
-      .repartition(1)
+    val ((b1, n1), (b2, _)) = twoBatches(dayCents(s, dir))
     val root = graft.util.TempDirs.create("graft_orphan_")
-    val r1 = writeAuditPublish(s, s"$root/dest", s"$root/staging", "b1", b1, b1.count())
+    val dest = s"$root/dest"
+    val r1 = Destination.writeAuditPublish(s, dest, s"$root/staging", "b1", b1.repartition(1), n1)
     require(r1.isRight, s"b1 must publish: $r1")
     // crash mid-publish: files move, manifest never written
-    b2.write.mode(SaveMode.Overwrite).parquet(s"$root/staging/b2")
-    val conf = s.sessionState.newHadoopConf()
-    val dest = new org.apache.hadoop.fs.Path(s"$root/dest")
-    val fs = dest.getFileSystem(conf)
-    fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/staging/b2"))
-      .filter(_.getPath.getName.startsWith("part-")).foreach { f =>
-        fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest, s"b2-${f.getPath.getName}"))
-      }
-    val committedFiles = graft.util.Fs
-      .readSmallText(s, s"$root/dest/_manifests/b1.manifest")
-      .get.split("\n").filter(_.nonEmpty).toSet
-    val allFiles = fs.listStatus(dest)
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath.getName).toSet
-    val nOrphanFiles = (allFiles -- committedFiles).size.toLong
-    val committed = readAsOf(s, s"$root/dest", Seq("b1"))
+    b2.repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$root/staging/b2")
+    Destination.publishFiles(s, s"$root/staging/b2", dest, "b2")
+    val nOrphanFiles = Destination.orphanFiles(s, dest).size.toLong
+    val committed = Destination.readAsOf(s, dest, Seq("b1"))
       .agg(count(lit(1)).as("committed_rows"))
-    val raw = s.read.parquet(s"$root/dest").agg(count(lit(1)).as("raw_rows"))
+    // deliberately raw: the directory read that sees the orphans
+    val raw = s.read.parquet(dest).agg(count(lit(1)).as("raw_rows"))
     committed.crossJoin(raw)
       .select(col("committed_rows"), col("raw_rows"),
         (col("raw_rows") - col("committed_rows")).as("orphan_rows"),
@@ -1039,86 +767,32 @@ object ScaleOps extends QueryFamily {
   }
 
   /** Time travel over the WAP ledger: publish two batches, read the dest
-    * AS OF the first ([[readAsOf]] — a manifest subset, no data work),
-    * and emit both snapshots' rollups side by side. The hash check proves
-    * snapshot ISOLATION: the v1 rows cannot contain a single row of
-    * batch 2, and v2 ≡ the full ledger — the reproducibility property
-    * ("re-run last week's training mix exactly") that file-listing reads
-    * cannot give once new batches land.
+    * AS OF the first ([[graft.etl.Destination.readAsOf]] — a manifest
+    * subset, no data work), and emit both snapshots' rollups side by
+    * side. The hash check proves snapshot ISOLATION: the v1 rows cannot
+    * contain a single row of batch 2, and v2 ≡ the full ledger — the
+    * reproducibility property ("re-run last week's training mix exactly")
+    * that file-listing reads cannot give once new batches land.
     */
   private def etlTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
-    val b1 = ev.where(col("export_date") < "2024-01-11")
-    val b2 = ev.where(
-      col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21")
-    // both expectations from ONE conditional-aggregate scan and the two
-    // independent publishes overlapped (round 18, guide §2.3/§2.6 — same
-    // shape as etl_manifest_compact; measured −39%, 6/6 paired cycles,
-    // OPTIMIZATION_r18.md §9)
-    val cnt = ev.agg(
-      sum(when(col("export_date") < "2024-01-11", 1L).otherwise(0L)).as("n1"),
-      sum(when(col("export_date") >= "2024-01-11" && col("export_date") < "2024-01-21",
-        1L).otherwise(0L)).as("n2")).collect()(0)
+    // both expectations from ONE conditional-aggregate scan
+    // (`twoBatches`) and the two independent publishes overlapped (round
+    // 18, guide §2.3/§2.6 — same shape as etl_manifest_compact; measured
+    // −39%, 6/6 paired cycles, OPTIMIZATION_r18.md §9)
+    val ((b1, n1), (b2, n2)) = twoBatches(dayCents(s, dir))
     val root = graft.util.TempDirs.create("graft_tt_")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = Seq(
-        scala.concurrent.Future(writeAuditPublish(s, s"$root/dest", s"$root/staging",
-          "b1", b1, cnt.getLong(0))),
-        scala.concurrent.Future(writeAuditPublish(s, s"$root/dest", s"$root/staging",
-          "b2", b2, cnt.getLong(1))))
-      val rs = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs), scala.concurrent.duration.Duration.Inf)
-      require(rs.forall(_.isRight), s"publishes must succeed: $rs")
-    } finally pool.shutdown()
+    val rs = inParallel(2)(Seq(("b1", b1, n1), ("b2", b2, n2)).map { case (id, b, n) =>
+      () => Destination.writeAuditPublish(s, s"$root/dest", s"$root/staging", id, b, n)
+    })
+    require(rs.forall(_.isRight), s"publishes must succeed: $rs")
     def roll(df: DataFrame, snap: String) =
       df.groupBy(col("export_date"))
         .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
         .withColumn("snap", lit(snap))
-    roll(readAsOf(s, s"$root/dest", Seq("b1")), "v1")
-      .unionByName(roll(s.read.parquet(s"$root/dest"), "v2"))
+    roll(Destination.readAsOf(s, s"$root/dest", Seq("b1")), "v1")
+      .unionByName(roll(Destination.scan(s, s"$root/dest"), "v2"))
       .select(col("snap"), col("export_date"), col("n_rows"), col("value_cents"))
       .orderBy(col("snap"), col("export_date"))
-  }
-
-  /** Compact the MAIN manifest ledger: N per-batch manifests → ONE
-    * consolidated manifest naming the union of their files. Data files
-    * never move — this is pure metadata maintenance, the ledger twin of
-    * [[compactDatePartitions]]: a long-lived destination accretes one
-    * manifest per publish, and at warehouse scale snapshot planning
-    * becomes O(#manifests) remote reads (table formats compact manifest
-    * lists for exactly this reason). Ordering makes the swap reader-safe
-    * with no lock: the consolidated manifest is committed (create-if-
-    * absent) BEFORE the originals are deleted, and `readBranch`
-    * deduplicates file lists, so a reader interleaving anywhere sees
-    * either the originals, both (dedup'd), or the consolidated set —
-    * always the same files. Batch-id TIME TRAVEL over compacted-away ids
-    * is intentionally released (the retention trade every format makes:
-    * compaction/vacuum erase rewind granularity); branches are untouched.
-    * Returns (manifests before, manifests after).
-    */
-  def compactManifests(s: SparkSession, destDir: String): (Long, Long) = {
-    val mDir = s"$destDir/_manifests"
-    val ids = listManifests(s, mDir)
-    if (ids.size <= 1) return (ids.size.toLong, ids.size.toLong)
-    val union = ids.flatMap { b =>
-      graft.util.Fs.readSmallText(s, s"$mDir/$b.manifest").get
-        .split("\n").filter(_.nonEmpty)
-    }.distinct.sorted
-    val compactId = s"compact-${ids.mkString("_").hashCode.toHexString}"
-    graft.util.Fs.writeSmallTextIfAbsent(s, s"$mDir/$compactId.manifest",
-      union.mkString("\n"))
-    val fs = new org.apache.hadoop.fs.Path(mDir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    ids.foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(mDir, s"$b.manifest"), false)
-    }
-    (ids.size.toLong, listManifests(s, mDir).size.toLong)
   }
 
   /** Ledger compaction as an oracled operator: five daily publishes, a
@@ -1128,10 +802,7 @@ object ScaleOps extends QueryFamily {
     * (asserted in ScaleOpsSpec).
     */
   private def etlManifestCompact(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.load(s, dir, "events").select(
-      col("event_id"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      date_format(col("ts"), "yyyy-MM-dd").as("export_date"))
+    val ev = dayCents(s, dir)
     val root = graft.util.TempDirs.create("graft_mcompact_")
     val days = Seq("2024-01-07", "2024-01-13", "2024-01-19", "2024-01-25", "9999-12-31")
     val bounds = ("0000-01-01" +: days).zip(days) // (lo, hi) half-open ranges
@@ -1151,28 +822,14 @@ object ScaleOps extends QueryFamily {
     // overlap them from a small pool so a publish's write tail backfills
     // the next publish's stage (guide §2.6). Measured −56% with the
     // one-pass expectations (6/6 paired cycles, OPTIMIZATION_r18.md §8).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = bounds.map { case (lo, hi) =>
-        scala.concurrent.Future {
-          val b = ev.where(col("export_date") >= lo && col("export_date") < hi)
-          lo -> writeAuditPublish(s, s"$root/dest", s"$root/staging",
-            s"day_$lo", b, counts.getOrElse(hi, 0L))
-        }
-      }
-      scala.concurrent.Await
-        .result(scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf)
-        .foreach { case (lo, r) => require(r.isRight, s"publish $lo must succeed: $r") }
-    } finally pool.shutdown()
-    val (before, after) = compactManifests(s, s"$root/dest")
+    inParallel(3)(bounds.map { case (lo, hi) => () =>
+      val b = ev.where(col("export_date") >= lo && col("export_date") < hi)
+      lo -> Destination.writeAuditPublish(s, s"$root/dest", s"$root/staging",
+        s"day_$lo", b, counts.getOrElse(hi, 0L))
+    }).foreach { case (lo, r) => require(r.isRight, s"publish $lo must succeed: $r") }
+    val (before, after) = Destination.compactManifests(s, s"$root/dest")
     require(before == 5 && after == 1, s"ledger must compact 5 -> 1, got $before -> $after")
-    readBranch(s, s"$root/dest", None)
-      .groupBy(col("export_date"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
-      .orderBy(col("export_date"))
+    dayRollup(Destination.readBranch(s, s"$root/dest", None))
   }
 
   /** Partition-layout evolution: a destination born day-partitioned is
@@ -1203,12 +860,11 @@ object ScaleOps extends QueryFamily {
     // factor). On a
     // multi-split source the migration's own repartition rule would apply
     // here too; the fixture scan is one split by construction.
-    ev.write.mode(SaveMode.Overwrite).partitionBy("export_date").parquet(daily)
+    Destination.append(ev, daily)
     val weekly = graft.util.TempDirs.create("graft_evo_weekly_")
-    s.read.parquet(daily)
+    Destination.read(s, daily)
       .withColumn("export_week",
         date_format(date_trunc("week", col("ts")), "yyyy-MM-dd"))
-      .drop("export_date")
       .repartition(col("export_week"))
       .write.mode(SaveMode.Overwrite).partitionBy("export_week").parquet(weekly)
     s.read.parquet(weekly)

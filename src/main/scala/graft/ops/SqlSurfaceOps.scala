@@ -150,7 +150,7 @@ object SqlSurfaceOps extends QueryFamily {
       def stageAndPublish(batchId: String, batch: DataFrame): Unit = {
         val stage = s"$root/staging/$batchId"
         batch.coalesce(1).write.parquet(stage)
-        val r = ScaleOps.publishStaged(s, s"$root/dest", stage, batchId, batch.count())
+        val r = graft.etl.Destination.publishStaged(s, s"$root/dest", stage, batchId, batch.count())
         require(r.isRight, s"history fixture publish failed: $r")
       }
       stageAndPublish("b1_early", ev.where(col("export_date") < "2024-01-11"))

@@ -16,11 +16,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   * nothing a user could previously parse changes meaning.
   *
   * `GRAFT HISTORY` surfaces the manifest-ledger destination's commit
-  * log ([[graft.ops.ScaleOps.publishStaged]]'s `_manifests/` snapshot
-  * ledger) as a table: one row per published batch with its file count
-  * (from the manifest — metadata only) and row count. It is the
-  * time-travel discovery verb: a reader picks batch ids here, then
-  * scans `readAsOf` with exactly those manifests.
+  * log ([[graft.etl.Destination.publishStaged]]'s snapshot ledger) as a
+  * table: one row per published batch with its file count (from the
+  * manifest — metadata only) and row count. It is the time-travel
+  * discovery verb: a reader picks batch ids here, then scans
+  * [[graft.etl.Destination.readAsOf]] with exactly those manifests.
   */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
@@ -51,10 +51,12 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 }
 
 /** The `GRAFT HISTORY` verb: one row per published batch on the main
-  * branch, ordered by batch id. File counts come from the manifests
-  * alone (metadata); row counts scan exactly the manifest-named files —
-  * the same snapshot isolation `readAsOf` gives readers (an in-flight
-  * publisher's moved-but-uncommitted files are invisible here too).
+  * branch, ordered by batch id ([[graft.etl.Destination.history]]). File
+  * counts come from the manifests alone (metadata); row counts scan
+  * exactly the manifest-named files — the same snapshot isolation
+  * `readAsOf` gives readers (an in-flight publisher's moved-but-uncommitted
+  * files are invisible here too), read through the same ledger reader, so
+  * a manifest compaction racing the statement changes no total.
   */
 case class GraftHistoryCommand(destDir: String) extends LeafRunnableCommand {
 
@@ -63,20 +65,8 @@ case class GraftHistoryCommand(destDir: String) extends LeafRunnableCommand {
     AttributeReference("n_files", IntegerType, nullable = false)(),
     AttributeReference("n_rows", LongType, nullable = false)())
 
-  override def run(session: SparkSession): Seq[Row] = {
-    val mDir = new org.apache.hadoop.fs.Path(s"$destDir/_manifests")
-    val fs = mDir.getFileSystem(session.sessionState.newHadoopConf())
-    if (!fs.exists(mDir)) return Seq.empty
-    fs.listStatus(mDir).filter(_.isFile).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest")).sorted.toSeq
-      .map { m =>
-        val batchId = m.stripSuffix(".manifest")
-        val files = graft.util.Fs.readSmallText(session, s"$destDir/_manifests/$m")
-          .getOrElse("").split("\n").filter(_.nonEmpty).toSeq
-        val nRows =
-          if (files.isEmpty) 0L
-          else session.read.parquet(files.map(f => s"$destDir/$f"): _*).count()
-        Row(batchId, files.length, nRows)
-      }
-  }
+  override def run(session: SparkSession): Seq[Row] =
+    graft.etl.Destination.history(session, destDir).map { case (b, nFiles, nRows) =>
+      Row(b, nFiles, nRows)
+    }
 }

@@ -290,11 +290,11 @@ object StreamingIngest {
 
   /** Write-audit-publish as the STREAM's sink discipline: every
     * micro-batch stages, audits against its own observed count, and
-    * publishes through the same [[graft.ops.ScaleOps.writeAuditPublish]]
+    * publishes through the same [[graft.etl.Destination.publishStaged]]
     * the batch pipeline uses — so a torn micro-batch write can never
     * become reader-visible, and the per-batch manifests double as a
     * streaming snapshot ledger (any prefix of micro-batches is a
-    * [[graft.ops.ScaleOps.readAsOf]] time-travel point). `foreachBatch`
+    * [[graft.etl.Destination.readAsOf]] time-travel point). `foreachBatch`
     * is exactly the hook for a sink with its own commit protocol — and
     * because the manifest is the commit point, a micro-batch REPLAYED
     * after a crash acks idempotently off its committed manifest instead
@@ -321,7 +321,7 @@ object StreamingIngest {
         val stageDir = s"$root/staging/$bid"
         batch.observe(obs, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(stageDir)
-        val r = graft.ops.ScaleOps.publishStaged(batch.sparkSession,
+        val r = graft.etl.Destination.publishStaged(batch.sparkSession,
           s"$root/dest", stageDir, bid, obs.get("n").asInstanceOf[Long])
         require(r.isRight, s"micro-batch $id failed its audit: $r")
         ()
@@ -330,7 +330,7 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$root/dest")
+    graft.etl.Destination.scan(spark, s"$root/dest")
       .groupBy(col("export_date"))
       .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
       .orderBy(col("export_date"))
@@ -690,6 +690,8 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+    // Spark's file sink: its `_spark_metadata` log, not Destination's
+    // layout, decides which files are committed
     spark.read.parquet(dest).drop("export_date")
   }
 

@@ -29,7 +29,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Fs {
 
-  private def fs(spark: SparkSession, path: String): (FileSystem, Path) = {
+  /** The filesystem of `path`, under the session's Hadoop conf, and the path. */
+  private[graft] def fs(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
@@ -72,21 +73,14 @@ object Fs {
 
   /** Read a small control file (e.g. a version pointer) as UTF-8 text;
     * None when it does not exist. Control files are a few bytes — one
-    * round-trip, no Spark job.
+    * round-trip, no Spark job. The open itself is the existence probe: a
+    * separate `exists` would cost a second round-trip, and a file deleted
+    * between the two (a compacted manifest) would throw.
     */
   def readSmallText(spark: SparkSession, path: String): Option[String] = {
     val (f, p) = fs(spark, path)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(out.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
+    val in = try f.open(p) catch { case _: FileNotFoundException => return None }
+    try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
   }
 
   /** Atomically publish a small control file: write to a hidden sibling,

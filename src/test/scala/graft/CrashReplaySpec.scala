@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.etl.{EtlJob, MetaStore}
+import graft.etl.{Destination, EtlJob, MetaStore}
 import graft.model.{ClientBillingConfig, EtlJobMessage}
 import graft.util.Fs
 
@@ -43,14 +43,14 @@ class CrashReplaySpec extends AnyFunSuite {
     assert(crashed.isLeft)
     assert(meta.lastSuccessWatermark(7, "proj_7").isEmpty,
       "no SUCCESS watermark may exist after the crash")
-    assert(EtlJob.readDestination(spark, s"$root/dest").count() == windowRows,
+    assert(Destination.read(spark, s"$root/dest").count() == windowRows,
       "the load itself completed before the crash")
 
     // run 2 recovers: resumes from epoch (no SUCCESS row) and replays the window
     val recovered = EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7),
       mid, sleeper = _ => (), mode = mode)
     assert(recovered.isRight)
-    (EtlJob.readDestination(spark, s"$root/dest").count(), windowRows)
+    (Destination.read(spark, s"$root/dest").count(), windowRows)
   }
 
   test("parity mode replays the crashed window as duplicates (at-least-once)") {
@@ -106,7 +106,7 @@ class CrashReplaySpec extends AnyFunSuite {
       }
 
       assert(run(replayEnd).isRight)
-      val loaded = EtlJob.readDestination(spark, dest)
+      val loaded = Destination.read(spark, dest)
       val window = events.where(col("ts") < lit(replayEnd))
       assert(loaded.count() == window.count(), "no duplicates and no lost rows")
       assert(loaded.exceptAll(window).isEmpty && window.exceptAll(loaded).isEmpty)

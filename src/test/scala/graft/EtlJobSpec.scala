@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.etl.{EtlJob, IncrementalExtract, MetaStore}
+import graft.etl.{Destination, EtlJob, IncrementalExtract, MetaStore}
 import graft.model.{ClientBillingConfig, EngineError, EtlJobMessage, EtlStatus}
 
 /** End-to-end semantics of the incremental ETL job (SURVEY §2.9 W1–W7 and
@@ -39,7 +39,7 @@ class EtlJobSpec extends AnyFunSuite {
       EtlJobMessage(7), mid, sleeper = _ => ())
     val expected = events.where(col("ts") < lit(mid)).count()
     assert(res.toOption.get.rowsExtracted == expected)
-    assert(EtlJob.readDestination(spark, s"$root/dest").count() == expected)
+    assert(Destination.read(spark, s"$root/dest").count() == expected)
     // W2: persisted watermark is max(ts) of the batch, not the window end
     val wm = meta.lastSuccessWatermark(7, "proj_7").get
     val maxTs = events.where(col("ts") < lit(mid)).agg(max("ts")).head().getTimestamp(0)
@@ -53,7 +53,7 @@ class EtlJobSpec extends AnyFunSuite {
     EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7), mid, sleeper = _ => ())
     val wm1 = meta.lastSuccessWatermark(7, "proj_7").get
     EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7), end, sleeper = _ => ())
-    val dest = EtlJob.readDestination(spark, s"$root/dest")
+    val dest = Destination.read(spark, s"$root/dest")
     val boundaryCopies = dest.where(col("ts") === lit(wm1)).count()
     assert(boundaryCopies == 2, "the `>=` predicate must replay the watermark row")
     val expected = events.where(col("ts") < lit(end)).count() + 1 // + the duplicate
@@ -83,7 +83,7 @@ class EtlJobSpec extends AnyFunSuite {
     assert(morning > 0, "sanity: the boundary partition must have pre-noon rows")
     EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7), nextDay,
       sleeper = _ => (), mode = EtlJob.Exact)
-    val dest = EtlJob.readDestination(spark, s"$root/dest")
+    val dest = Destination.read(spark, s"$root/dest")
     assert(dest.count() == events.where(col("ts") < lit(nextDay)).count(),
       "the second run must append beside the boundary partition's " +
         "earlier rows, not drop them")
@@ -123,13 +123,13 @@ class EtlJobSpec extends AnyFunSuite {
     EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7), end,
       sleeper = _ => (), mode = EtlJob.Exact)
     val expected = events.where(col("ts") < lit(end)).count()
-    assert(EtlJob.readDestination(spark, s"$root/dest").count() == expected,
+    assert(Destination.read(spark, s"$root/dest").count() == expected,
       "strict-> resume must not replay the watermark row")
     // re-running the committed second window verbatim resumes past it
     // and must load nothing again
     EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7), end,
       sleeper = _ => (), mode = EtlJob.Exact)
-    assert(EtlJob.readDestination(spark, s"$root/dest").count() == expected,
+    assert(Destination.read(spark, s"$root/dest").count() == expected,
       "a re-run of a committed window is idempotent")
   }
 
@@ -154,7 +154,7 @@ class EtlJobSpec extends AnyFunSuite {
       sleeper = _ => (), mode = EtlJob.Exact)
     assert(!EtlJobSpec.armed.get(), "the first write must have failed in a task")
     assert(res.map(_.attempts) == Right(2), s"$res")
-    assert(EtlJob.readDestination(spark, s"$root/dest").count() ==
+    assert(Destination.read(spark, s"$root/dest").count() ==
       events.where(col("ts") < lit(mid)).count())
   }
 
@@ -169,11 +169,11 @@ class EtlJobSpec extends AnyFunSuite {
         sleeper = _ => (), maxRetries = 1, mode = EtlJob.Exact, onBeforeCommit = onBeforeCommit)
     Seq("2024-01-05 12:00:00", "2024-01-10 12:00:00", "2024-01-15 12:00:00")
       .foreach(t => assert(run(t).isRight, t))
-    ops.ScaleOps.compactDatePartitions(spark, dest)
+    Destination.compactDatePartitions(spark, dest)
     val end = "2024-01-20 12:00:00"
     assert(run(end, () => throw new RuntimeException("simulated crash before commit")).isLeft)
     assert(run(end).isRight)
-    val loaded = EtlJob.readDestination(spark, dest)
+    val loaded = Destination.read(spark, dest)
     val window = events.where(col("ts") < lit(utcTs(end)))
     assert(loaded.count() == window.count())
     assert(loaded.exceptAll(window).isEmpty && window.exceptAll(loaded).isEmpty)
@@ -242,7 +242,7 @@ class EtlJobSpec extends AnyFunSuite {
         EtlStatus.Failed))
     assert(byOrg.forall(s => EtlStatus.values.contains(s._2)))
     // the loaded side's data IS there (partial means partial, not rollback)
-    assert(EtlJob.readDestination(spark, s"$root/dest8").count() > 0)
+    assert(Destination.read(spark, s"$root/dest8").count() > 0)
     assert(!graft.util.Fs.exists(spark, s"$root/dest9"))
     // taxonomy endpoints: all-success → 200, all-failed → 500
     assert(EtlJob.partialOutcome(Seq(outcomes.head)) == (200, EtlStatus.Success))

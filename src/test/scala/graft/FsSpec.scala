@@ -101,6 +101,19 @@ class FsSpec extends AnyFunSuite {
       assert(Fs.listParquetFiles(spark, s"$uri/missing").isEmpty)
     } finally spark.conf.unset("fs.noperm.impl")
   }
+
+  test("a control file is read by opening it, with no existence probe first") {
+    val root = tmpDir("fs_spec_vanish_")
+    touch(root, "b1.manifest", 5)
+    spark.conf.set("fs.vanishing.impl", classOf[VanishingFileSystem].getName)
+    try {
+      // a probe-then-open reader would lose the file between the two calls
+      // and throw; the open alone reads it, and a missing file is None
+      assert(Fs.readSmallText(spark, s"vanishing://$root/b1.manifest").map(_.length).contains(5))
+      assert(Files.exists(Paths.get(root, "b1.manifest")), "no probe may have run")
+      assert(Fs.readSmallText(spark, s"vanishing://$root/missing").isEmpty)
+    } finally spark.conf.unset("fs.vanishing.impl")
+  }
 }
 
 /** The local filesystem under the `noperm:` scheme, whose statuses refuse
@@ -121,4 +134,18 @@ final class NoPermissionFileSystem extends RawLocalFileSystem {
         override def getGroup: String = refuse()
       }
     }
+}
+
+/** The local filesystem under the `vanishing:` scheme, whose `exists`
+  * deletes the file it is asked about and then answers true: a file that
+  * another writer deletes right after the probe.
+  */
+final class VanishingFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("vanishing:///")
+  override def getScheme: String = "vanishing"
+
+  override def exists(f: Path): Boolean = {
+    delete(f, false)
+    true
+  }
 }

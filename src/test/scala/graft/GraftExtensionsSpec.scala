@@ -96,7 +96,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val dest = SparkTestBase.tmpDir("graft_ext_hist_")
       val batch = s2.range(5).selectExpr("id AS v")
       batch.coalesce(1).write.parquet(s"$dest/stage/b1")
-      val pub = ops.ScaleOps.publishStaged(s2, s"$dest/dest", s"$dest/stage/b1", "b1", 5L)
+      val pub = etl.Destination.publishStaged(s2, s"$dest/dest", s"$dest/stage/b1", "b1", 5L)
       assert(pub.isRight, s"fixture publish failed: $pub")
       val hist = s2.sql(s"GRAFT HISTORY '$dest/dest'").collect()
       assert(hist.length == 1 && hist(0).getString(0) == "b1" &&

@@ -376,8 +376,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("destination partitions are replaced one way") {
-    // EtlJob.replacePartitions is the only way a destination partition is
-    // replaced (no dynamic overwrite), and the ETL job checkpoints nothing
+    // Destination.replacePartitions is the only way a destination partition
+    // is replaced (no dynamic overwrite), and the ETL job checkpoints nothing
     val overwrite = mainSourcesContaining("partitionOverwriteMode")
     assert(overwrite.isEmpty, s"dynamic partition overwrite in src/main: $overwrite")
     val etlCheckpoints = mainSourcesContaining("localCheckpoint")
@@ -388,14 +388,60 @@ class PlanSpec extends AnyFunSuite {
   test("ETL runs only append; maintenance writers alone replace partitions") {
     // Exact mode appends under a window-scoped name and rolls back by name,
     // so no run re-reads committed rows into its write, and
-    // replacePartitions serves compaction, tombstone deletes and backfill
+    // Destination.replacePartitions serves compaction and tombstone deletes
+    // (both in Destination) and backfill (a ScaleOps query)
     val callers = mainSourcesContaining("replacePartitions(").filter { f =>
       val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))
       src.split('\n').exists(l => l.contains("replacePartitions(") && !l.contains("def replacePartitions("))
     }
-    assert(callers == Set("src/main/scala/graft/ops/ScaleOps.scala"), callers)
+    assert(callers == Set("src/main/scala/graft/etl/Destination.scala",
+      "src/main/scala/graft/ops/ScaleOps.scala"), callers)
     val unions = mainSourcesContaining("unionByName").filter(_.startsWith("src/main/scala/graft/etl/"))
     assert(unions.isEmpty, s"unionByName in the ETL job: $unions")
+  }
+
+  test("only Destination spells the destination layout") {
+    // partition directories, hidden stages and the manifest ledger are
+    // named in one module, so a change of layout changes one file
+    Seq("_manifests", "_staging_", "export_date=").foreach { needle =>
+      assert(mainSourcesContaining(needle) == Set("src/main/scala/graft/etl/Destination.scala"),
+        needle)
+    }
+  }
+
+  test("every fully qualified Scaladoc link in src/main resolves") {
+    import scala.jdk.CollectionConverters._
+    // `sbt doc` is not part of the test run, so a link left stale by a move
+    // or rename shows only here: the named type must be defined in its
+    // package's directory, and each named member in that type's file
+    val root = java.nio.file.Paths.get("src/main/scala")
+    def read(p: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(p))
+    def sources(dir: java.nio.file.Path, deep: Boolean): Seq[java.nio.file.Path] =
+      if (!java.nio.file.Files.isDirectory(dir)) Nil
+      else {
+        val walk = if (deep) java.nio.file.Files.walk(dir) else java.nio.file.Files.list(dir)
+        try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally walk.close()
+      }
+    def defines(src: String, name: String) =
+      ("""\b(def|val|var|class|object|trait|type)\s+""" + java.util.regex.Pattern.quote(name) +
+        """(?![\w$])""").r.findFirstIn(src).isDefined
+    val links = sources(root, deep = true).flatMap { p =>
+      """\[\[(graft\.[\w.]+)""".r.findAllMatchIn(read(p))
+        .map(m => s"$p: ${m.group(1)}" -> m.group(1))
+    }
+    assert(links.nonEmpty)
+    val broken = links.filterNot { case (_, link) =>
+      val (pkg, rest) = link.split('.').toSeq.span(_.head.isLower)
+      rest match {
+        case tpe +: members =>
+          sources(root.resolve(pkg.mkString("/")), deep = false)
+            .filter(f => defines(read(f), tpe))
+            .exists(f => members.forall(m => defines(read(f), m)))
+        case _ => false
+      }
+    }.map(_._1)
+    assert(broken.isEmpty, s"stale Scaladoc links:\n${broken.mkString("\n")}")
   }
 
   test("the control plane runs on the driver: no Spark JDBC dialect, write or file-name read") {

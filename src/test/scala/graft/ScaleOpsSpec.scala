@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.Destination
 import graft.ops.ScaleOps
 
 /** Scale-path evidence: salted skew joins return exactly the unsalted
@@ -55,11 +56,11 @@ class ScaleOpsSpec extends AnyFunSuite {
       EtlJob.run(spark, meta, events, "ts", s"$root/dest", EtlJobMessage(7),
         utcTs(t), sleeper = _ => ())
     }
-    val beforeRows = EtlJob.readDestination(spark, s"$root/dest")
+    val beforeRows = Destination.read(spark, s"$root/dest")
       .groupBy("event_id").count().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (before, after) = graft.ops.ScaleOps.compactDatePartitions(spark, s"$root/dest")
+    val (before, after) = Destination.compactDatePartitions(spark, s"$root/dest")
     assert(after < before, s"compaction must reduce file count ($before -> $after)")
-    val afterRows = EtlJob.readDestination(spark, s"$root/dest")
+    val afterRows = Destination.read(spark, s"$root/dest")
       .groupBy("event_id").count().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(afterRows == beforeRows, "compaction must not change the row multiset")
   }
@@ -207,8 +208,8 @@ class ScaleOpsSpec extends AnyFunSuite {
         .map(f => f.getName -> f.lastModified()).toMap
     }
     val before = Map("2024-01-01" -> files("2024-01-01"), "2024-01-03" -> files("2024-01-03"))
-    val affected = ScaleOps.deleteFromDatePartitions(
-      spark, dest, "export_date", Seq(666L).toDF("user_id"), "user_id")
+    val affected = Destination.deleteFromDatePartitions(
+      spark, dest, Seq(666L).toDF("user_id"), "user_id")
     assert(affected == Seq("2024-01-02"), s"only day 2 holds a hit, got $affected")
     // untouched partitions keep their exact files — the O(affected) claim
     assert(files("2024-01-01") == before("2024-01-01"))
@@ -223,8 +224,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     import sp.implicits._
     val dest = threeDayDest("tomb_emptied_")
     val day1 = listing(s"$dest/export_date=2024-01-01")
-    val affected = ScaleOps.deleteFromDatePartitions(
-      spark, dest, "export_date", Seq(666L, 103L).toDF("user_id"), "user_id")
+    val affected = Destination.deleteFromDatePartitions(
+      spark, dest, Seq(666L, 103L).toDF("user_id"), "user_id")
     assert(affected == Seq("2024-01-02", "2024-01-03"))
     assert(!new java.io.File(s"$dest/export_date=2024-01-03").exists(),
       "the emptied partition must be gone")
@@ -241,8 +242,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     val before = listing(dest)
     val boom = udf { (id: Long) => require(id < 0, "task failure"); true }
     intercept[Exception] {
-      graft.etl.EtlJob.replacePartitions(spark,
-        spark.read.parquet(dest).where(boom(col("event_id"))), "export_date", dest)
+      Destination.replacePartitions(spark,
+        spark.read.parquet(dest).where(boom(col("event_id"))), dest)
     }
     assert(listing(dest) == before, "no stage directory may be left behind")
   }
@@ -278,7 +279,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val root = tmpDir("wap_spec_")
     val batch = (1L to 100L).map(i => (i, i * 3)).toDF("id", "v")
     // short write vs an inflated claim: the audit must reject
-    val r = ScaleOps.writeAuditPublish(spark, s"$root/dest", s"$root/staging",
+    val r = Destination.writeAuditPublish(spark, s"$root/dest", s"$root/staging",
       "b1", batch, claimedRows = 120)
     assert(r.isLeft, s"inflated claim must be rejected: $r")
     // readers never saw it: dest does not exist / has no files
@@ -286,22 +287,22 @@ class ScaleOpsSpec extends AnyFunSuite {
       "rejected batch must be invisible to readers")
     // the staged files survived quarantine — the retry is re-audit, not
     // re-extract: republish the SAME staged dir with the corrected claim
-    val retry = ScaleOps.publishStaged(spark, s"$root/dest", s"$root/staging/b1",
+    val retry = Destination.publishStaged(spark, s"$root/dest", s"$root/staging/b1",
       "b1", claimedRows = 100)
     assert(retry == Right(100L), s"corrected claim must publish: $retry")
     assert(spark.read.parquet(s"$root/dest").count() == 100)
     // and the publish is append-only next to an existing batch
-    val r2 = ScaleOps.writeAuditPublish(spark, s"$root/dest", s"$root/staging",
+    val r2 = Destination.writeAuditPublish(spark, s"$root/dest", s"$root/staging",
       "b2", batch.where($"id" <= 10), claimedRows = 10)
     assert(r2 == Right(10L))
     assert(spark.read.parquet(s"$root/dest").count() == 110)
     // crash between publish and ack: the retry finds an EMPTY staging dir
     // (files already moved) — it must ack idempotently from the committed
     // manifest, never overwrite it with an empty one
-    val replay = ScaleOps.publishStaged(spark, s"$root/dest", s"$root/staging/b1",
+    val replay = Destination.publishStaged(spark, s"$root/dest", s"$root/staging/b1",
       "b1", claimedRows = 100)
     assert(replay == Right(100L), s"post-crash retry must be idempotent: $replay")
-    assert(ScaleOps.readAsOf(spark, s"$root/dest", Seq("b1")).count() == 100,
+    assert(Destination.readAsOf(spark, s"$root/dest", Seq("b1")).count() == 100,
       "the committed snapshot must survive the replay")
     assert(spark.read.parquet(s"$root/dest").count() == 110)
   }
@@ -312,11 +313,11 @@ class ScaleOpsSpec extends AnyFunSuite {
     val root = graft.util.TempDirs.create("graft_mcompact_spec_")
     Seq(0L, 1L, 2L).foreach { i =>
       val b = ev.where(col("event_id") % 3 === i)
-      val r = ScaleOps.writeAuditPublish(spark, s"$root/dest", s"$root/staging",
+      val r = Destination.writeAuditPublish(spark, s"$root/dest", s"$root/staging",
         s"slice_$i", b, b.count())
       assert(r.isRight, s"publish $i: $r")
     }
-    def readback = ScaleOps.readBranch(spark, s"$root/dest", None)
+    def readback = Destination.readBranch(spark, s"$root/dest", None)
       .agg(count(lit(1)), sum(col("cents"))).head()
     val before = readback
     // simulate the racing reader's worst view: consolidated manifest
@@ -331,7 +332,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(readback == before, "double-listed files must scan once (dedup)")
     // real compaction: ledger shrinks, rows unchanged
     new java.io.File(s"$mDir/zz_preview.manifest").delete()
-    val (b0, a0) = ScaleOps.compactManifests(spark, s"$root/dest")
+    val (b0, a0) = Destination.compactManifests(spark, s"$root/dest")
     assert(b0 == 3 && a0 == 1, s"ledger must compact 3 -> 1, got $b0 -> $a0")
     assert(readback == before, "compaction must be invisible to readers")
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.etl.{EtlJob, MetaStore}
+import graft.etl.{Destination, EtlJob, MetaStore}
 import graft.model.{ClientBillingConfig, EtlJobMessage}
 
 /** SURVEY §5 item 3 — property-based batch semantics over randomly-timed
@@ -67,7 +67,7 @@ class WatermarkPropertySpec extends AnyFunSuite {
       }
       val lastRun = new Timestamp(base + runMillis.last)
       val expected = src.where(col("ts") < lit(lastRun)).count() + expectedDupes
-      val dest = EtlJob.readDestination(spark, s"$root/dest").count()
+      val dest = Destination.read(spark, s"$root/dest").count()
       val ok = dest == expected && monotone
       if (!ok) println(s"FAIL: dest=$dest expected=$expected dupes=$expectedDupes monotone=$monotone runs=$runMillis")
       ok
